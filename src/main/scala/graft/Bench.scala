@@ -550,17 +550,10 @@ object Bench {
     // emit unparseable "0,123" numbers (r19 ADVICE)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session(s"local[$cpus]", cpus)
     // Warm EVERY headline query once at the smallest scale before measuring:
-    // profiled cold-vs-warm (graft.Profile, sf0.1) shows 5-7 s of one-time
+    // profiled cold-vs-warm (`graft.Dev time`, sf0.1) shows 5-7 s of one-time
     // codegen compile + classloading per distinct query shape vs 0.8-1.8 s
     // steady-state. A cluster run amortizes that one-time cost over hours,
     // so the number that predicts 100 TB throughput is the warm pass. The
@@ -574,15 +567,16 @@ object Bench {
     // publishes an inverted 1×-vs-x10 pair (observed: a cold 1× row
     // slower than its warm x10 row)
     // Force FULL output materialization through the noop sink. r14 audit
-    // (CountPlanProbe): under `.count()` Catalyst's column pruning +
-    // unique-key outer-join elimination gutted several rows to a bare
-    // parquet scan — dedup_substrings' count plan was literally
-    // `count(1) over Relation` (probed 0.4 s counted vs 40+ s
+    // of every benched row's `groupBy().count()` optimized plan: Catalyst's
+    // column pruning + unique-key outer-join elimination gutted several
+    // rows to a bare parquet scan — dedup_substrings' count plan was
+    // literally `count(1) over Relation` (probed 0.4 s counted vs 40+ s
     // materialized), token_count and curate_filters_map lost all their
     // per-doc computation, and shuffle_export shuffled only the 32-byte
     // key. The noop sink executes the exact output schema every engine
     // consumer would receive and discards it executor-side — no driver
-    // collect, no files.
+    // collect, no files. Any new row must be measured this way, never by
+    // a count.
     def force(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
@@ -634,15 +628,19 @@ object Bench {
       repTimes(row) = ts
       row -> ts.min
     }
-    def timesOfN(name: String, dir: String): Seq[Double] = {
-      val reps = if (wideNoise(name)) 5 else 3
-      (0 until reps).map { _ =>
+    // The one measured-rep loop. A FAILED rep records the 1e9 s sentinel,
+    // never its wall time: publishing a crash's time-to-exception as a
+    // timing would read as a (fast) valid row, and min-of-N would even
+    // prefer it. A row whose every rep fails publishes 1e9.
+    def rep(tag: String, n: Int)(once: => Unit): Seq[Double] =
+      (0 until n).map { _ =>
         val t0 = System.nanoTime()
-        try { force(name, dir) }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
+        try { once; (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $tag: $e"); 1e9 }
       }
-    }
+    def timesOfN(name: String, dir: String): Seq[Double] =
+      rep(name, if (wideNoise(name)) 5 else 3)(force(name, dir))
     val results = headline.map(name => rec(name, timesOfN(name, sfDir)))
     // Degenerate-skew rows: same queries, mass-duplicated corpus. Staging
     // time is excluded (it is test-fixture construction, not query work);
@@ -714,9 +712,6 @@ object Bench {
     // the contrast row, min-of-2 like the uncapped semantic-skew row);
     // with hotKeyThreshold = 100k the heavy-hitter pre-pass salts it
     // into ~480 sub-partitions and the tail parallelizes.
-    // A FAILED rep records a sentinel (1e9 s), never its wall time: this
-    // pair is a head-to-head comparison, and publishing a crash's
-    // elapsed time as the row would silently invert the conclusion.
     val massDupDir = stageMassDup(spark, sfDir)
     def substrOnce(dir: String, thr: Long): Unit =
       graft.pipeline.Dedup.dedupSubstrings(
@@ -724,12 +719,7 @@ object Bench {
         col("doc_id"), col("text"), k = 8, hotKeyThreshold = thr)
         .write.format("noop").mode("overwrite").save()
     def substrTimes(dir: String, thr: Long, reps: Int): Seq[Double] =
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { substrOnce(dir, thr); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] massdup: $e"); 1e9 }
-      }
+      rep("massdup", reps)(substrOnce(dir, thr))
     try substrOnce(massDupDir, 100000L) // warm the salted shape at scale
     catch { case e: Throwable => System.err.println(s"[bench] massdup warm: $e") }
     val massDupResults = Seq(
@@ -753,12 +743,7 @@ object Bench {
         threshold = 0.3, nCentroids = nC, lloydIters = 2)
         .write.format("noop").mode("overwrite").save()
     def semDedupTimes(dir: String, nC: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try semDedupOnce(dir, nC)
-        catch { case e: Throwable => System.err.println(s"[bench] semdedup: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
+      rep("semdedup", 3)(semDedupOnce(dir, nC))
     semDedupOnce(warmDir, 8); semDedupOnce(x10Dir, 80) // warm both shapes
     val semResults = Seq(
       rec("dedup_semantic", semDedupTimes(sfDir, 8)),
@@ -771,12 +756,7 @@ object Bench {
         threshold = 0.3, dropFraction = 0.3, nCentroids = nC, lloydIters = 2)
         .write.format("noop").mode("overwrite").save()
     def d4Times(dir: String, nC: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try d4Once(dir, nC)
-        catch { case e: Throwable => System.err.println(s"[bench] d4: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
+      rep("d4", 3)(d4Once(dir, nC))
     d4Once(warmDir, 8); d4Once(x10Dir, 80)
     val d4Results = Seq(
       rec("d4_e2e", d4Times(sfDir, 8)),
@@ -828,20 +808,13 @@ object Bench {
         maxClusterSize = cap)
         .write.format("noop").mode("overwrite").save()
     def semDedupCappedTimes(dir: String, nC: Int, cap: Int): Seq[Double] =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        try semDedupCappedOnce(dir, nC, cap)
-        catch { case e: Throwable => System.err.println(s"[bench] semdedup cap: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
+      rep("semdedup cap", 3)(semDedupCappedOnce(dir, nC, cap))
     // the default (salted-exact) and capped rows get the usual warm +
     // min-of-3; the unblocked row is the deliberately-adversarial
     // contrast (r16 measured 42.3 s — ~100M cosine evaluations through
     // ONE task) and gets ONE rep with no separate warm: its code shape
     // is warmed by the other rows, and burning 80+ s on more reps of a
-    // row whose point is an order-of-magnitude gap buys nothing. A
-    // failed rep records the 1e9 sentinel (head-to-head contrast rows
-    // must never publish a crash's wall time as a measurement).
+    // row whose point is an order-of-magnitude gap buys nothing.
     def semDedupUnblockedOnce(dir: String, nC: Int): Unit =
       graft.pipeline.Similarity.semDedup(
         spark.read.parquet(s"$dir/embeddings.parquet"),
@@ -851,13 +824,8 @@ object Bench {
     semDedupOnce(embSkewDir, 80); semDedupCappedOnce(embSkewDir, 80, 64)
     val semSkewResults = Seq(
       rec("skew_dedup_semantic", semDedupTimes(embSkewDir, 80)),
-      rec("skew_dedup_semantic_unblocked", Seq({
-        val t0 = System.nanoTime()
-        try { semDedupUnblockedOnce(embSkewDir, 80)
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] semskew unblocked: $e"); 1e9 }
-      })),
+      rec("skew_dedup_semantic_unblocked",
+        rep("semskew unblocked", 1)(semDedupUnblockedOnce(embSkewDir, 80))),
       rec("skew_dedup_semantic_capped",
         semDedupCappedTimes(embSkewDir, 80, 64)))
     // Production-parameter IVFADC row (r16, the plan-literal-purge
@@ -884,12 +852,7 @@ object Bench {
     try ivfPqProdOnce(x10Dir, 0.25) // warm; guarded like every other warm pass
     catch { case e: Throwable => System.err.println(s"[bench] ivfpq prod warm: $e") }
     def ivfPqProdTimes(tf: Double, reps: Int, iters: Int = 1): Seq[Double] =
-      (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { ivfPqProdOnce(x10Dir, tf, iters); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ivfpq prod: $e"); 1e9 }
-      }
+      rep("ivfpq prod", reps)(ivfPqProdOnce(x10Dir, tf, iters))
     // r18 (#3): the depth contrast where Lloyd dominates. At iters=1 the
     // md5-fraction filter pass costs roughly what one Lloyd round saves
     // (r17 measured _sampled 4.90 vs full 4.39 s), so the trainFraction
@@ -992,36 +955,28 @@ object Bench {
     // (the first cut of this pair measured 8.2 vs 8.6 s: pure parallelism
     // skew, not data cost). Greedy decode is prefix-stable (TinyLlmSpec),
     // so this measures the SAME model the oracle replays, just deeper.
-    def llmDeepSeconds(dir: String): Double = {
+    def llmDeepOnce(dir: String): Unit = {
       import spark.implicits._
-      val t0 = System.nanoTime()
-      try {
-        // coalesce: a NULL text row must not surface as a null Dataset
-        // element (the model guards empty, not null-from-concat)
-        val users = spark.read.parquet(s"$dir/documents.parquet")
-          .select(concat(lit("Input data (or flow file content):\n"),
-            substring(coalesce(col("text"), lit("")), 1,
-              graft.ops.TinyLlm.ContentWindow),
-            lit("\n\nDescribe.")).as("u")).as[String]
-          .repartition(32)
-        graft.ops.Exec.llmInference(users,
-            u => graft.ops.TinyLlm.render(
-              graft.ops.TinyLlm.generate(u, steps = 512)._1))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        // the 1e9 sentinel, same as substrTimes/semskew (r19 ADVICE): a
-        // failed rep must be visible in BENCH_LATEST, not pass off its
-        // partial wall time as a valid timing
-        case e: Throwable =>
-          System.err.println(s"[bench] llm deep: $e"); 1e9
-      }
+      // coalesce: a NULL text row must not surface as a null Dataset
+      // element (the model guards empty, not null-from-concat)
+      val users = spark.read.parquet(s"$dir/documents.parquet")
+        .select(concat(lit("Input data (or flow file content):\n"),
+          substring(coalesce(col("text"), lit("")), 1,
+            graft.ops.TinyLlm.ContentWindow),
+          lit("\n\nDescribe.")).as("u")).as[String]
+        .repartition(32)
+      graft.ops.Exec.llmInference(users,
+          u => graft.ops.TinyLlm.render(
+            graft.ops.TinyLlm.generate(u, steps = 512)._1))
+        .write.format("noop").mode("overwrite").save()
     }
-    llmDeepSeconds(warmDir) // warm the shape (failures self-log + sentinel)
+    def llmDeepTimes(dir: String): Seq[Double] =
+      rep("llm deep", 3)(llmDeepOnce(dir))
+    try llmDeepOnce(warmDir) // warm the shape
+    catch { case e: Throwable => System.err.println(s"[bench] llm deep warm: $e") }
     val llmDeepResults = Seq(
-      rec("llm_generate_deep", (0 until 3).map(_ => llmDeepSeconds(sfDir))),
-      rec("x10_llm_generate_deep",
-        (0 until 3).map(_ => llmDeepSeconds(x10Dir))))
+      rec("llm_generate_deep", llmDeepTimes(sfDir)),
+      rec("x10_llm_generate_deep", llmDeepTimes(x10Dir)))
     // throughput rows live in their own section with an explicit unit —
     // every row in `queries` is seconds, so round-over-round tooling can
     // no longer mix 1e6-lines/s values into a seconds comparison.

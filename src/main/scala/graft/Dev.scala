@@ -1,0 +1,185 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/**
+ * Dev entry point for attributing a registered query's cost:
+ *
+ *   runMain graft.Dev time <sfDir> <reps> <query...>
+ *   runMain graft.Dev plan <sfDir> <outDir> <query...>
+ *
+ * `time` runs each query through the noop sink (full output
+ * materialization, Bench's discipline) and prints per-rep wall time, the
+ * min over reps, and the rep's per-segment breakdown. Not a published
+ * number: no staged corpora, no warm-up beyond rep 0.
+ *
+ * `plan` executes each query's own frame (so AQE has settled) and writes
+ * `<outDir>/<query>.txt`: the formatted final plan, then one
+ * `== staged segment <n> ==` section per executed staging barrier, whose
+ * plan the barrier otherwise truncates out of the final one. It prints the
+ * exchange and codegen-operator counts over the whole file.
+ *
+ * A *segment* is the work a query does up to one executed
+ * [[graft.pipeline.Staging]] barrier — a `localCheckpoint`/`checkpoint`
+ * action — with a final segment from the last barrier to the end of the
+ * run. Both come from listeners on the real query, so the breakdown never
+ * drifts from the pipeline code. Under `spark.graft.staging=none` no
+ * barrier executes and a run is a single segment.
+ *
+ * SPARK_GRAFT_CPUS sets the core count (default 32, like Bench).
+ */
+object Dev {
+  /** One segment: its wall time, the jobs it ran and, unless it is the
+    * final segment, the executed barrier that closed it. */
+  final case class Segment(label: String, wallMs: Long, jobs: Int,
+                           barrier: Option[QueryExecution])
+
+  /** One run of one query: `jobs` is the listener's total for the run. */
+  final case class Run(df: DataFrame, wallS: Double, jobs: Int,
+                       segments: Seq[Segment])
+
+  private val BarrierActions = Set("localCheckpoint", "checkpoint")
+
+  /** Counts jobs and closes a segment at every executed barrier. Both
+    * interfaces are called on the listener bus's shared queue, in event
+    * order, so a barrier's SQL execution start and its jobs are seen
+    * before its success. */
+  private final class Segments(startMs: Long)
+      extends SparkListener with QueryExecutionListener {
+    private var total = 0
+    private var jobs = 0
+    private var lastEndMs = startMs
+    private var execStartMs = startMs
+    private var callSite = ""
+    private val closed = ArrayBuffer[Segment]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      total += 1; jobs += 1
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart
+          if s.rootExecutionId.forall(_ == s.executionId) => synchronized {
+        execStartMs = s.time; callSite = s.details
+      }
+      case _ =>
+    }
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+                           durationNs: Long): Unit =
+      if (BarrierActions(funcName)) synchronized {
+        val endMs = execStartMs + durationNs / 1000000
+        closed += Segment(label(callSite), endMs - lastEndMs, jobs, Some(qe))
+        lastEndMs = endMs; jobs = 0
+      }
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+                           exception: Exception): Unit = ()
+
+    /** The closed segments plus the final one, ending at `endMs`. */
+    def result(endMs: Long): (Int, Seq[Segment]) = synchronized {
+      (total, closed.toSeq :+ Segment("(final)", endMs - lastEndMs, jobs, None))
+    }
+  }
+
+  /** The first frame of a call site (Spark's long form, one frame per
+    * line) outside Spark, Scala and the Staging helper itself — the
+    * pipeline line that staged the frame — with the compiler's `$`
+    * mangling dropped: `graft.pipeline.Classifier.logisticModel(...)`. */
+  private def label(callSite: String): String =
+    callSite.linesIterator.map(_.trim).find(f =>
+      !f.startsWith("org.apache.spark.") && !f.startsWith("scala.") &&
+        !f.startsWith("graft.pipeline.Staging"))
+      .map(_.replaceAll("\\$anonfun\\$|\\$adapted|\\$\\d+|\\$", ""))
+      .getOrElse("(unknown)")
+
+  /** Build a frame with `build`, finish it with `act`, and return the run
+    * split into segments. */
+  def run(spark: SparkSession)(build: => DataFrame)(
+      act: DataFrame => Unit): Run = {
+    val t0 = System.nanoTime()
+    val segs = new Segments(System.currentTimeMillis())
+    spark.sparkContext.addSparkListener(segs)
+    spark.listenerManager.register(segs)
+    try {
+      val df = build
+      act(df)
+      val endMs = System.currentTimeMillis()
+      val wallS = (System.nanoTime() - t0) / 1e9
+      GraftListenerBus.drain(spark.sparkContext)
+      val (jobs, segments) = segs.result(endMs)
+      Run(df, wallS, jobs, segments)
+    } finally {
+      spark.listenerManager.unregister(segs)
+      spark.sparkContext.removeSparkListener(segs)
+    }
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  def time(spark: SparkSession, sfDir: String, reps: Int,
+           names: Seq[String]): Seq[(String, Seq[Run])] =
+    names.map { name =>
+      val runs = (0 until reps).map { i =>
+        val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(noop)
+        println(f"[dev time] $name rep=$i wall=${r.wallS}%.3f s jobs=${r.jobs}")
+        r.segments.zipWithIndex.foreach { case (s, j) =>
+          println(f"[dev time]   seg ${j + 1}%2d ${s.wallMs / 1e3}%8.3f s " +
+            f"jobs=${s.jobs}%3d  ${s.label}")
+        }
+        r
+      }
+      val ts = runs.map(_.wallS)
+      println(f"[dev time] $name min=${ts.min}%.3f " +
+        s"reps=${ts.map(t => f"$t%.3f").mkString(",")}")
+      name -> runs
+    }
+
+  def plan(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    def formatted(qe: QueryExecution): String =
+      qe.explainString(ExplainMode.fromString("formatted"))
+    names.foreach { name =>
+      // execute THIS frame: a write would plan a separate command and
+      // leave the frame's own AQE plan non-final
+      val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(
+        _.queryExecution.toRdd.foreach(_ => ()))
+      val barriers = r.segments.flatMap(_.barrier)
+      val plan = formatted(r.df.queryExecution) +
+        barriers.zipWithIndex.map { case (qe, i) =>
+          s"== staged segment ${i + 1} ==\n" + formatted(qe)
+        }.mkString("\n", "\n", "")
+      Files.write(Paths.get(s"$outDir/$name.txt"),
+        (s"== $name @ $sfDir ==\n" + plan).getBytes("UTF-8"))
+      val lines = plan.linesIterator.toSeq
+      val exchanges = lines.count(l =>
+        l.contains(") Exchange") || l.contains("Exchange ("))
+      // formatted mode tags each codegen'd operator with [codegen id : n]
+      val codegenOps = lines.count(_.contains("codegen id"))
+      println(s"[dev plan] $name exchanges=$exchanges " +
+        s"codegen-operators=$codegenOps barriers=${barriers.size} " +
+        s"-> $outDir/$name.txt")
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: Dev time <sfDir> <reps> <query...> | " +
+      "Dev plan <sfDir> <outDir> <query...>"
+    require(args.length >= 4 && Set("time", "plan")(args(0)), usage)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session(s"local[$cpus]", cpus)
+    try args(0) match {
+      case "time" => time(spark, args(1), args(2).toInt, args.drop(3).toSeq)
+      case "plan" => plan(spark, args(1), args(2), args.drop(3).toSeq)
+    } finally spark.stop()
+  }
+}

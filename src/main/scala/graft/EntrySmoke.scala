@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's smoke check: `SparkEntry.entry` on sf0.001 must
   * return rows. Usage: `sbt "runMain graft.EntrySmoke"`. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-entry-smoke")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"), 8)
     try {
       val n = SparkEntry.entry(spark).count()
       println(s"ENTRY_ROWS=$n")

@@ -179,23 +179,28 @@ object Processors {
       map_filter(col(FlowFrame.Attributes), (k, _) => k =!= ElScratchAttr))
 
   /** Rebuild the FlowFrame shape from a splitter's fragment output
-    * (SplitText.h:152-156 fragment attr convention). Fragments carry a
-    * FORK lineage event from their parent (Provenance.h FORK) and a
-    * deterministic child uuid (see [[Lineage]]). */
+    * (SplitText.h:152-156 fragment attr convention). Every fragment starts
+    * from its parent's attributes — the splitter ran with
+    * `carry = Seq(FlowFrame.Attributes)` — like the reference's
+    * `ProcessSession::create(parent)`, and the fragment attributes (plus
+    * `extraAttrs`, attribute name -> fragment column) override them.
+    * Fragments carry a FORK lineage event from their parent
+    * (Provenance.h FORK) and a deterministic child uuid (see [[Lineage]]). */
   private def fragmentFrame(frags: DataFrame, idxCol: String,
                             fragCol: String, countCol: Option[String],
-                            relationship: String = "splits"): DataFrame = {
+                            relationship: String = "splits",
+                            extraAttrs: Seq[(String, String)] = Nil): DataFrame = {
     val parent = col("`fragment.identifier`").cast("string")
-    val attrPairs = Seq(
-      lit(FlowFrame.FragmentAttrs.Identifier), parent,
-      lit(FlowFrame.FragmentAttrs.Index), col(idxCol).cast("string"),
-      lit(Lineage.EventAttr), lit(Lineage.Fork),
-      lit(Lineage.ParentsAttr), parent) ++
-      countCol.toSeq.flatMap(c =>
-        Seq(lit(FlowFrame.FragmentAttrs.Count), col(c).cast("string")))
-    frags.select(
+    val own = Seq(
+      FlowFrame.FragmentAttrs.Identifier -> parent,
+      FlowFrame.FragmentAttrs.Index -> col(idxCol),
+      Lineage.EventAttr -> lit(Lineage.Fork),
+      Lineage.ParentsAttr -> parent) ++
+      countCol.map(c => FlowFrame.FragmentAttrs.Count -> col(c)) ++
+      extraAttrs.map { case (attr, c) => attr -> col(c) }
+    FlowFrame.withAttrs(frags, own).select(
       Lineage.fragmentUuid(parent, col(idxCol)).as(FlowFrame.Uuid),
-      map(attrPairs: _*).as(FlowFrame.Attributes),
+      col(FlowFrame.Attributes),
       col(fragCol).as(FlowFrame.Content),
       current_timestamp().as(FlowFrame.EntryDate),
       lit(relationship).as(FlowFrame.Relationship))
@@ -757,25 +762,13 @@ object Processors {
           headerLineCount = prop("Header Line Count", "0").toInt,
           headerMarker = props.get("Header Line Marker Characters"),
           trimTrailingNewlines =
-            Units.parseBool(prop("Remove Trailing Newlines", "true")))
-        val splits = frags.filter(col("relationship") === "splits").select(
-          Lineage.fragmentUuid(col("`fragment.identifier`"),
-            col("fragmentIndex")).as(FlowFrame.Uuid),
-          map(
-            lit(FlowFrame.FragmentAttrs.Identifier),
-            col("`fragment.identifier`").cast("string"),
-            lit(FlowFrame.FragmentAttrs.Index),
-            col("fragmentIndex").cast("string"),
-            lit(FlowFrame.FragmentAttrs.Count),
-            col("fragmentCount").cast("string"),
-            lit("text.line.count"), col("textLineCount").cast("string"),
-            lit("fragment.size"), col("fragmentSize").cast("string"),
-            lit(Lineage.EventAttr), lit(Lineage.Fork),
-            lit(Lineage.ParentsAttr),
-            col("`fragment.identifier`").cast("string")).as(FlowFrame.Attributes),
-          col("fragment").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
-          col("relationship").as(FlowFrame.Relationship))
+            Units.parseBool(prop("Remove Trailing Newlines", "true")),
+          carry = Seq(FlowFrame.Attributes))
+        val splits = fragmentFrame(
+          frags.filter(col("relationship") === "splits"),
+          "fragmentIndex", "fragment", countCol = Some("fragmentCount"),
+          extraAttrs = Seq("text.line.count" -> "textLineCount",
+            "fragment.size" -> "fragmentSize"))
         // failure/original = the ORIGINAL FlowFile routed whole (uuid,
         // attributes and content untouched — the reference transfers the
         // input onward, it does not fabricate a fragment; zero-fragment
@@ -814,7 +807,8 @@ object Processors {
               rawSeq.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
           }
         val frags = SplitMerge.splitContentBinary(in, col(FlowFrame.Uuid),
-          content.cast("binary"), delimBytes, keep, loc)
+          content.cast("binary"), delimBytes, keep, loc,
+          carry = Seq(FlowFrame.Attributes))
         fragmentFrame(frags, "fragmentIndex", "fragment",
           countCol = Some("fragmentCount"))
 
@@ -825,7 +819,8 @@ object Processors {
         // in chars and corrupt non-UTF8 bytes) must not happen here
         val frags = SplitMerge.segmentContent(in, col(FlowFrame.Uuid),
           content.cast("binary"),
-          Units.parseBytes(prop("Segment Size", "1 kB")).toInt)
+          Units.parseBytes(prop("Segment Size", "1 kB")).toInt,
+          carry = Seq(FlowFrame.Attributes))
         // the reference routes segments to "segments", not "splits"
         // (SegmentContent.h:50-53)
         fragmentFrame(frags, "segmentIndex", "segment",

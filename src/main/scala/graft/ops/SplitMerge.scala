@@ -200,7 +200,8 @@ object SplitMerge {
   def splitTextFull(df: DataFrame, idCol: Column, contentCol: Column,
                     lineSplitCount: Int, maxFragmentSize: Option[Long] = None,
                     headerLineCount: Int = 0, headerMarker: Option[String] = None,
-                    trimTrailingNewlines: Boolean = true): DataFrame = {
+                    trimTrailingNewlines: Boolean = true,
+                    carry: Seq[String] = Nil): DataFrame = {
     // property validation fails ONCE on the driver (the reference rejects
     // the property set at onSchedule) — never per row inside the UDF
     require(lineSplitCount > 0 || maxFragmentSize.isDefined,
@@ -221,16 +222,22 @@ object SplitMerge {
             frags.size.toLong))
       }
     }
-    df.select(idCol.as(FragmentAttrs.Identifier),
-        explode(splitUdf(contentCol)).as("r"))
-      .select(col(s"`${FragmentAttrs.Identifier}`"),
+    df.select(carried(carry) ++ Seq(idCol.as(FragmentAttrs.Identifier),
+        explode(splitUdf(contentCol)).as("r")): _*)
+      .select(carried(carry) ++ Seq(col(s"`${FragmentAttrs.Identifier}`"),
         col("r._1").as("relationship"),
         col("r._2").as("fragmentIndex"),
         col("r._3").as("fragment"),
         col("r._4").as("textLineCount"),
         col("r._5").as("fragmentCount"),
-        length(col("r._3")).cast("long").as("fragmentSize"))
+        length(col("r._3")).cast("long").as("fragmentSize")): _*)
   }
+
+  /** The `carry` columns a splitter copies from each input row onto every
+    * fragment row it emits (the flow runner carries the parent's
+    * attributes this way: a narrow projection, no join back). */
+  private def carried(carry: Seq[String]): Seq[Column] =
+    carry.map(c => col(s"`$c`"))
 
   /** SplitContent "Byte Sequence Location" (SplitContent.h:41). */
   sealed trait ByteSequenceLocation
@@ -280,18 +287,19 @@ object SplitMerge {
   def splitContentBinary(df: DataFrame, idCol: Column, contentCol: Column,
                          delimiter: Array[Byte],
                          keepDelimiter: Boolean = false,
-                         location: ByteSequenceLocation = Trailing): DataFrame = {
+                         location: ByteSequenceLocation = Trailing,
+                         carry: Seq[String] = Nil): DataFrame = {
     val emitted = org.apache.spark.sql.GraftColumnShim.column(
       graft.functions.SplitByteSequence(
         org.apache.spark.sql.GraftColumnShim.expression(contentCol),
         delimiter, keepDelimiter, location == Leading))
-    df.select(
+    df.select(carried(carry) ++ Seq(
       idCol.as(FragmentAttrs.Identifier),
       posexplode(emitted).as(Seq("idx0", "fragment")),
-      size(emitted).cast("long").as("fragmentCount"))
-      .select(col(s"`${FragmentAttrs.Identifier}`"),
+      size(emitted).cast("long").as("fragmentCount")): _*)
+      .select(carried(carry) ++ Seq(col(s"`${FragmentAttrs.Identifier}`"),
         (col("idx0") + 1).as("fragmentIndex"), col("fragment"),
-        col("fragmentCount"))
+        col("fragmentCount")): _*)
   }
 
   /**
@@ -302,20 +310,20 @@ object SplitMerge {
    * is sliced down so the zero case yields an empty array.
    */
   def segmentContent(df: DataFrame, idCol: Column, contentCol: Column,
-                     segmentSize: Int): DataFrame = {
+                     segmentSize: Int, carry: Seq[String] = Nil): DataFrame = {
     val nSegs = ceil(length(contentCol).cast("double") / segmentSize).cast("int")
     val segs = slice(
       transform(sequence(lit(0), greatest(nSegs, lit(1)) - 1, lit(1)),
         i => substring(contentCol, i * segmentSize + 1, lit(segmentSize))),
       lit(1), greatest(nSegs, lit(0)))
-    df.select(
+    df.select(carried(carry) ++ Seq(
       idCol.as(FragmentAttrs.Identifier),
       posexplode(segs).as(Seq("idx0", "segment")),
-      size(segs).cast("long").as("fragmentCount"))
+      size(segs).cast("long").as("fragmentCount")): _*)
       // one-based indexing (SegmentContent.cpp:46)
-      .select(col(s"`${FragmentAttrs.Identifier}`"),
+      .select(carried(carry) ++ Seq(col(s"`${FragmentAttrs.Identifier}`"),
         (col("idx0") + 1).as("segmentIndex"), col("segment"),
-        col("fragmentCount"))
+        col("fragmentCount")): _*)
   }
 
   /**

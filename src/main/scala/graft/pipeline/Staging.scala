@@ -26,42 +26,24 @@ import org.apache.spark.sql.DataFrame
  * All three modes compute the SAME frame — the mode moves only where the
  * bytes live between the producing scan and its consumers (StagingSpec
  * pins result equality across modes).
+ *
+ * A barrier is a plain `localCheckpoint`/`checkpoint` action, so tooling
+ * observes it from outside through listeners (`graft.Dev` splits a query
+ * into per-barrier segments that way) — no hook lives here.
  */
 object Staging {
   val ConfKey = "spark.graft.staging"
 
-  /** Dev-only (r20 verdict #5): when set, every EAGER staging barrier
-    * also writes its segment's AQE-final `.explain("formatted")` to
-    * `<dir>/staged-<n>.txt` — so PlanDump's committed evidence for the
-    * composed pipelines shows the pre-barrier stages a localCheckpoint
-    * otherwise truncates. Off by default; one conf lookup per barrier
-    * (the same lookup path the mode switch already pays). */
-  val DumpDirKey = "spark.graft.staging.dumpDir"
-  private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def stage(df: DataFrame): DataFrame = stage(df, eager = true)
 
-  def stage(df: DataFrame, eager: Boolean): DataFrame = {
-    val out = df.sparkSession.conf.getOption(ConfKey).getOrElse("local") match {
+  def stage(df: DataFrame, eager: Boolean): DataFrame =
+    df.sparkSession.conf.getOption(ConfKey).getOrElse("local") match {
       case "local"    => df.localCheckpoint(eager)
       case "reliable" => df.checkpoint(eager)
       case "none"     => df
       case other => throw new IllegalArgumentException(
         s"$ConfKey=$other (expected local | reliable | none)")
     }
-    if (eager) df.sparkSession.conf.getOption(DumpDirKey).foreach { dir =>
-      // the eager checkpoint just executed `df`, so this is the final plan
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val n = dumpSeq.incrementAndGet()
-      val d = new java.io.File(dir)
-      d.mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"$dir/staged-$n%04d.txt"),
-        (s"== staged segment $n ==\n" + plan).getBytes("UTF-8"))
-    }
-    out
-  }
 
   /** `df.staged` / `df.stagedLazy` syntax for the call sites. */
   implicit class StagingOps(private val df: DataFrame) extends AnyVal {

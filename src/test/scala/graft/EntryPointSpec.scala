@@ -1,0 +1,40 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * The program has four entry points — Bench, Verify, EntrySmoke and Dev —
+ * over one session builder (`Session`). A new main or a second builder is
+ * how hand-copied pipeline fragments and drifting session settings crept
+ * in before; attribution work belongs in `graft.Dev`.
+ */
+class EntryPointSpec extends AnyFunSuite {
+  /** Every main source file, path relative to the source root -> text. */
+  private lazy val sources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        new String(Files.readAllBytes(p), "UTF-8"))
+      .toList
+    finally walk.close()
+  }
+
+  private def filesMatching(re: String): Seq[String] =
+    sources.collect { case (f, text) if re.r.findFirstIn(text).isDefined => f }
+      .sorted
+
+  test("only Bench, Verify, EntrySmoke and Dev define a main") {
+    assert(sources.nonEmpty)
+    assert(filesMatching("""def\s+main\s*\(|extends\s+App\b""") === Seq(
+      "graft/Bench.scala", "graft/Dev.scala", "graft/EntrySmoke.scala",
+      "graft/Verify.scala"))
+  }
+
+  test("SparkSession.builder appears only in Session.scala") {
+    assert(filesMatching("""SparkSession\s*\.\s*builder""") ===
+      Seq("graft/Session.scala"))
+  }
+}

@@ -777,6 +777,48 @@ class FlowSpec extends SparkSpec {
     assert(merged.forall(_ === ("l1\nl2\nl3\nl4\nl5", "3")))
   }
 
+  test("SplitText fragments inherit the parent's attributes, so filename " +
+       "survives a split -> Defragment merge (ProcessSession::create(parent))") {
+    val in = tmpDir("graft-split-inherit-in")
+    Files.write(Paths.get(in, "a.log"), "a1\na2\na3".getBytes("UTF-8"))
+    Files.write(Paths.get(in, "b.log"), "b1\nb2".getBytes("UTF-8"))
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: get
+         |  id: g
+         |  class: org.apache.nifi.minifi.processors.GetFile
+         |  Properties:
+         |    Input Directory: $in
+         |    Keep Source File: 'true'
+         |- name: split
+         |  id: s
+         |  class: org.apache.nifi.minifi.processors.SplitText
+         |  Properties:
+         |    Line Split Count: '1'
+         |- name: merge
+         |  id: m
+         |  class: org.apache.nifi.minifi.processors.MergeContent
+         |  Properties:
+         |    Merge Strategy: Defragment
+         |    Demarcator: "\\n"
+         |Connections:
+         |- {id: c1, source id: g, source relationship names: [success], destination id: s}
+         |- {id: c2, source id: s, source relationship names: [splits], destination id: m}
+         |""".stripMargin
+    val result = FlowRunner.run(spark, FlowConfig.parse(yml))
+    val splits = result.edge("split", "splits")
+      .select(element_at(col("attributes"), "filename"),
+        element_at(col("attributes"), "fragment.index"))
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(splits.toSeq === Seq(("a.log", "1"), ("a.log", "2"), ("a.log", "3"),
+      ("b.log", "1"), ("b.log", "2")))
+    val merged = result.edge("merge", "merged")
+      .select(element_at(col("attributes"), "filename"), col("content"))
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(merged.toSeq === Seq(("a.log", "a1\na2\na3"), ("b.log", "b1\nb2")))
+  }
+
   test("ExecuteProcess flow streams content through an external command") {
     val yml =
       """MiNiFi Config Version: 3
