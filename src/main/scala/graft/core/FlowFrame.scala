@@ -84,11 +84,15 @@ object FlowFrame {
    * Mirrors UpdateAttribute semantics (UpdateAttribute.cpp:37 — dynamic
    * properties always overwrite).
    */
-  def withAttrs(df: DataFrame, updates: Seq[(String, Column)]): DataFrame = {
+  def withAttrs(df: DataFrame, updates: Seq[(String, Column)]): DataFrame =
+    df.withColumn(Attributes, attrsWith(updates))
+
+  /** The attribute map with `updates` applied, as a column ([[withAttrs]]). */
+  def attrsWith(updates: Seq[(String, Column)]): Column = {
     val keys = updates.map(_._1)
     val cleaned = map_filter(col(Attributes), (k, _) => !k.isin(keys.map(lit): _*))
     val newPairs = updates.flatMap { case (k, v) => Seq(lit(k), v.cast("string")) }
-    df.withColumn(Attributes, map_concat(cleaned, map(newPairs: _*)))
+    map_concat(cleaned, map(newPairs: _*))
   }
 
   /**

@@ -39,9 +39,9 @@ object FlowRunner {
       outputs(flow.processor(procIdOrName).id)
     def edge(procIdOrName: String, relationship: String): DataFrame =
       output(procIdOrName).filter(col(FlowFrame.Relationship) === relationship)
-    /** Release the fan-out caches created by [[run]]. The persists exist
-      * only so one sweep materializes each shared stage once; a driver
-      * running many flows in one session would otherwise accumulate
+    /** Release the fan-out caches created by [[run]], the sweep's only
+      * caches: they exist so one sweep materializes each shared stage
+      * once; a driver running many flows in one session would accumulate
       * MEMORY_AND_DISK blocks until the session dies. Call once the
       * outputs have been consumed (written/collected). */
     def release(): Unit = persisted.foreach(_.unpersist(blocking = false))
@@ -61,7 +61,8 @@ object FlowRunner {
     // recomputed once per downstream plan (separate DataFrame actions share
     // no scans — the FlowFrame.routed N-scan trap); persist those nodes so
     // the sweep materializes each shared stage once. At cluster scale this
-    // is the standard persist-the-fan-out-point pattern.
+    // is the standard persist-the-fan-out-point pattern. Processors read
+    // their input in one pass and persist nothing themselves.
     val fanOut: Set[String] =
       if (!materializeFanOut) Set.empty
       else flow.connections.groupBy(_.sourceId)
@@ -89,7 +90,6 @@ object FlowRunner {
       }
     }
     val outputs = collection.mutable.Map[String, DataFrame]()
-    val procCaches = new Processors.CacheTracker
     order.foreach { id =>
       val p = flow.processor(id)
       val ins = incoming.getOrElse(id, Nil).filterNot(dropped.contains)
@@ -133,7 +133,7 @@ object FlowRunner {
         }
       val input = ins.reduceOption(_ unionByName _)
       val out =
-        try Processors.apply(spark, p, input, flow.services, procCaches)
+        try Processors.apply(spark, p, input, flow.services)
         catch {
           case _: Processors.NoInputException =>
             // never scheduled this sweep (no live upstream — e.g. its only
@@ -145,8 +145,8 @@ object FlowRunner {
           out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else out
     }
-    val cached = order.filter(fanOut).map(outputs(_)).toSeq ++ procCaches.all
-    FlowResult(flow, outputs.toMap, dropped.toSeq, cached)
+    FlowResult(flow, outputs.toMap, dropped.toSeq,
+      order.filter(fanOut).map(outputs(_)).toSeq)
     }
   }
 }
@@ -185,11 +185,14 @@ object Processors {
     * `ProcessSession::create(parent)`, and the fragment attributes (plus
     * `extraAttrs`, attribute name -> fragment column) override them.
     * Fragments carry a FORK lineage event from their parent
-    * (Provenance.h FORK) and a deterministic child uuid (see [[Lineage]]). */
+    * (Provenance.h FORK) and a deterministic child uuid (see [[Lineage]]).
+    * `passthrough` rows are the parent routed whole (uuid, attributes,
+    * content and entry date — then carried too). */
   private def fragmentFrame(frags: DataFrame, idxCol: String,
                             fragCol: String, countCol: Option[String],
-                            relationship: String = "splits",
-                            extraAttrs: Seq[(String, String)] = Nil): DataFrame = {
+                            relationship: Column = lit("splits"),
+                            extraAttrs: Seq[(String, String)] = Nil,
+                            passthrough: Option[Column] = None): DataFrame = {
     val parent = col("`fragment.identifier`").cast("string")
     val own = Seq(
       FlowFrame.FragmentAttrs.Identifier -> parent,
@@ -198,17 +201,20 @@ object Processors {
       Lineage.ParentsAttr -> parent) ++
       countCol.map(c => FlowFrame.FragmentAttrs.Count -> col(c)) ++
       extraAttrs.map { case (attr, c) => attr -> col(c) }
-    FlowFrame.withAttrs(frags, own).select(
-      Lineage.fragmentUuid(parent, col(idxCol)).as(FlowFrame.Uuid),
-      col(FlowFrame.Attributes),
-      col(fragCol).as(FlowFrame.Content),
-      current_timestamp().as(FlowFrame.EntryDate),
-      lit(relationship).as(FlowFrame.Relationship))
+    def pick(ofParent: Column, ofFragment: Column): Column =
+      passthrough.fold(ofFragment)(when(_, ofParent).otherwise(ofFragment))
+    frags.select(
+      pick(parent, Lineage.fragmentUuid(parent, col(idxCol)))
+        .as(FlowFrame.Uuid),
+      pick(col(FlowFrame.Attributes), FlowFrame.attrsWith(own))
+        .as(FlowFrame.Attributes),
+      pick(col(FlowFrame.Content).cast("string"), col(fragCol))
+        .as(FlowFrame.Content),
+      pick(col(FlowFrame.EntryDate), current_timestamp())
+        .as(FlowFrame.EntryDate),
+      relationship.as(FlowFrame.Relationship))
   }
 
-  /** Collects DataFrames a processor persists internally (e.g. the
-    * MergeContent defragment input staged once for its three subtrees) so
-    * the flow runner can release them with the fan-out caches. */
   /** An INPUT_REQUIRED processor invoked with no upstream. Direct callers
     * see it as a config error; a flow sweep treats it as "never scheduled"
     * (the reference's isWorkAvailable gate — such a processor simply does
@@ -216,12 +222,6 @@ object Processors {
     * resolution). */
   final class NoInputException(msg: String)
       extends IllegalArgumentException(msg)
-
-  final class CacheTracker {
-    private val buf = collection.mutable.ArrayBuffer[DataFrame]()
-    def track(df: DataFrame): DataFrame = { buf += df; df }
-    def all: Seq[DataFrame] = buf.toSeq
-  }
 
   /** Zero-row frame in the canonical FlowFrame shape (wrap's schema). */
   private[flow] def emptyFlowFrame(spark: SparkSession): DataFrame =
@@ -234,8 +234,7 @@ object Processors {
 
   def apply(spark: SparkSession, p: ProcessorDef,
             input: Option[DataFrame],
-            services: Seq[ServiceDef] = Nil,
-            tracker: CacheTracker = new CacheTracker): DataFrame = {
+            services: Seq[ServiceDef] = Nil): DataFrame = {
     def service(ref: String): ServiceDef =
       services.find(sv => sv.id == ref || sv.name == ref).getOrElse(
         throw new IllegalArgumentException(
@@ -750,11 +749,13 @@ object Processors {
       case "SplitText" =>
         // full reference surface: LineReader lines, size cap, header
         // lines/markers, trailing-newline trim (SplitText.h:60-113;
-        // semantics pinned by SplitTextSpec). The input feeds two
-        // subtrees (fragments + failure passthrough) — staged once.
-        val inOnce = tracker.track(in.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val frags = SplitMerge.splitTextFull(inOnce, col(FlowFrame.Uuid),
+        // semantics pinned by SplitTextSpec). One pass over the input: the
+        // same explode emits the fragments and the failure/original rows,
+        // which are the ORIGINAL FlowFile routed whole (uuid, attributes,
+        // content and entry date carried untouched — the reference
+        // transfers the input onward, it does not fabricate a fragment;
+        // zero-fragment inputs forward as `original` instead of vanishing)
+        val frags = SplitMerge.splitTextFull(in, col(FlowFrame.Uuid),
           content.cast("string"),
           lineSplitCount = prop("Line Split Count", "1").toInt,
           maxFragmentSize = props.get("Maximum Fragment Size")
@@ -763,27 +764,14 @@ object Processors {
           headerMarker = props.get("Header Line Marker Characters"),
           trimTrailingNewlines =
             Units.parseBool(prop("Remove Trailing Newlines", "true")),
-          carry = Seq(FlowFrame.Attributes))
-        val splits = fragmentFrame(
-          frags.filter(col("relationship") === "splits"),
-          "fragmentIndex", "fragment", countCol = Some("fragmentCount"),
+          carry = Seq(FlowFrame.Attributes, FlowFrame.EntryDate,
+            FlowFrame.Content))
+        fragmentFrame(frags, "fragmentIndex", "fragment",
+          countCol = Some("fragmentCount"),
+          relationship = col("relationship"),
           extraAttrs = Seq("text.line.count" -> "textLineCount",
-            "fragment.size" -> "fragmentSize"))
-        // failure/original = the ORIGINAL FlowFile routed whole (uuid,
-        // attributes and content untouched — the reference transfers the
-        // input onward, it does not fabricate a fragment; zero-fragment
-        // inputs forward as `original` instead of vanishing)
-        val passIds = frags
-          .filter(col("relationship").isin("failure", "original"))
-          .select(col("`fragment.identifier`").cast("string").as("__fid"),
-            col("relationship").as("__rel"))
-          .distinct()
-        val passthrough = inOnce
-          .join(passIds, inOnce(FlowFrame.Uuid) === col("__fid"))
-          .withColumn(FlowFrame.Content, content.cast("string"))
-          .withColumn(FlowFrame.Relationship, col("__rel"))
-          .select(splits.columns.map(c => col(s"`$c`")): _*)
-        splits.unionByName(passthrough)
+            "fragment.size" -> "fragmentSize"),
+          passthrough = Some(col("relationship").isin("failure", "original")))
 
       case "SplitContent" =>
         val keep = Units.parseBool(prop("Keep Byte Sequence", "false"))
@@ -824,7 +812,7 @@ object Processors {
         // the reference routes segments to "segments", not "splits"
         // (SegmentContent.h:50-53)
         fragmentFrame(frags, "segmentIndex", "segment",
-          countCol = Some("fragmentCount"), relationship = "segments")
+          countCol = Some("fragmentCount"), relationship = lit("segments"))
 
       case "MergeContent" =>
         // Delimiter Strategy (MergeContent.h:332-336): "Filename" resolves
@@ -855,61 +843,48 @@ object Processors {
         val footerTxt = delimiter(Seq("Footer", "Footer File"))
         prop("Merge Strategy", "Defragment") match {
           case "Defragment" =>
-            // the input feeds THREE subtrees (content merge, member-count
-            // agg, attribute-stat agg); materialize it once so a
-            // side-effecting upstream (FetchFile move/delete) cannot be
-            // re-executed per subtree and the scan doesn't run 3x
-            val inOnce = tracker.track(in.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            val merged = SplitMerge.mergeContentDefragment(inOnce,
-              FlowFrame.attr(FlowFrame.FragmentAttrs.Identifier),
-              FlowFrame.attr(FlowFrame.FragmentAttrs.Index).cast("int"),
-              content.cast("string"),
-              FlowFrame.attr(FlowFrame.FragmentAttrs.Count).cast("long"),
-              demarcator, headerTxt, footerTxt)
-            // member attributes merge per the Attribute Strategy
-            // (MergeFileTests.cpp:600-700); fragment bookkeeping attrs are
-            // per-member by construction and excluded like the reference's
-            // BinFiles fragment attribute scrub, and merge.count is the
-            // merge's OWN output attr (excluded so the final map_concat
-            // never sees a duplicate key). The gid must be materialized
-            // BEFORE the attribute map is filtered — fragment.identifier
-            // is one of the filtered keys.
+            // ONE aggregate keyed on fragment.identifier computes content,
+            // counts, JOIN parents and merged attributes: one scan, one
+            // shuffle, no cache, no join — a side-effecting upstream
+            // (FetchFile move/delete) runs once by construction.
+            // Member attributes merge per the Attribute Strategy; fragment
+            // bookkeeping attrs are per-member and excluded like the
+            // reference's BinFiles scrub, and merge.count is the merge's OWN
+            // output attr (excluded so map_concat sees no duplicate key).
             val fragKeys = Seq(FlowFrame.FragmentAttrs.Identifier,
               FlowFrame.FragmentAttrs.Index, FlowFrame.FragmentAttrs.Count,
               "merge.count",
               // per-member lineage must not leak into the merged map —
               // the merge emits its OWN JOIN event below
               Lineage.EventAttr, Lineage.ParentsAttr)
-            val members = inOnce
-              .withColumn("__gid",
-                FlowFrame.attr(FlowFrame.FragmentAttrs.Identifier))
-              .withColumn(FlowFrame.Attributes,
-                map_filter(col(FlowFrame.Attributes),
-                  (k, _) => !k.isin(fragKeys.map(lit): _*)))
-            val mergedAttrs = SplitMerge.mergedAttributes(
-              members, col("__gid"), col(FlowFrame.Attributes),
-              keepOnlyCommon = prop("Attribute Strategy",
-                "Keep Only Common Attributes") == "Keep Only Common Attributes")
-            // JOIN lineage (Provenance.h JOIN): the merged FlowFile's
-            // parents are its member uuids. Same groupBy key as the merge
-            // itself and the input is the staged inOnce, so this is one
-            // more co-partitioned agg over cached blocks.
-            val joinParents = inOnce.groupBy(
-                FlowFrame.attr(FlowFrame.FragmentAttrs.Identifier).as("__pgid"))
-              .agg(array_join(array_sort(collect_list(col(FlowFrame.Uuid))),
-                ",").as("__joinParents"))
-            merged.join(mergedAttrs,
-                merged("mergeId") === mergedAttrs("gid"), "left")
-              .join(joinParents, merged("mergeId") === col("__pgid"), "left")
-              .select(
+            val memberAttrs = map_filter(col(FlowFrame.Attributes),
+              (k, _) => !k.isin(fragKeys.map(lit): _*))
+            val merged = SplitMerge.mergeContentDefragment(in,
+              FlowFrame.attr(FlowFrame.FragmentAttrs.Identifier),
+              FlowFrame.attr(FlowFrame.FragmentAttrs.Index).cast("int"),
+              content.cast("string"),
+              FlowFrame.attr(FlowFrame.FragmentAttrs.Count).cast("long"),
+              demarcator, headerTxt, footerTxt,
+              extraAggs = Seq(
+                SplitMerge.mergedAttributesAgg(memberAttrs,
+                  keepOnlyCommon = prop("Attribute Strategy",
+                    "Keep Only Common Attributes") ==
+                    "Keep Only Common Attributes").as("__mergedAttrs"),
+                // JOIN lineage (Provenance.h JOIN): the merged FlowFile's
+                // parents are its member uuids
+                array_join(array_sort(collect_list(col(FlowFrame.Uuid))), ",")
+                  .as("__joinParents")))
+            // FlowFiles without a fragment.identifier share one null-keyed
+            // group: no real merge, so no merged attributes or parents
+            val identified = col("mergeId").isNotNull
+            merged.select(
                 col("mergeId").as(FlowFrame.Uuid),
                 map_concat(
-                  coalesce(col("mergedAttrs"),
-                    map_from_arrays(array().cast("array<string>"),
-                      array().cast("array<string>"))),
+                  when(identified, col("__mergedAttrs"))
+                    .otherwise(map().cast("map<string,string>")),
                   map(lit("merge.count"), col("fragmentsSeen").cast("string")),
-                  Lineage.eventMap(Lineage.Join, col("__joinParents")))
+                  Lineage.eventMap(Lineage.Join,
+                    when(identified, col("__joinParents"))))
                   .as(FlowFrame.Attributes),
                 col("merged").as(FlowFrame.Content),
                 current_timestamp().as(FlowFrame.EntryDate),

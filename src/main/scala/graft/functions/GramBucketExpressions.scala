@@ -292,6 +292,9 @@ case class KnGramBuckets(child: Expression, buckets: Int)
     copy(child = newChild)
 }
 
+/** A fused per-document scorer, NULL exactly when the text is: callers
+  * filter the TEXT, since a filter on the score is pushed below the
+  * projection and runs the kernel twice per row. */
 private[functions] abstract class GramScoreExpression extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess

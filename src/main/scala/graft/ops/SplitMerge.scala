@@ -474,12 +474,14 @@ object SplitMerge {
    *
    * Spark shape: one shuffle on the fragment id;
    * `array_sort(collect_list(struct(idx, frag)))` gives deterministic
-   * in-group order without a sort-within-partitions pass.
+   * in-group order without a sort-within-partitions pass. `extraAggs`
+   * ride in the same aggregate (e.g. [[mergedAttributesAgg]]).
    */
   def mergeContentDefragment(frags: DataFrame, idCol: Column, indexCol: Column,
                              fragmentCol: Column, countCol: Column,
                              demarcator: String,
-                             header: String = "", footer: String = ""): DataFrame =
+                             header: String = "", footer: String = "",
+                             extraAggs: Seq[Column] = Nil): DataFrame =
     frags
       .groupBy(idCol.as("mergeId"))
       .agg(
@@ -489,8 +491,8 @@ object SplitMerge {
               e => e.getField("f")),
             demarcator),
           lit(footer)).as("merged"),
-        count(lit(1)).as("fragmentsSeen"),
-        first(countCol).as("fragmentsExpected"))
+        count(lit(1)).as("fragmentsSeen") +:
+        first(countCol).as("fragmentsExpected") +: extraAggs: _*)
       .withColumn("relationship",
         when(col("fragmentsSeen") === col("fragmentsExpected"), "merged")
           .otherwise("failure"))
@@ -799,34 +801,35 @@ object SplitMerge {
         count(lit(1)).as("lineCount"))
   }
 
+  /** [[mergedAttributesAgg]] per gid: (gid, mergedAttrs). */
+  def mergedAttributes(df: DataFrame, gidCol: Column, attrsCol: Column,
+                       keepOnlyCommon: Boolean = true): DataFrame =
+    df.groupBy(gidCol.as("gid"))
+      .agg(mergedAttributesAgg(attrsCol, keepOnlyCommon).as("mergedAttrs"))
+
   /**
    * MergeContent Attribute Strategy (merge_content_options
-   * ATTRIBUTE_STRATEGY_*, MergeFileTests.cpp:600-700): the merged
-   * FlowFile's attribute map from its members'.
+   * ATTRIBUTE_STRATEGY_*, MergeFileTests.cpp:600-700) as an aggregate
+   * column: the merged FlowFile's attribute map from its members'.
    *
    * - Keep Only Common Attributes (default): a key survives iff it is
    *   present on EVERY member with one identical value.
    * - Keep All Unique Attributes: a key survives iff it never conflicts —
    *   one value wherever it appears, even if absent elsewhere.
    *
-   * Shape: explode the maps, one groupBy(gid, key) with countDistinct +
-   * count (both map-side partial), rebuild the map per gid — no window,
-   * no per-group collect of whole maps.
+   * A null value counts as presence, never as a value: a key with only
+   * null values never survives, and a null beside one value does not
+   * conflict with it. A null map is a member with no keys.
    */
-  def mergedAttributes(df: DataFrame, gidCol: Column, attrsCol: Column,
-                       keepOnlyCommon: Boolean = true): DataFrame = {
-    val members = df.groupBy(gidCol.as("gid")).agg(count(lit(1)).as("__n"))
-    val kv = df.select(gidCol.as("gid"), explode(attrsCol).as(Seq("k", "v")))
-    val stats = kv.groupBy(col("gid"), col("k"))
-      .agg(count_distinct(col("v")).as("nv"), count(lit(1)).as("cnt"),
-        min(col("v")).as("v"))
-    val kept =
-      if (keepOnlyCommon)
-        stats.join(members, "gid")
-          .filter(col("nv") === 1 && col("cnt") === col("__n"))
-      else stats.filter(col("nv") === 1)
-    kept.groupBy(col("gid"))
-      .agg(map_from_arrays(
-        collect_list(col("k")), collect_list(col("v"))).as("mergedAttrs"))
-  }
+  def mergedAttributesAgg(attrsCol: Column, keepOnlyCommon: Boolean): Column =
+    udf { (maps: Seq[Map[String, String]], members: Long) =>
+      scala.collection.immutable.TreeMap.from[String, String](
+        maps.flatten.groupBy(_._1).flatMap { case (k, kvs) =>
+          kvs.flatMap(kv => Option(kv._2)).distinct match {
+            case Seq(v) if !keepOnlyCommon || kvs.size == members =>
+              Some(k -> v)
+            case _ => None
+          }
+        })
+    }.apply(collect_list(attrsCol), count(lit(1)))
 }

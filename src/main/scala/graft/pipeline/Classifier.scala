@@ -96,10 +96,10 @@ object Classifier {
     import org.apache.spark.sql.GraftColumnShim.{column => kcol, expression => kexpr}
     val dense = Array.fill(buckets)(0L)
     w.foreach { case (k, v) => dense(k.toInt) = v }
-    df.select(idCol.as("docId"),
+    df.filter(textCol.isNotNull) // null text scored no tokens before
+      .select(idCol.as("docId"),
         kcol(graft.functions.HashedTokenScore(kexpr(textCol), buckets, dense))
           .as("__s"))
-      .filter(col("__s").isNotNull) // null text scored no tokens before
       .select(col("docId"),
         element_at(col("__s"), 1).as("nTokens"),
         element_at(col("__s"), 2).as(sumName))

@@ -112,11 +112,11 @@ object Perplexity {
     // computed map-side, no gram explode, no groupBy(doc) Exchange.
     // doc-level output is checkpointed so the corpus scan runs ONCE —
     // both the tertile job and the returned frame read the checkpoint
-    df.select(Seq(idCol.as("docId"), isRef.as("isRef"),
+    df.filter(textCol.isNotNull) // null text scored no grams before
+      .select(Seq(idCol.as("docId"), isRef.as("isRef"),
         kcol(graft.functions.CeScore(kexpr(textCol), buckets, lpb, lpc))
           .as("__s")) ++
         carry.map { case (n, c) => c.as(n) }: _*)
-      .filter(col("__s").isNotNull) // null text scored no grams before
       .select(Seq(col("docId"), col("isRef"),
         element_at(col("__s"), 1).as("n_bigrams"),
         element_at(col("__s"), 2).as("ce_micro")) ++
@@ -176,10 +176,10 @@ object Perplexity {
     }
     val (lpbT, lpcT) = model(_.getAs[Long]("ct"))
     val (lpbA, lpcA) = model(_.getAs[Long]("ca"))
-    df.select(idCol.as("docId"),
+    df.filter(textCol.isNotNull)
+      .select(idCol.as("docId"),
         kcol(graft.functions.CeScorePair(kexpr(textCol), buckets,
           lpbT, lpcT, lpbA, lpcA)).as("__s"))
-      .filter(col("__s").isNotNull)
       .select(col("docId"),
         element_at(col("__s"), 1).as("n_bigrams"),
         element_at(col("__s"), 2).as("ce_target_micro"),
@@ -284,11 +284,11 @@ object Perplexity {
       m.foreach { case (k, v) => a(k.toInt) = v }
       a
     }
-    df.select(idCol.as("docId"), isRef.as("isRef"),
+    df.filter(textCol.isNotNull)
+      .select(idCol.as("docId"), isRef.as("isRef"),
         kcol(graft.functions.KnScore(kexpr(textCol), buckets,
           dense(cbMap), dense(ccMap), dense(n1pMap), dense(n1wMap),
           nccB, microLog(nccB.toDouble), dNum, dDen)).as("__s"))
-      .filter(col("__s").isNotNull)
       .select(col("docId"), col("isRef"),
         element_at(col("__s"), 1).as("n_bigrams"),
         element_at(col("__s"), 2).as("ce_micro"))

@@ -326,10 +326,10 @@ object Sampling {
     // document — (nGrams, weightMicro) map-side, no gram explode, no
     // groupBy(doc) Exchange (guide §1.2 step 2, §2.4). Null text scored
     // no grams before (explode of a null stream) — the filter matches.
-    df.select(idCol.as("docId"),
+    df.filter(textCol.isNotNull)
+      .select(idCol.as("docId"),
         kcol(graft.functions.DsirScore(kexpr(textCol), buckets, lr))
           .as("__s"))
-      .filter(col("__s").isNotNull)
       .select(col("docId"),
         element_at(col("__s"), 1).as("nGrams"),
         element_at(col("__s"), 2).as("weightMicro"))

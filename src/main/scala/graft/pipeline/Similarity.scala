@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.pipeline.Staging.StagingOps
 
 /**
@@ -444,15 +445,15 @@ object Similarity {
     * keep their previous centroid, and the driver table stays sorted by
     * cent so the flat layout's smallest-index tie-break is byte-equal to
     * centsFlatRow's sort_array contract. */
-  private[pipeline] def refineCentroids(c: DataFrame, init: DataFrame,
-                                        lloydIters: Int): DataFrame = {
+  private[graft] def refineCentroids(c: DataFrame, init: DataFrame,
+                                     lloydIters: Int): DataFrame = {
     if (lloydIters <= 0) return init
     val spark = c.sparkSession
     import spark.implicits._
     var cents: Array[(String, Array[Long])] = init
       .select(col("cent"), col("centq")).collect()
       .map(r => (r.getString(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
+      .sortBy(_._1)(centIdOrder)
     for (_ <- 0 until lloydIters) {
       val flat = Seq((cents.map(_._1).toSeq,
           cents.flatMap(_._2).toSeq,
@@ -480,6 +481,11 @@ object Similarity {
     cents.toSeq.map { case (cent, q) => (cent, q.toSeq, normSqLocal(q)) }
       .toDF("cent", "centq", "centn")
   }
+
+  /** Centroid ids in [[centsFlatRow]]'s `sort_array` order: unsigned UTF-8
+    * bytes, not String's UTF-16 order (they differ past U+E000). */
+  private[graft] val centIdOrder: Ordering[String] =
+    Ordering.by(UTF8String.fromString)
 
   /** |v|² over longs — the driver-side twin of [[normSqQ]]. */
   private def normSqLocal(q: Array[Long]): Long = {

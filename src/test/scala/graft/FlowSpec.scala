@@ -819,6 +819,111 @@ class FlowSpec extends SparkSpec {
     assert(merged.toSeq === Seq(("a.log", "a1\na2\na3"), ("b.log", "b1\nb2")))
   }
 
+  test("GetFile -> SplitText -> MergeContent Defragment reads its input " +
+       "once: the split plans no Exchange and no join, the merge exactly " +
+       "one shuffle, no join and no cache") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val in = tmpDir("graft-split-merge-plan")
+    Files.write(Paths.get(in, "a.log"), "a1\na2\na3".getBytes("UTF-8"))
+    Files.write(Paths.get(in, "b.log"), "b1\nb2".getBytes("UTF-8"))
+    // only newlines: every fragment trims to nothing, so the file is
+    // forwarded whole as `original` — a passthrough row in the split output
+    Files.write(Paths.get(in, "c.log"), "\n\n".getBytes("UTF-8"))
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: get
+         |  id: g
+         |  class: org.apache.nifi.minifi.processors.GetFile
+         |  Properties:
+         |    Input Directory: $in
+         |    Keep Source File: 'true'
+         |- name: split
+         |  id: s
+         |  class: org.apache.nifi.minifi.processors.SplitText
+         |  Properties:
+         |    Line Split Count: '1'
+         |- name: merge
+         |  id: m
+         |  class: org.apache.nifi.minifi.processors.MergeContent
+         |  Properties:
+         |    Merge Strategy: Defragment
+         |    Demarcator: "\\n"
+         |Connections:
+         |- {id: c1, source id: g, source relationship names: [success], destination id: s}
+         |- {id: c2, source id: s, source relationship names: [splits], destination id: m}
+         |""".stripMargin
+    val result = FlowRunner.run(spark, FlowConfig.parse(yml))
+    object nodes extends AdaptiveSparkPlanHelper
+    // the AQE-final physical plan of a consumed output
+    def executed(df: DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def count(plan: SparkPlan)(pf: PartialFunction[SparkPlan, SparkPlan]): Int =
+      nodes.collect(plan)(pf).size
+    val splitOut = result.output("split")
+    assert(splitOut.groupBy("relationship").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ===
+      Map("splits" -> 5L, "original" -> 1L))
+    val split = executed(splitOut)
+    assert(count(split) { case e: ShuffleExchangeLike => e } === 0, split)
+    assert(count(split) { case j: BaseJoinExec => j } === 0, split)
+    val mergeOut = result.output("merge")
+    val merge = executed(mergeOut)
+    assert(count(merge) { case e: ShuffleExchangeLike => e } === 1, merge)
+    assert(count(merge) { case j: BaseJoinExec => j } === 0, merge)
+    assert(count(merge) { case c: InMemoryTableScanExec => c } === 0, merge)
+    assert(result.persisted.isEmpty)
+    val merged = mergeOut
+      .select(element_at(col("attributes"), "filename"), col("content"),
+        col("relationship"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(merged.sorted.toSeq === Seq(("a.log", "a1\na2\na3", "merged"),
+      ("b.log", "b1\nb2", "merged")))
+  }
+
+  test("SplitText failure and original rows are the parent FlowFile " +
+       "untouched: uuid, attributes, content and entryDate") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val t0 = java.sql.Timestamp.valueOf("2020-01-02 03:04:05")
+    val rows = Seq(
+      Row("u-lines", Map("filename" -> "l.log", "k" -> "1"), "l1\nl2", t0),
+      Row("u-empty", Map("filename" -> "e.log"), "", t0),
+      Row("u-null", Map("filename" -> "n.log", "k" -> null), null, t0))
+    val input = spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("uuid", StringType),
+        StructField("attributes", MapType(StringType, StringType)),
+        StructField("content", StringType),
+        StructField("entryDate", TimestampType))))
+      .withColumn("relationship", lit(null: String))
+    def split(props: (String, String)*): Map[String, (Row, String)] =
+      Processors.apply(spark, ProcessorDef("s", "split",
+          "org.apache.nifi.minifi.processors.SplitText", "TIMER_DRIVEN",
+          "1 sec", Set.empty, props.toMap), Some(input))
+        .filter(col("relationship") =!= "splits")
+        .select("uuid", "attributes", "content", "entryDate", "relationship")
+        .collect()
+        .map(r => r.getString(0) -> (Row(r.toSeq.take(4): _*), r.getString(4)))
+        .toMap
+    val parents = rows.map(r => r.getString(0) -> r).toMap
+    // a header longer than every input routes each one to failure whole
+    val overrun = split("Line Split Count" -> "1", "Header Line Count" -> "4")
+    assert(overrun === parents.map { case (u, r) => u -> (r, "failure") })
+    // empty and null content split into zero fragments: forwarded whole
+    val zero = split("Line Split Count" -> "1")
+    assert(zero === Map(
+      "u-empty" -> (parents("u-empty"), "original"),
+      "u-null" -> (parents("u-null"), "original")))
+  }
+
   test("ExecuteProcess flow streams content through an external command") {
     val yml =
       """MiNiFi Config Version: 3

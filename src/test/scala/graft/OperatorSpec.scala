@@ -878,6 +878,27 @@ class OperatorSpec extends SparkSpec {
       "tagUnique1" -> "unique1", "tagUnique2" -> "unique2"))
   }
 
+  test("MergeContent attribute strategies: a null value counts as " +
+       "presence, never as a value; partial keys survive only Keep All " +
+       "Unique") {
+    import graft.ops.SplitMerge
+    // a: on all, one value; b: null on m0, "2" on m1/m3, absent on m2;
+    // c: two values; d: only on m2; e: only null; f: null on m0, "z" else
+    val members = flowFrame(Seq(
+      ("m0", Map("a" -> "1", "b" -> null, "c" -> "x", "f" -> null)),
+      ("m1", Map("a" -> "1", "b" -> "2", "c" -> "x", "f" -> "z")),
+      ("m2", Map("a" -> "1", "c" -> "y", "d" -> "4", "f" -> "z")),
+      ("m3", Map("a" -> "1", "b" -> "2", "e" -> null, "f" -> "z"))))
+      .withColumn("gid", lit("bin0"))
+    def attrsOf(keepOnlyCommon: Boolean): Map[String, String] =
+      SplitMerge.mergedAttributes(members, col("gid"),
+        col(FlowFrame.Attributes), keepOnlyCommon)
+        .collect()(0).getAs[Map[String, String]]("mergedAttrs")
+    assert(attrsOf(true) === Map("a" -> "1", "f" -> "z"))
+    assert(attrsOf(false) === Map("a" -> "1", "b" -> "2", "d" -> "4",
+      "f" -> "z"))
+  }
+
   test("MergeContent TAR/ZIP formats pack a whole bin into one archive " +
        "(MergeContent.h:293-331)") {
     import graft.ops.Archive

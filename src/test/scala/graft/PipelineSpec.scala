@@ -2655,4 +2655,42 @@ class PipelineSpec extends SparkSpec {
     assert(out(2L).mkString === "punctonly")
     assert(out(3L) === Nil)
   }
+
+  test("logisticApply evaluates the fused token scorer once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    // a range scan, not a local relation the optimizer would fold away
+    val texts = spark.range(4).select(col("id").as("doc_id"),
+      when(col("id") =!= 3, concat(lit("tok "), col("id").cast("string")))
+        .as("text"))
+    val scored = Classifier.logisticApply(texts, col("doc_id"), col("text"),
+      Map(1L -> 5L, 3L -> -2L), bias = 0L, buckets = 16)
+    val plan = scored.queryExecution.optimizedPlan
+    val kernels = plan.collect { case node =>
+      node.expressions.flatMap(_.collect {
+        case k: graft.functions.HashedTokenScore => k: Expression })
+    }.flatten
+    assert(kernels.size === 1, plan)
+    assert(scored.select("docId").collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(0L, 1L, 2L)) // null text scores no row
+  }
+
+  test("refineCentroids orders centroid ids like sort_array (UTF-8 bytes), " +
+       "not by UTF-16 code units") {
+    import spark.implicits._
+    val bmp = "\uFF21"          // U+FF21: UTF-8 EF BC A1
+    val astral = "\uD83D\uDE00" // U+1F600: UTF-8 F0 9F 98 80
+    assert(astral < bmp) // UTF-16: the surrogate D83D sorts first
+    val sparkOrder = spark.range(1)
+      .select(sort_array(array(lit(astral), lit(bmp)))).head().getSeq[String](0)
+    assert(sparkOrder === Seq(bmp, astral))
+    assert(Seq(astral, bmp).sorted(Similarity.centIdOrder) === sparkOrder)
+    // two identical centroids tie on the one point; the tie goes to the
+    // first id in sort_array order, whose cell the point then pulls over
+    val init = Seq((astral, Seq(1000L, 0L), 1000000L),
+      (bmp, Seq(1000L, 0L), 1000000L)).toDF("cent", "centq", "centn")
+    val points = Seq(Tuple1(Seq(3000L, 0L))).toDF("cq")
+    val refined = Similarity.refineCentroids(points, init, 1).collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    assert(refined === Map(bmp -> Seq(3000L, 0L), astral -> Seq(1000L, 0L)))
+  }
 }
