@@ -456,14 +456,14 @@ object Bench {
    * drained to completion (processAllAvailable over an on-disk corpus =
    * the AvailableNow batch-like run; FlowRuntime.runAvailable). Fresh
    * checkpoint + sink per rep so every rep tails the full corpus from
-   * offset zero. Row value = wall seconds for the drain, same unit as the
-   * batch rows; lines/value is the implied rows/s.
+   * offset zero. Timed by the bench's one rep loop, so the row value is
+   * wall seconds for the drain, same unit as the batch rows; lines/value
+   * is the implied rows/s.
    */
-  private[graft] def tailDrainSeconds(spark: SparkSession, corpus: String): Double = {
+  private[graft] def tailDrain(spark: SparkSession, corpus: String): Unit = {
     import spark.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-tailrun-" +
       java.util.UUID.randomUUID
-    val t0 = System.nanoTime()
     val tailed = spark.readStream
       .format("graft.streaming.TailFileSource")
       .option("path", corpus).option("glob", ".*\\.txt").load()
@@ -478,7 +478,6 @@ object Bench {
       graft.streaming.FlowRuntime.relationshipSink(msgs.toDF(), s"$base/out"),
       s"$base/ckpt")
     q.stop()
-    (System.nanoTime() - t0) / 1e9
   }
 
   /** Replicated corpus for the streaming near-dup drain: `mult` copies
@@ -513,11 +512,11 @@ object Bench {
     * detectNearDuplicates (flatMapGroupsWithState, bucket state capped
     * at 150 signatures — bounded bytes at ANY corpus size) → noop sink,
     * drained with AvailableNow. Fresh checkpoint per rep so every rep
-    * processes the full corpus from offset zero. */
-  private[graft] def neardupDrainSeconds(spark: SparkSession, docsDir: String): Double = {
+    * processes the full corpus from offset zero. Timed by the bench's
+    * one rep loop, like [[tailDrain]]. */
+  private[graft] def neardupDrain(spark: SparkSession, docsDir: String): Unit = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-ndrun-" +
       java.util.UUID.randomUUID
-    val t0 = System.nanoTime()
     val schema = spark.read.parquet(s"$docsDir/documents.parquet").schema
     // two corpus layouts: the staged corpora ship documents.parquet as a
     // DIRECTORY of part files (stream path = that dir), the sf fixture
@@ -541,7 +540,6 @@ object Bench {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    (System.nanoTime() - t0) / 1e9
   }
 
   def main(args: Array[String]): Unit = {
@@ -580,10 +578,15 @@ object Bench {
     def force(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
+    // The one unmeasured warm pass. A failed warm-up is logged and the run
+    // goes on: the row's measured reps then fail on their own and publish
+    // the sentinel (see rep), instead of one warm-up killing every row.
+    def warm(tag: String)(once: => Unit): Unit =
+      try once
+      catch { case e: Throwable => System.err.println(s"[bench] warm $tag: $e") }
     (0 until 2).foreach { _ =>
       (headline ++ skewed ++ x10 ++ extra).distinct.foreach { name =>
-        try force(name, warmDir)
-        catch { case e: Throwable => System.err.println(s"[bench] warm $name: $e") }
+        warm(name)(force(name, warmDir))
       }
     }
     // Min of N measured reps per query: the container's vCPUs see bursty
@@ -674,10 +677,7 @@ object Bench {
     // sf0.01 warm-up tiers the codegen but leaves the first x10-scale rep
     // with cold page cache and un-scaled JIT profiles; one unmeasured
     // x10 pass makes every measured rep steady-state in both directions.
-    x10.foreach { name =>
-      try force(name, x10Dir)
-      catch { case e: Throwable => System.err.println(s"[bench] x10 warm $name: $e") }
-    }
+    x10.foreach(name => warm(s"x10 $name")(force(name, x10Dir)))
     val x10Results =
       x10Comparators ++
       x10.map(name => rec(s"x10_$name", timesOfN(name, x10Dir)))
@@ -687,10 +687,8 @@ object Bench {
     // plain dedup_substrings rows above stay as the regression guard.
     val longDir1 = stageLongDocs(spark, sfDir, "1x")
     val longDir10 = stageLongDocs(spark, x10Dir, "10x", contentKey = sfDir)
-    Seq(longDir1, longDir10).foreach { d =>
-      try force("dedup_substrings", d)
-      catch { case e: Throwable => System.err.println(s"[bench] long warm: $e") }
-    }
+    Seq(longDir1, longDir10).foreach(d =>
+      warm("longdoc")(force("dedup_substrings", d)))
     val longResults = Seq(
       rec("longdoc_dedup_substrings", timesOfN("dedup_substrings", longDir1)),
       rec("x10_longdoc_dedup_substrings",
@@ -699,8 +697,7 @@ object Bench {
     // pairs with longdoc_dedup_substrings above — a hot window key with
     // ~1,500 copies must stay within the capped-family band, not funnel
     val substrSkewDir = stageSubstrSkew(spark, longDir1, sfDir)
-    try force("dedup_substrings", substrSkewDir)
-    catch { case e: Throwable => System.err.println(s"[bench] substr skew warm: $e") }
+    warm("substr skew")(force("dedup_substrings", substrSkewDir))
     val substrSkewResults = Seq(
       rec("skew_longdoc_dedup_substrings",
         timesOfN("dedup_substrings", substrSkewDir)))
@@ -720,8 +717,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     def substrTimes(dir: String, thr: Long, reps: Int): Seq[Double] =
       rep("massdup", reps)(substrOnce(dir, thr))
-    try substrOnce(massDupDir, 100000L) // warm the salted shape at scale
-    catch { case e: Throwable => System.err.println(s"[bench] massdup warm: $e") }
+    warm("massdup")(substrOnce(massDupDir, 100000L)) // the salted shape at scale
     val massDupResults = Seq(
       rec("massdup_dedup_substrings", substrTimes(massDupDir, 0L, 2)),
       // r21: 5 reps (was 3) — committed same-code runs of this row read
@@ -744,7 +740,8 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     def semDedupTimes(dir: String, nC: Int): Seq[Double] =
       rep("semdedup", 3)(semDedupOnce(dir, nC))
-    semDedupOnce(warmDir, 8); semDedupOnce(x10Dir, 80) // warm both shapes
+    warm("semdedup")(semDedupOnce(warmDir, 8))
+    warm("x10 semdedup")(semDedupOnce(x10Dir, 80))
     val semResults = Seq(
       rec("dedup_semantic", semDedupTimes(sfDir, 8)),
       rec("x10_dedup_semantic", semDedupTimes(x10Dir, 80)))
@@ -757,7 +754,8 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     def d4Times(dir: String, nC: Int): Seq[Double] =
       rep("d4", 3)(d4Once(dir, nC))
-    d4Once(warmDir, 8); d4Once(x10Dir, 80)
+    warm("d4")(d4Once(warmDir, 8))
+    warm("x10 d4")(d4Once(x10Dir, 80))
     val d4Results = Seq(
       rec("d4_e2e", d4Times(sfDir, 8)),
       rec("x10_d4_e2e", d4Times(x10Dir, 80)))
@@ -776,9 +774,7 @@ object Bench {
       val prevStaging = spark.conf.getOption(graft.pipeline.Staging.ConfKey)
       spark.conf.set(graft.pipeline.Staging.ConfKey, "reliable")
       try {
-        try d4Once(sfDir, 8) // warm the reliable shape
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] d4 reliable warm: $e") }
+        warm("d4 reliable")(d4Once(sfDir, 8))
         Seq(rec("d4_e2e_reliable", d4Times(sfDir, 8)))
       } finally prevStaging match {
         case Some(v) => spark.conf.set(graft.pipeline.Staging.ConfKey, v)
@@ -821,7 +817,8 @@ object Bench {
         threshold = 0.3, nCentroids = nC, lloydIters = 2,
         saltBlockSize = Int.MaxValue)
         .write.format("noop").mode("overwrite").save()
-    semDedupOnce(embSkewDir, 80); semDedupCappedOnce(embSkewDir, 80, 64)
+    warm("semskew")(semDedupOnce(embSkewDir, 80))
+    warm("semskew cap")(semDedupCappedOnce(embSkewDir, 80, 64))
     val semSkewResults = Seq(
       rec("skew_dedup_semantic", semDedupTimes(embSkewDir, 80)),
       rec("skew_dedup_semantic_unblocked",
@@ -849,8 +846,7 @@ object Bench {
     def ivfPqProdOnce(dir: String, tf: Double, iters: Int = 1): Unit =
       ivfPqProd(dir, tf, iters)
         .write.format("noop").mode("overwrite").save()
-    try ivfPqProdOnce(x10Dir, 0.25) // warm; guarded like every other warm pass
-    catch { case e: Throwable => System.err.println(s"[bench] ivfpq prod warm: $e") }
+    warm("ivfpq prod")(ivfPqProdOnce(x10Dir, 0.25))
     def ivfPqProdTimes(tf: Double, reps: Int, iters: Int = 1): Seq[Double] =
       rep("ivfpq prod", reps)(ivfPqProdOnce(x10Dir, tf, iters))
     // r18 (#3): the depth contrast where Lloyd dominates. At iters=1 the
@@ -876,7 +872,7 @@ object Bench {
     def deepTopkSet(tf: Double): Set[(Long, Long)] =
       ivfPqProd(x10Dir, tf, iters = 4).select(col("qid"), col("cid"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
+    warm("ivfpq deep recall") {
       val brute = graft.pipeline.Similarity.bruteForceTopK(
         spark.read.parquet(s"$x10Dir/embeddings.parquet"),
         spark.read.parquet(s"$x10Dir/embeddings.parquet")
@@ -889,8 +885,7 @@ object Bench {
         f"full-train ${100 * recall(1.0)}%.1f%%, " +
         f"sampled(0.5, the 39·k floor) ${100 * recall(0.5)}%.1f%%, " +
         f"sampled(0.1, under the floor) ${100 * recall(0.1)}%.1f%%")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ivfpq deep warm/recall: $e") }
+    }
     // r19 (verdict #3): the deep pair at reps=3 — the r18 min-of-2
     // direction flipped between the committed run and the driver's re-run
     // (6.832/7.851 vs 7.449/6.573), so min-of-2 cannot establish a timing
@@ -909,7 +904,7 @@ object Bench {
     // excluded as fixture construction). One warm drain at the warm-up
     // scale pays the streaming plane's one-time codegen, like the batch
     // warm-up does.
-    tailDrainSeconds(spark, stageTailCorpus(spark, warmDir, "warm"))
+    warm("tail drain")(tailDrain(spark, stageTailCorpus(spark, warmDir, "warm")))
     // mult=30 per the round-11 finding (see stageTailCorpus): the drain
     // must be data-dominated before the 1×/x10 pair means anything. The
     // *_lines_per_sec rows carry the throughput number directly (the only
@@ -922,21 +917,21 @@ object Bench {
     // FIVE reps like the wide-noise batch rows: r12's published 10× drain
     // read 39% above an idle rerun (9.671 s vs 5.940 s) — min-of-3 still
     // let a steal window through on the longest-running row class
-    val drain1xTimes = (0 until 5).map(_ => tailDrainSeconds(spark, tail1x))
-    val drain10xTimes = (0 until 5).map(_ => tailDrainSeconds(spark, tail10x))
+    val drain1xTimes = rep("tail drain", 5)(tailDrain(spark, tail1x))
+    val drain10xTimes = rep("x10 tail drain", 5)(tailDrain(spark, tail10x))
     val drain1x = drain1xTimes.min
     val drain10x = drain10xTimes.min
     // Streaming near-dup pair (r17): the tail drain's 1×/x10 device —
     // mult=10 suffix-disjoint replicas make the drain data-dominated
     // (see stageNearDupCorpus; at mult=1 both sides sat on the ~5 s
     // streaming fixed floor), banding is map-side, bucket state capped.
-    neardupDrainSeconds(spark,
-      stageNearDupCorpus(spark, warmDir, "warm", mult = 10))
+    warm("neardup drain")(neardupDrain(spark,
+      stageNearDupCorpus(spark, warmDir, "warm", mult = 10)))
     val nd1x = stageNearDupCorpus(spark, sfDir, "1x", mult = 10)
     val nd10x = stageNearDupCorpus(spark, x10Dir, "10x", mult = 10,
       contentKey = sfDir)
-    val nd1xTimes = (0 until 3).map(_ => neardupDrainSeconds(spark, nd1x))
-    val nd10xTimes = (0 until 3).map(_ => neardupDrainSeconds(spark, nd10x))
+    val nd1xTimes = rep("neardup drain", 3)(neardupDrain(spark, nd1x))
+    val nd10xTimes = rep("x10 neardup drain", 3)(neardupDrain(spark, nd10x))
     val streamResults = Seq(
       rec("streaming_tail_e2e", drain1xTimes),
       rec("x10_streaming_tail_e2e", drain10xTimes),
@@ -972,8 +967,7 @@ object Bench {
     }
     def llmDeepTimes(dir: String): Seq[Double] =
       rep("llm deep", 3)(llmDeepOnce(dir))
-    try llmDeepOnce(warmDir) // warm the shape
-    catch { case e: Throwable => System.err.println(s"[bench] llm deep warm: $e") }
+    warm("llm deep")(llmDeepOnce(warmDir))
     val llmDeepResults = Seq(
       rec("llm_generate_deep", llmDeepTimes(sfDir)),
       rec("x10_llm_generate_deep", llmDeepTimes(x10Dir)))

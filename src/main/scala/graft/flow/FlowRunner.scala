@@ -48,7 +48,6 @@ object FlowRunner {
   }
 
   def run(spark: SparkSession, flow: FlowDef,
-          materializeFanOut: Boolean = true,
           variables: Map[String, String] = Map.empty): FlowResult = {
     // the variable registry backs ${'name'} refs for attributes that do
     // not exist on the FlowFile (minifi.properties plane); the binding is
@@ -56,17 +55,53 @@ object FlowRunner {
     // builds don't race and nothing leaks to EL compiled outside a run —
     // the compiled plans embed the values as literals
     graft.el.ElCompiler.withVariables(variables) {
-    val incoming = flow.connections.groupBy(_.destinationId)
     // a processor output consumed by 2+ connections would otherwise be
     // recomputed once per downstream plan (separate DataFrame actions share
     // no scans — the FlowFrame.routed N-scan trap); persist those nodes so
     // the sweep materializes each shared stage once. At cluster scale this
     // is the standard persist-the-fan-out-point pattern. Processors read
     // their input in one pass and persist nothing themselves.
-    val fanOut: Set[String] =
-      if (!materializeFanOut) Set.empty
-      else flow.connections.groupBy(_.sourceId)
-        .filter(_._2.size > 1).keySet
+    val fanOut =
+      flow.connections.groupBy(_.sourceId).filter(_._2.size > 1).keySet
+    val persisted = collection.mutable.ArrayBuffer[DataFrame]()
+    val walked = walk(flow) { (p, input) =>
+      val out =
+        try Processors.apply(spark, p, input, flow.services)
+        catch {
+          case _: Processors.NoInputException =>
+            // never scheduled this sweep (no live upstream — e.g. its only
+            // connection failed group-scoped resolution)
+            Processors.emptyFlowFrame(spark)
+        }
+      if (!fanOut(p.id)) out
+      else {
+        val cached =
+          out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        persisted += cached
+        cached
+      }
+    }
+    FlowResult(flow, walked.outputs, walked.dropped, persisted.toSeq)
+    }
+  }
+
+  /** One walk of a flow: each processor's routed output, and the back
+    * edges dropped to break cycles. */
+  private[flow] case class Walk(outputs: Map[String, DataFrame],
+                                dropped: Seq[ConnectionDef])
+
+  /**
+   * The one DAG walk both interpretations run — the batch sweep ([[run]])
+   * and the streaming assembly (FlowStreaming.assemble) — so a connection
+   * behaves the same under every scheduling strategy, as the reference's
+   * one Connection class does (Connection.cpp:98-158). `hook` builds one
+   * processor's output from its wired input (None when no live edge feeds
+   * it); the walk owns everything between processors: relationship
+   * selection, queue TTL, drop-empty and CLONE lineage.
+   */
+  private[flow] def walk(flow: FlowDef)(
+      hook: (ProcessorDef, Option[DataFrame]) => DataFrame): Walk = {
+    val incoming = flow.connections.groupBy(_.destinationId)
     // Kahn's algorithm with cycle breaking: schedule any processor whose
     // live incoming edges all come from computed processors; when none is
     // ready (a cycle), drop the FIRST-DECLARED blocked processor's edges
@@ -89,65 +124,45 @@ object FlowRunner {
             .foreach(dropped += _)
       }
     }
+    val live = flow.connections.filterNot(dropped.contains)
     val outputs = collection.mutable.Map[String, DataFrame]()
     order.foreach { id =>
-      val p = flow.processor(id)
-      val ins = incoming.getOrElse(id, Nil).filterNot(dropped.contains)
-        .flatMap { c =>
-          outputs.get(c.sourceId).map { up =>
-            val selected =
-              if (c.relationships.isEmpty) up
-              else up.filter(col(FlowFrame.Relationship)
-                .isin(c.relationships: _*))
-            // queue TTL at the receiving end (Connection.cpp:153-158)
-            val alive0 = c.expirationMs match {
-              case Some(ms) => selected.filter(
-                unix_millis(current_timestamp()) -
-                  unix_millis(col(FlowFrame.EntryDate)) <= ms)
-              case None => selected
-            }
-            // "drop empty": zero-size FlowFiles never enqueue
-            // (Connection.cpp:98,124)
-            val alive =
-              if (!c.dropEmpty) alive0
-              else alive0.filter(coalesce(
-                length(col(FlowFrame.Content).cast("binary")), lit(0)) > 0)
-            val base = alive.withColumn(FlowFrame.Relationship,
-              lit(null: String))
-            // CLONE lineage (Provenance.h CLONE): a relationship feeding
-            // 2+ connections duplicates the FlowFile per queue
-            // (ProcessSession clone on multi-connection routing). Distinct
-            // relationships on separate edges are routing, not cloning.
-            // Each clone gets a deterministic child uuid and its parent
-            // recorded; the event attrs are stamped BEFORE the uuid swap
-            // so parents reference the original.
-            def overlap(o: ConnectionDef): Boolean =
-              o.relationships.isEmpty || c.relationships.isEmpty ||
-                o.relationships.exists(c.relationships.contains)
-            val isClone = flow.connections.filterNot(dropped.contains)
-              .exists(o => o.sourceId == c.sourceId && o.id != c.id &&
-                overlap(o))
-            if (!isClone) base
-            else Lineage.stampClone(base, c.id)
-          }
+      val ins = live.filter(_.destinationId == id).map { c =>
+        val up = outputs(c.sourceId)
+        val selected =
+          if (c.relationships.isEmpty) up
+          else up.filter(col(FlowFrame.Relationship).isin(c.relationships: _*))
+        // queue TTL at the receiving end (Connection.cpp:153-158)
+        val alive0 = c.expirationMs match {
+          case Some(ms) => selected.filter(
+            unix_millis(current_timestamp()) -
+              unix_millis(col(FlowFrame.EntryDate)) <= ms)
+          case None => selected
         }
-      val input = ins.reduceOption(_ unionByName _)
-      val out =
-        try Processors.apply(spark, p, input, flow.services)
-        catch {
-          case _: Processors.NoInputException =>
-            // never scheduled this sweep (no live upstream — e.g. its only
-            // connection failed group-scoped resolution)
-            Processors.emptyFlowFrame(spark)
-        }
-      outputs(id) =
-        if (fanOut(id))
-          out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else out
+        // "drop empty": zero-size FlowFiles never enqueue
+        // (Connection.cpp:98,124)
+        val alive =
+          if (!c.dropEmpty) alive0
+          else alive0.filter(coalesce(
+            length(col(FlowFrame.Content).cast("binary")), lit(0)) > 0)
+        val base = alive.withColumn(FlowFrame.Relationship, lit(null: String))
+        // CLONE lineage (Provenance.h CLONE): a relationship feeding 2+
+        // connections duplicates the FlowFile per queue (ProcessSession
+        // clone on multi-connection routing). Distinct relationships on
+        // separate edges are routing, not cloning. Each clone gets a
+        // deterministic child uuid and its parent recorded; the event attrs
+        // are stamped BEFORE the uuid swap so parents reference the
+        // original.
+        def overlap(o: ConnectionDef): Boolean =
+          o.relationships.isEmpty || c.relationships.isEmpty ||
+            o.relationships.exists(c.relationships.contains)
+        val isClone = live.exists(o =>
+          o.sourceId == c.sourceId && o.id != c.id && overlap(o))
+        if (!isClone) base else Lineage.stampClone(base, c.id)
+      }
+      outputs(id) = hook(flow.processor(id), ins.reduceOption(_ unionByName _))
     }
-    FlowResult(flow, outputs.toMap, dropped.toSeq,
-      order.filter(fanOut).map(outputs(_)).toSeq)
-    }
+    Walk(outputs.toMap, dropped.toSeq)
   }
 }
 

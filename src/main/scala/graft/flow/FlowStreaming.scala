@@ -1,6 +1,6 @@
 package graft.flow
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.FlowFrame
@@ -25,62 +25,48 @@ import graft.streaming.FlowRuntime
 object FlowStreaming {
 
   /** Assemble the flow as a streaming DataFrame ending at the single
-    * terminal processor's routed output. */
+    * terminal processor's routed output. The edges are wired by the same
+    * walk as the batch sweep (FlowRunner.walk); only the per-processor
+    * hook differs: the source becomes a stream, stateful stages dispatch
+    * to flatMapGroupsWithState, everything else is the batch dispatch. */
   def assemble(spark: SparkSession, flow: FlowDef): DataFrame = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val outgoing = flow.connections.groupBy(_.sourceId)
-    val sources = flow.processors.filter(p => !incoming.contains(p.id))
-    require(sources.size == 1,
-      s"streaming flow needs exactly one source, got ${sources.map(_.name)}")
-    val terminals = flow.processors.filter(p => !outgoing.contains(p.id))
-    require(terminals.size == 1,
-      s"streaming flow needs exactly one terminal, got ${terminals.map(_.name)}")
-
-    val outputs = collection.mutable.Map[String, DataFrame]()
+    val source = endpoint(flow, "source")
+    val terminal = endpoint(flow, "terminal")
     // EXPLICIT queue limits on the source's outgoing connection(s) become
     // per-trigger admission control (SURVEY §2.10: "max work queue size" →
     // a maxOffsetsPerTrigger-style rate limit; the strictest edge wins).
     // swapThreshold has no Spark analogue — spill subsumes it.
-    val srcConns = flow.connections.filter(_.sourceId == sources.head.id)
+    val srcConns = flow.connections.filter(_.sourceId == source.id)
     val limits = QueueLimits(
       maxCount = srcConns.flatMap(_.maxQueueSize).minOption,
       maxBytes = srcConns.flatMap(_.maxQueueDataSize).minOption)
-    outputs(sources.head.id) = streamSource(spark, sources.head, limits)
-    // processors are declared source-to-sink in every shipped example;
-    // walk until the terminal resolves (cycles rejected by the no-input rule)
-    var remaining = flow.processors.filterNot(p => outputs.contains(p.id))
-    while (remaining.nonEmpty) {
-      val ready = remaining.filter(p =>
-        incoming(p.id).forall(c => outputs.contains(c.sourceId)))
-      require(ready.nonEmpty, s"unresolvable flow (cycle?): " +
-        remaining.map(_.name).mkString(","))
-      ready.foreach { p =>
-        val ins = incoming(p.id).flatMap { c =>
-          outputs.get(c.sourceId).map { up =>
-            val sel = if (c.relationships.isEmpty) up
-              else up.filter(col(FlowFrame.Relationship)
-                .isin(c.relationships: _*))
-            val base = sel.withColumn(FlowFrame.Relationship,
-              lit(null: String))
-            // CLONE lineage on multi-connection routing — same rule as the
-            // batch runner (FlowRunner edge wiring): a relationship feeding
-            // 2+ connections duplicates the FlowFile per queue, each clone
-            // stamped with its parent and a deterministic child uuid
-            def overlap(o: ConnectionDef): Boolean =
-              o.relationships.isEmpty || c.relationships.isEmpty ||
-                o.relationships.exists(c.relationships.contains)
-            val isClone = flow.connections.exists(o =>
-              o.sourceId == c.sourceId && o.id != c.id && overlap(o))
-            if (!isClone) base else Lineage.stampClone(base, c.id)
-          }
-        }
-        val input = ins.reduceOption(_ unionByName _)
-        outputs(p.id) = statefulProcessor(spark, p, input)
-          .getOrElse(Processors.apply(spark, p, input, flow.services))
-      }
-      remaining = remaining.filterNot(p => outputs.contains(p.id))
+    // a stream has no next trigger to drain a broken cycle's queue into,
+    // so any edge the walk drops rejects the flow
+    def cycle(procs: Seq[ProcessorDef]): Nothing =
+      throw new IllegalArgumentException("unresolvable flow (cycle?): " +
+        procs.map(_.name).distinct.mkString(","))
+    val walked = FlowRunner.walk(flow) {
+      case (p, _) if p.id == source.id => streamSource(spark, p, limits)
+      case (p, Some(in)) => statefulProcessor(spark, p, in)
+        .getOrElse(Processors.apply(spark, p, Some(in), flow.services))
+      // every edge into p was dropped: p sits on a cycle
+      case (p, None) => cycle(Seq(p))
     }
-    outputs(terminals.head.id)
+    if (walked.dropped.nonEmpty)
+      cycle(walked.dropped.map(c => flow.processor(c.destinationId)))
+    walked.outputs(terminal.id)
+  }
+
+  /** The flow's one processor with no incoming (`end` = "source") or no
+    * outgoing ("terminal") connection. */
+  private def endpoint(flow: FlowDef, end: String): ProcessorDef = {
+    val linked = flow.connections.map(c =>
+      if (end == "source") c.destinationId else c.sourceId).toSet
+    flow.processors.filterNot(p => linked(p.id)) match {
+      case Seq(p) => p
+      case other => throw new IllegalArgumentException(
+        s"streaming flow needs exactly one $end, got ${other.map(_.name)}")
+    }
   }
 
   /** Run the assembled flow into `outRoot` (relationship-partitioned
@@ -108,12 +94,7 @@ object FlowStreaming {
    */
   def runCron(spark: SparkSession, flow: FlowDef, outRoot: String,
               checkpoint: String, maxDrains: Int): Seq[java.time.LocalDateTime] = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val source = flow.processors.filter(p => !incoming.contains(p.id)) match {
-      case Seq(s) => s
-      case other => throw new IllegalArgumentException(
-        s"streaming flow needs exactly one source, got ${other.map(_.name)}")
-    }
+    val source = endpoint(flow, "source")
     require(source.schedulingStrategy == "CRON_DRIVEN",
       s"runCron needs a CRON_DRIVEN source, got ${source.schedulingStrategy}")
     val cron = graft.streaming.Cron(source.schedulingPeriod)
@@ -142,13 +123,7 @@ object FlowStreaming {
   def runWithTerminalSink(spark: SparkSession, flow: FlowDef,
                           checkpoint: String,
                           outRootFallback: String): StreamingQuery = {
-    val incoming = flow.connections.groupBy(_.destinationId)
-    val outgoing = flow.connections.groupBy(_.sourceId)
-    val terminal = flow.processors.filter(p => !outgoing.contains(p.id)) match {
-      case Seq(t) => t
-      case other => throw new IllegalArgumentException(
-        s"need exactly one terminal, got ${other.map(_.name)}")
-    }
+    val terminal = endpoint(flow, "terminal")
     val props = terminal.properties
     terminal.kind match {
       case "PutFile" =>
@@ -156,12 +131,12 @@ object FlowStreaming {
         // results already (Processors dispatch); its DIRECTORY becomes
         // the partitioned sink root for the flow's upstream edge instead,
         // which is the scan-once bulk-write shape at scale
-        val upstream = assembleUpTo(spark, flow, incoming, terminal)
+        val upstream = assembleUpTo(spark, flow, terminal)
         FlowRuntime.runAvailable(
           FlowRuntime.relationshipSink(upstream, props("Directory")),
           checkpoint)
       case "PublishKafka" =>
-        val upstream = assembleUpTo(spark, flow, incoming, terminal)
+        val upstream = assembleUpTo(spark, flow, terminal)
         val opts = graft.sources.Kafka.publishOptions(
           graft.sources.Kafka.PublishProps(
             brokers = props("Known Brokers"),
@@ -182,37 +157,36 @@ object FlowStreaming {
   /** Assemble the flow but stop at (exclude) the given terminal — its
     * INPUT edge is the stream handed to a native sink. */
   private def assembleUpTo(spark: SparkSession, flow: FlowDef,
-                           incoming: Map[String, Seq[ConnectionDef]],
                            terminal: ProcessorDef): DataFrame = {
     val trimmed = FlowDef(flow.name,
       flow.processors.filterNot(_.id == terminal.id),
       flow.connections.filterNot(_.destinationId == terminal.id),
       flow.services)
     val upstreamOut = assemble(spark, trimmed)
-    val rels = incoming.getOrElse(terminal.id, Nil).flatMap(_.relationships)
+    val rels = flow.connections.filter(_.destinationId == terminal.id)
+      .flatMap(_.relationships)
     if (rels.isEmpty) upstreamOut
     else upstreamOut.filter(col(FlowFrame.Relationship).isin(rels: _*))
   }
+
+  /** Arrival order within a stateful stage's key: the source's own
+    * sequence (tail line offset / listener seq) —
+    * monotonically_increasing_id is not available on streaming frames. */
+  private val arrivalOrder: Column = coalesce(
+    FlowFrame.attr("tailfile.lineOffset"), FlowFrame.attr("net.seq"),
+    lit("0")).cast("long")
 
   /** Stateful processors that only exist in streaming mode — these use
     * flatMapGroupsWithState (streaming/StatefulOps), so the batch dispatch
     * cannot host them; None falls through to Processors.apply. */
   private def statefulProcessor(spark: SparkSession, p: ProcessorDef,
-                                input: Option[DataFrame]): Option[DataFrame] = {
+                                in: DataFrame): Option[DataFrame] = {
     import spark.implicits._
     val props = p.properties
     def prop(name: String, default: String): String =
       props.getOrElse(name, default)
     p.kind match {
       case "DefragmentText" =>
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
-        // source key = filename attr (the per-file reassembly unit);
-        // arrival order from the source's own sequence (tail line offset /
-        // listener seq) — monotonically_increasing_id is not available on
-        // streaming frames
-        val ordCol = coalesce(FlowFrame.attr("tailfile.lineOffset"),
-          FlowFrame.attr("net.seq"), lit("0")).cast("long")
         // the reference TailFile keeps the delimiter in each FlowFile's
         // content (TailFile.cpp:134) and DefragmentText concatenates
         // payloads raw — our tail source strips the '\n', so restore it
@@ -220,9 +194,10 @@ object FlowStreaming {
         val contentCol = when(FlowFrame.attr("tailfile.lineOffset").isNotNull,
           concat(col(FlowFrame.Content).cast("string"), lit("\n")))
           .otherwise(col(FlowFrame.Content).cast("string"))
+        // source key = filename attr (the per-file reassembly unit)
         val frags = in.select(
           coalesce(FlowFrame.attr("filename"), lit("default")).as("source"),
-          ordCol.as("ord"),
+          arrivalOrder.as("ord"),
           contentCol.as("content"),
           lit(-1L).as("offset"),
           col(FlowFrame.Uuid).cast("string").as("uuid"))
@@ -254,15 +229,11 @@ object FlowStreaming {
         // Apache NiFi's public DetectDuplicate surface over the stateful
         // dedup op: Cache Entry Identifier (EL; default = content md5)
         // keys the state, Age Off Duration expires idle keys
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
         val keyCol = props.get("Cache Entry Identifier")
           .map(el => graft.el.ElCompiler.template(el))
           .getOrElse(md5(col(FlowFrame.Content).cast("binary")))
-        val ordCol = coalesce(FlowFrame.attr("tailfile.lineOffset"),
-          FlowFrame.attr("net.seq"), lit("0")).cast("long")
         val keyed = in.select(keyCol.cast("string").as("key"),
-          ordCol.as("ord"),
+          arrivalOrder.as("ord"),
           col(FlowFrame.Content).cast("string").as("content"),
           col(FlowFrame.Uuid).cast("string").as("uuid"))
           .as[graft.streaming.StatefulOps.Keyed]
@@ -280,13 +251,10 @@ object FlowStreaming {
 
       case "MergeContent"
         if prop("Merge Strategy", "Defragment") == "Bin-Packing Algorithm" =>
-        val in = input.getOrElse(throw new IllegalArgumentException(
-          s"'${p.name}' has no incoming connection"))
         val entries = in.select(
           coalesce(props.get("Correlation Attribute Name")
             .map(FlowFrame.attr).getOrElse(lit("")), lit("")).as("correlation"),
-          coalesce(FlowFrame.attr("tailfile.lineOffset"),
-            FlowFrame.attr("net.seq"), lit("0")).cast("long").as("ord"),
+          arrivalOrder.as("ord"),
           col(FlowFrame.Content).cast("string").as("content"),
           col(FlowFrame.Uuid).cast("string").as("uuid"))
           .as[graft.streaming.StatefulOps.Entry]

@@ -2309,6 +2309,89 @@ class FlowSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/relationship=errors").count() === 2)
   }
 
+  test("one walk, two modes: a 'drop empty' edge drops the same blanked " +
+       "lines in the batch sweep and the streaming assembly") {
+    val dir = tmpDir("parity-in")
+    Files.write(Paths.get(dir, "app.log"),
+      "keep one\nDEBUG noise\nkeep two\nDEBUG more\nkeep three\n".getBytes)
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: tail
+         |  id: t
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $dir/app.log
+         |- name: blank
+         |  id: b
+         |  class: org.apache.nifi.minifi.processors.ReplaceText
+         |  Properties:
+         |    Evaluation Mode: Entire text
+         |    Search Value: "^DEBUG.*$$"
+         |    Replacement Value: ''
+         |- name: sink
+         |  id: s
+         |  class: org.apache.nifi.minifi.processors.UpdateAttribute
+         |  Properties:
+         |    marker: seen
+         |Connections:
+         |- {id: c1, source id: t, source relationship names: [success], destination id: b}
+         |- {id: c2, source id: b, source relationship names: [success], destination id: s, drop empty: true}
+         |""".stripMargin
+    val expected = Seq("keep one", "keep three", "keep two")
+    def contents(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("content").cast("string")).collect().map(_.getString(0))
+        .toSeq.sorted
+    assert(contents(FlowRunner.run(spark, FlowConfig.parse(yml))
+      .output("sink")) === expected)
+    val out = tmpDir("parity-sink")
+    FlowStreaming.run(spark, FlowConfig.parse(yml), out,
+      tmpDir("parity-ckpt")).stop()
+    assert(contents(spark.read.parquet(s"$out/relationship=success")) ===
+      expected)
+  }
+
+  test("a cycle the one-source check misses: streaming rejects it, the " +
+       "batch sweep drops the back edge") {
+    val dir = tmpDir("cycle-in")
+    Files.write(Paths.get(dir, "app.log"), "x\ny\n".getBytes)
+    def proc(name: String) =
+      s"""- name: $name
+         |  id: $name
+         |  class: org.apache.nifi.minifi.processors.UpdateAttribute
+         |  Properties:
+         |    visited: $name
+         |""".stripMargin
+    def edge(id: String, from: String, to: String) =
+      s"- {id: $id, source id: $from, source relationship names: " +
+        s"[success], destination id: $to}\n"
+    def flow(edges: String) =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: src
+         |  id: src
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $dir/app.log
+         |""".stripMargin + proc("a") + proc("b") + proc("sink") +
+        "Connections:\n" + edges
+    val yml = flow(edge("c1", "src", "a") + edge("c2", "a", "b") +
+      edge("c3", "b", "a") + edge("c4", "b", "sink"))
+    // the second shape: a is fed only from inside the cycle, so breaking
+    // it leaves a with no input at all
+    val detached = flow(edge("c1", "src", "sink") + edge("c2", "a", "b") +
+      edge("c3", "b", "a") + edge("c4", "b", "sink"))
+    Seq(yml, detached).foreach { y =>
+      val err = intercept[IllegalArgumentException](
+        FlowStreaming.assemble(spark, FlowConfig.parse(y)))
+      assert(err.getMessage.contains("unresolvable flow (cycle?)"),
+        err.getMessage)
+    }
+    val batch = FlowRunner.run(spark, FlowConfig.parse(yml))
+    assert(batch.droppedEdges.map(_.id) === Seq("c3"))
+    assert(batch.output("sink").count() === 2)
+  }
+
   test("RouteText flow reassembles per-relationship content with grouping") {
     val yml =
       """MiNiFi Config Version: 3
