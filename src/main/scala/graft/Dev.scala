@@ -5,7 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{ExplainMode, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -24,7 +27,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * `<outDir>/<query>.txt`: the formatted final plan, then one
  * `== staged segment <n> ==` section per executed staging barrier, whose
  * plan the barrier otherwise truncates out of the final one. It prints the
- * exchange and codegen-operator counts over the whole file.
+ * exchange and codegen-operator counts over the whole file, and the
+ * [[pushedFilters]] count over the same plans.
  *
  * A *segment* is the work a query does up to one executed
  * [[graft.pipeline.Staging]] barrier — a `localCheckpoint`/`checkpoint`
@@ -122,6 +126,37 @@ object Dev {
     }
   }
 
+  /** Filter nodes under a round-robin exchange in a run's final plan and
+    * its barrier plans, each counted once. A filter over `repartition(n)`
+    * (SparkEntry's `docsPar`) sinks below the exchange and runs on the
+    * pre-shuffle partitions — one task on a one-file scan — and the
+    * projection under it runs again after the shuffle. Stage the
+    * expensive columns first and filter the staged frame. */
+  def pushedFilters(r: Run): Int = {
+    def walk(p: SparkPlan, underRoundRobin: Boolean): Int = {
+      val rr = underRoundRobin || (p match {
+        case e: ShuffleExchangeLike =>
+          e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      })
+      val children = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case _ => p.children
+      }
+      (p match {
+        case _: FilterExec if underRoundRobin => 1
+        case _ => 0
+      }) + children.map(walk(_, rr)).sum
+    }
+    (r.df.queryExecution +: r.segments.flatMap(_.barrier))
+      .map(qe => walk(qe.executedPlan, underRoundRobin = false)).sum
+  }
+
+  /** Execute the frame itself, so its own AQE plan settles: a write
+    * would plan a separate command and leave it non-final. */
+  def execute(df: DataFrame): Unit = df.queryExecution.toRdd.foreach(_ => ())
+
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -149,10 +184,7 @@ object Dev {
     def formatted(qe: QueryExecution): String =
       qe.explainString(ExplainMode.fromString("formatted"))
     names.foreach { name =>
-      // execute THIS frame: a write would plan a separate command and
-      // leave the frame's own AQE plan non-final
-      val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(
-        _.queryExecution.toRdd.foreach(_ => ()))
+      val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(execute)
       val barriers = r.segments.flatMap(_.barrier)
       val plan = formatted(r.df.queryExecution) +
         barriers.zipWithIndex.map { case (qe, i) =>
@@ -166,7 +198,8 @@ object Dev {
       // formatted mode tags each codegen'd operator with [codegen id : n]
       val codegenOps = lines.count(_.contains("codegen id"))
       println(s"[dev plan] $name exchanges=$exchanges " +
-        s"codegen-operators=$codegenOps barriers=${barriers.size} " +
+        s"codegen-operators=$codegenOps pushed-filters=${pushedFilters(r)} " +
+        s"barriers=${barriers.size} " +
         s"-> $outDir/$name.txt")
     }
   }

@@ -2491,7 +2491,10 @@ object SparkEntry {
             lit(" likes"))).otherwise(lit("")),
         when(col("doc_id") % 4 === 0, lit("\nsubscribe")).otherwise(lit("")))
       val fmap = TextAnalysis.refinedWebLineCorrections(page).toMap
-      // stage 1 survivors staged: the frame feeds BOTH dedup inputs.
+      // stage 1 staged BEFORE its keep filter: a filter over docsPar
+      // sinks below the round-robin exchange to the one-partition scan,
+      // running the line rules serially there and again after the
+      // shuffle. The survivors feed BOTH dedup inputs.
       // NB the cleaned column is renamed to `text` in a SECOND select:
       // aliasing it to `text` in the same projection would make the
       // sibling keep expression's col("text") resolve to the ALIAS via
@@ -2499,10 +2502,10 @@ object SparkEntry {
       // survivors), not the input column
       val corrected = docs.select(col("doc_id"), col("source"),
           fmap("cleaned").as("cleanedText"), fmap("keep").as("rwKeep"))
+        .staged
         .filter(col("rwKeep"))
         .select(col("doc_id"), col("source"),
           col("cleanedText").as("text"))
-        .staged
       // stage 2: paragraph dedup, prior = the src0 history
       val dd = Dedup.dedupSegmentsBloom(
         corrected.filter(col("source") =!= "src0"), col("doc_id"),
@@ -2513,8 +2516,8 @@ object SparkEntry {
         .staged // feeds scoring AND the output join
       // stage 3: classifier trained on the labeled RAW corpus, scoring
       // the dedup survivors, top decile kept
-      val (w, bias) = Classifier.logisticModel(docs, col("doc_id"),
-        col("text"), col("source").isin("src0", "src1"), steps = 2)
+      val (w, bias) = Classifier.logisticModel(docs, col("text"),
+        col("source").isin("src0", "src1"), steps = 2)
       val scored = Classifier.logisticApply(dd, col("docId"), col("text"),
         w, bias).staged // feeds the threshold AND the output
       val wCum = Window.orderBy(col("probMicro").desc)
@@ -2589,13 +2592,15 @@ object SparkEntry {
       val cleanedDocs = docsPar(s, dir)
         .select(col("doc_id"), c4("cleaned").as("cleaned"),
           c4("keep").as("c4_keep"))
-        .filter(col("c4_keep"))
-        // stage the C4 survivors: CollapseProject would otherwise inline
+        // stage the C4 pass: CollapseProject would otherwise inline
         // the whole page-derivation + C4 expression into EVERY reference
         // the Gopher rule set makes to `cleaned` (~20 of them), paying the
         // cleaning arithmetic ~20× per row (measured 1.7 s -> 1.0 s at
         // sf0.1). Same write-between-passes staging pipeline_e2e uses.
+        // Staged BEFORE the keep filter: a filter over docsPar sinks
+        // below its round-robin exchange to the one-partition scan.
         .staged
+        .filter(col("c4_keep"))
       val gopher = TextAnalysis.gopherRules(col("cleaned"), minWords = 20,
         minStopHits = 1).toMap
       val filtered = cleanedDocs

@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * slice), digest straight over the zero-copy slices, and take the bucket
  * from the raw digest bytes — no hex, no parse, no per-gram string.
  *
- * Two kernel classes:
+ * Three kernel classes:
  *  - bucket-ARRAY generators (training passes): per-document long arrays
  *    of (packed) bucket ids, exploded into the config-bounded histogram
  *    aggs — the explode survives but carries longs instead of strings+md5.
@@ -47,6 +47,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *    model table embedded as a dense long array — the corpus-scale
  *    explode AND the groupBy(docId) Exchange disappear outright
  *    (guide §2.4).
+ *  - an ARRAY scorer ([[BucketWeightSum]]): the table-lookup sum over an
+ *    already-staged bucket array, for loops that score the same
+ *    documents once per round (the logistic trainer's epochs).
  *
  * NULL text: every expression here returns NULL (the historical
  * formulations exploded a null gram array, dropping the document's rows —
@@ -481,5 +484,51 @@ case class KnScore(child: Expression, buckets: Int,
   }
 
   override protected def withNewChildInternal(newChild: Expression): KnScore =
+    copy(child = newChild)
+}
+
+/**
+ * Σ weights(b) over a staged bucket array (a [[TokenBuckets]] result):
+ * the per-document dot product of the logistic trainer's epochs, read
+ * from the array instead of re-hashing the text. Each token adds its own
+ * weight, so a repeated bucket contributes cnt·w — the historical
+ * `sum(cnt · w)` of the per-(doc, bucket) formulation. The sum is
+ * `Math.addExact`: a long overflow throws, as ANSI `sum` does.
+ * `weights` is the dense ≤B-row model table. NULL array → NULL.
+ */
+case class BucketWeightSum(child: Expression, weights: Array[Long])
+    extends UnaryExpression {
+  override def prettyName: String = "graft_bucket_weight_sum"
+
+  override def dataType: DataType = LongType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ARRAY<BIGINT NOT NULL> input, got ${other.sql}")
+  }
+
+  override protected def nullSafeEval(a: Any): Any = {
+    val arr = a.asInstanceOf[ArrayData]
+    var sum = 0L
+    var i = 0
+    while (i < arr.numElements()) {
+      sum = Math.addExact(sum, weights(arr.getLong(i).toInt)); i += 1
+    }
+    sum
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val w = ctx.addReferenceObj("weights", weights, "long[]")
+    val i = ctx.freshName("i")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = 0L;
+         |for (int $i = 0; $i < $a.numElements(); $i++) {
+         |  ${ev.value} = java.lang.Math.addExact(${ev.value},
+         |    $w[(int) $a.getLong($i)]);
+         |}""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BucketWeightSum =
     copy(child = newChild)
 }

@@ -141,20 +141,30 @@ object Classifier {
    *             all truncate toward zero, so the update replays exactly)
    *
    * Weights live in integer micro-nats as driver metadata (≤ `buckets`
-   * rows, the DSIR/Lloyd bounded-model device) re-embedded as a map
-   * literal each epoch. Full-batch GD (not fastText's SGD) is the
+   * rows, the DSIR/Lloyd bounded-model device) re-embedded as a dense
+   * kernel table each epoch. Full-batch GD (not fastText's SGD) is the
    * DOCUMENTED deviation: per-example updates are order-dependent and
    * cannot be engine-replayed; the batch gradient is an
    * order-independent sum, costs the same one pass per epoch, and is
    * the standard distributed formulation.
    *
-   * Scale shape: ONE corpus-scale token pass builds the per-(doc,
-   * bucket) count sliver (localCheckpoint'd — every epoch reads it, the
-   * corpus text is touched exactly once); each epoch is one doc-keyed
-   * scoring agg + one doc-keyed residual join + one bucket-keyed
-   * gradient agg (map-side partial into ≤ buckets rows; the gradient
-   * sums in DECIMAL(38,0) — corpus-scale residual mass overflows a
-   * long at the 100 TB design point).
+   * Each input row is one document: ids are unique, as the oracle's
+   * `GROUP BY doc_id` assumes (training never groups by id).
+   *
+   * Scale shape: ONE corpus-scale token pass stages each document's
+   * bucket array with its label (a map-only barrier — every epoch reads
+   * it, the corpus text is touched exactly once). Each epoch is then ONE
+   * aggregate: a map-side kernel turns the document's array into its
+   * residual r under the current weights, and
+   * `explode(toks ++ [-1]).groupBy(b)` sums `CAST(r AS DECIMAL(38,0))`
+   * per bucket — Σ cnt·r, since a bucket repeats once per token — with
+   * the sentinel bucket −1 carrying the bias gradient Σ r (and, by its
+   * count, the document total). The partial aggregate collapses each
+   * partition to ≤ buckets+1 rows, so an epoch shuffles at most
+   * (buckets+1)·partitions rows and nothing keyed by document; the
+   * decimal sums are exact, so the weights do not depend on the
+   * partitioning (corpus-scale residual mass overflows a long at the
+   * 100 TB design point).
    *
    * Returns (docId, nTokens, dotMicro, probMicro) under the final
    * weights — dotMicro = Σ cnt·w exact, probMicro the micro-rounded
@@ -163,77 +173,77 @@ object Classifier {
   def logisticScores(df: DataFrame, idCol: Column, textCol: Column,
                      isHq: Column, buckets: Int = 1024, steps: Int = 2,
                      lrNum: Long = 1L, lrDen: Long = 2L): DataFrame = {
-    val (w, bias) = logisticModel(df, idCol, textCol, isHq, buckets,
-      steps, lrNum, lrDen)
+    val (w, bias) = logisticModel(df, textCol, isHq, buckets, steps,
+      lrNum, lrDen)
     logisticApply(df, idCol, textCol, w, bias, buckets)
   }
 
   /** Train the logistic model alone: (bucket → micro-nat weight, bias)
     * — bounded driver metadata, appliable to ANY text frame (the DCLM
     * composition trains on the labeled corpus and scores dedup
-    * survivors). See [[logisticScores]] for the algorithm. */
-  def logisticModel(df: DataFrame, idCol: Column, textCol: Column,
-                    isHq: Column, buckets: Int = 1024, steps: Int = 2,
-                    lrNum: Long = 1L, lrDen: Long = 2L): (Map[Long, Long], Long) = {
+    * survivors). See [[logisticScores]] for the algorithm and the
+    * one-row-per-document contract. */
+  def logisticModel(df: DataFrame, textCol: Column, isHq: Column,
+                    buckets: Int = 1024, steps: Int = 2, lrNum: Long = 1L,
+                    lrDen: Long = 2L): (Map[Long, Long], Long) = {
+    import org.apache.spark.sql.GraftColumnShim.{column => kcol, expression => kexpr}
     require(steps >= 1 && lrNum > 0 && lrDen > 0, "bad GD config")
-    // r21 NOTE (tried, measured, REVERTED — the r20 keeper-key lesson):
-    // building this sliver with a per-doc bucket-histogram kernel
-    // (map-side (b, cnt) struct arrays, no groupBy Exchange) measured
-    // SLOWER (quality_logistic 2.04 -> 2.68 s, dclm_e2e 4.25 -> 4.88 s
-    // min-of-5 A/B at sf0.1): the map-side partial agg already collapses
-    // the token explode to ~distinct-(doc, bucket) rows before the
-    // shuffle — docs live in one partition each, so the Exchange carries
-    // sliver-sized data at ANY corpus size — while the kernel added a
-    // per-entry object-row materialization on 100% of entries.
-    val toks = hashedTokens(df, idCol, textCol, isHq, buckets)
-    val cnts = toks.groupBy("docId", "b")
-      .agg(count(lit(1)).as("cnt"), first(col("isHq")).as("isHq"))
-      .staged // every epoch reads this, the corpus only once
-    val docs = cnts.groupBy("docId")
-      .agg(sum("cnt").as("n"), first(col("isHq")).as("isHq"))
+    // NOTE: the barrier stages the raw TokenBuckets array (one entry per
+    // token), not counts: r21 measured a per-doc (bucket, count)
+    // histogram kernel slower than a groupBy(doc, bucket) count sliver,
+    // and the array needs neither — BucketWeightSum reads it for the dot
+    // product, and the epoch's explode feeds the bucket-keyed partial
+    // aggregate directly. Every epoch reads the staged arrays, the corpus
+    // only once. Null text (a NULL array) has no tokens; it is dropped
+    // AFTER the barrier, since a filter over a repartitioned input sinks
+    // below its exchange.
+    val toks = df
+      .select(isHq.as("isHq"),
+        kcol(graft.functions.TokenBuckets(kexpr(textCol), buckets)).as("toks"))
       .staged
-    val nDocs = docs.count()
-    require(nDocs > 0, "logistic training needs a non-empty corpus")
+      .filter(col("toks").isNotNull)
+    val sentinel = -1L
 
-    def score(w: Map[Long, Long], bias: Long): DataFrame = {
-      val wCol =
-        if (w.isEmpty) lit(0L)
-        else coalesce(element_at(typedlit(w), col("b")), lit(0L))
-      val s = cnts.groupBy("docId")
-        .agg(sum(col("cnt") * wCol).as("dotMicro"))
-      docs.join(s, "docId")
-        .withColumn("probMicro",
-          round(lit(1e6) / (lit(1.0) + exp(
-            -(col("dotMicro").cast("double") / col("n").cast("double")
-              + bias.toDouble) / 1e6))).cast("long"))
-    }
-
-    var w = Map.empty[Long, Long]
+    var w = Array.fill(buckets)(0L)
+    var seen = Set.empty[Long]
     var bias = 0L
+    var nDocs = 0L
     var t = 0
     while (t < steps) {
-      val scored = score(w, bias)
-        .withColumn("r",
-          when(col("isHq"), lit(1000000L)).otherwise(lit(0L))
-            - col("probMicro"))
-      val grads = cnts.join(scored.select("docId", "r"), "docId")
+      val dot = kcol(graft.functions.BucketWeightSum(kexpr(col("toks")), w))
+      val probMicro = round(lit(1e6) / (lit(1.0) + exp(
+        -(dot.cast("double") / size(col("toks")).cast("double")
+          + bias.toDouble) / 1e6))).cast("long")
+      // r in its own projection: the explode below must not re-run the
+      // kernel once per token
+      val rows = toks
+        .select(col("toks"),
+          (when(col("isHq"), lit(1000000L)).otherwise(lit(0L)) - probMicro)
+            .as("r"))
+        .select(explode(concat(col("toks"), array(lit(sentinel)))).as("b"),
+          col("r"))
         .groupBy("b")
-        .agg(sum(expr("CAST(cnt AS DECIMAL(38,0)) * r")).as("g"))
-        .collect().map(x => x.getAs[Long]("b") ->
-          BigInt(x.getAs[java.math.BigDecimal]("g").toBigInteger)).toMap
-      val bg = BigInt(scored
-        .agg(coalesce(sum(expr("CAST(r AS DECIMAL(38,0))")),
-          lit(java.math.BigDecimal.ZERO)).as("g"))
-        .collect()(0).getAs[java.math.BigDecimal]("g").toBigInteger)
+        .agg(sum(expr("CAST(r AS DECIMAL(38,0))")).as("g"),
+          count(lit(1)).as("n"))
+        .collect()
+      val g = rows.map(x => x.getAs[Long]("b") ->
+        BigInt(x.getAs[java.math.BigDecimal]("g").toBigInteger)).toMap
+      if (t == 0) {
+        nDocs = rows.find(_.getAs[Long]("b") == sentinel)
+          .fold(0L)(_.getAs[Long]("n"))
+        require(nDocs > 0, "logistic training needs a non-empty corpus")
+        seen = g.keySet - sentinel
+      }
       val den = BigInt(lrDen) * nDocs
-      w = (w.keySet ++ grads.keySet).iterator.map { b =>
-        b -> (w.getOrElse(b, 0L) +
-          ((BigInt(lrNum) * grads.getOrElse(b, BigInt(0))) / den).toLong)
-      }.toMap
-      bias = bias + ((BigInt(lrNum) * bg) / den).toLong
+      val next = w.clone()
+      seen.foreach { b =>
+        next(b.toInt) += ((BigInt(lrNum) * g(b)) / den).toLong
+      }
+      w = next
+      bias += ((BigInt(lrNum) * g(sentinel)) / den).toLong
       t += 1
     }
-    (w, bias)
+    (seen.iterator.map(b => b -> w(b.toInt)).toMap, bias)
   }
 
   /** Score any text frame under a trained logistic model: one map-side

@@ -52,6 +52,20 @@ class DevSpec extends SparkSpec {
     assert(barrierSections("none") === 0)
   }
 
+  test("Dev.pushedFilters: no filter sinks below docsPar's round-robin " +
+       "exchange in dclm_e2e or curate_filters_e2e; a filter over a " +
+       "repartition counts") {
+    Seq("dclm_e2e", "curate_filters_e2e").foreach { q =>
+      val r = Dev.run(spark)(SparkEntry.queries(q)(spark, sfDir))(Dev.execute)
+      assert(Dev.pushedFilters(r) === 0, q)
+    }
+    val sunk = Dev.run(spark)(
+      spark.read.parquet(s"$sfDir/documents.parquet").repartition(2)
+        .filter(org.apache.spark.sql.functions.col("doc_id") % 3 === 0))(
+      Dev.execute)
+    assert(Dev.pushedFilters(sunk) === 1)
+  }
+
   test("Dev.time segments partition the run: per-segment job counts sum " +
        "to the listener's total for the query") {
     val Seq(("dclm_e2e", Seq(run))) = Dev.time(spark, sfDir, 1, Seq("dclm_e2e"))

@@ -335,6 +335,43 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("graft_bucket_weight_sum: interpreted and codegen'd evaluation agree " +
+       "with the plain sum; NULL array -> NULL; long overflow throws like " +
+       "ANSI sum") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def projections(weights: Array[Long]) = {
+      val e = graft.functions.BucketWeightSum(
+        BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true),
+        weights)
+      Seq("interpreted" -> InterpretedUnsafeProjection.createProjection(Seq(e)),
+        "codegen" -> GenerateUnsafeProjection.generate(Seq(e)))
+    }
+    def row(bs: Long*) = InternalRow(new GenericArrayData(bs.toArray))
+    val w = Array(-7L, 0L, 3L, 1000000007L, -2L)
+    val inputs = Seq(Seq.empty[Long], Seq(2L), Seq(0L, 0L, 4L),
+      Seq(3L, 3L, 3L, 1L, 2L), (0 until 50).map(i => (i % 5).toLong))
+    projections(w).foreach { case (mode, p) =>
+      inputs.foreach { bs =>
+        assert(p(row(bs: _*)).getLong(0) === bs.map(b => w(b.toInt)).sum,
+          s"$mode $bs")
+      }
+      assert(p(InternalRow(null)).isNullAt(0), mode)
+    }
+    projections(Array(Long.MaxValue, 1L)).foreach { case (mode, p) =>
+      assert(p(row(0L)).getLong(0) === Long.MaxValue, mode)
+      intercept[ArithmeticException](p(row(0L, 1L)))
+    }
+    // the same overflow under ANSI sum
+    val ansi = intercept[Exception](
+      spark.range(2).select(when(col("id") === 0, lit(Long.MaxValue))
+        .otherwise(lit(1L)).as("v")).agg(sum("v")).collect())
+    assert(ansi.getMessage.contains("overflow"), ansi.getMessage)
+  }
+
   test("kernel lnMicro is bit-identical to round(log(x)*1e6, 0) over a " +
        "dense integer battery (the KN float exposure)") {
     // 1..50000 densely, then the large-argument band the den/num terms

@@ -2278,6 +2278,115 @@ class PipelineSpec extends SparkSpec {
     assert(again === out)
   }
 
+  /** The per-(doc, bucket) groupBy formulation of the logistic trainer:
+    * a count sliver, a doc-keyed scoring aggregate, a residual join and
+    * a bucket-keyed gradient aggregate per epoch, plus a separate bias
+    * sum. Kept as the reference the bucket-aggregate trainer must match
+    * bit for bit. */
+  private def refLogisticModel(df: org.apache.spark.sql.DataFrame,
+                               buckets: Int, steps: Int): (Map[Long, Long], Long) = {
+    import org.apache.spark.sql.GraftColumnShim.{column => kcol, expression => kexpr}
+    val (lrNum, lrDen) = (1L, 2L)
+    val toks = df.select(col("doc_id").as("docId"), col("hq").as("isHq"),
+      explode(kcol(graft.functions.TokenBuckets(kexpr(col("text")), buckets)))
+        .as("b"))
+    val cnts = toks.groupBy("docId", "b")
+      .agg(count(lit(1)).as("cnt"), first(col("isHq")).as("isHq"))
+    val docs = cnts.groupBy("docId")
+      .agg(sum("cnt").as("n"), first(col("isHq")).as("isHq"))
+    val nDocs = docs.count()
+    def score(w: Map[Long, Long], bias: Long) = {
+      val wCol =
+        if (w.isEmpty) lit(0L)
+        else coalesce(element_at(typedlit(w), col("b")), lit(0L))
+      val s = cnts.groupBy("docId").agg(sum(col("cnt") * wCol).as("dotMicro"))
+      docs.join(s, "docId").withColumn("probMicro",
+        round(lit(1e6) / (lit(1.0) + exp(
+          -(col("dotMicro").cast("double") / col("n").cast("double")
+            + bias.toDouble) / 1e6))).cast("long"))
+    }
+    var w = Map.empty[Long, Long]
+    var bias = 0L
+    (1 to steps).foreach { _ =>
+      val scored = score(w, bias).withColumn("r",
+        when(col("isHq"), lit(1000000L)).otherwise(lit(0L)) - col("probMicro"))
+      val grads = cnts.join(scored.select("docId", "r"), "docId")
+        .groupBy("b")
+        .agg(sum(expr("CAST(cnt AS DECIMAL(38,0)) * r")).as("g"))
+        .collect().map(x => x.getAs[Long]("b") ->
+          BigInt(x.getAs[java.math.BigDecimal]("g").toBigInteger)).toMap
+      val bg = BigInt(scored
+        .agg(coalesce(sum(expr("CAST(r AS DECIMAL(38,0))")),
+          lit(java.math.BigDecimal.ZERO)).as("g"))
+        .collect()(0).getAs[java.math.BigDecimal]("g").toBigInteger)
+      val den = BigInt(lrDen) * nDocs
+      w = (w.keySet ++ grads.keySet).iterator.map { b =>
+        b -> (w.getOrElse(b, 0L) +
+          ((BigInt(lrNum) * grads.getOrElse(b, BigInt(0))) / den).toLong)
+      }.toMap
+      bias += ((BigInt(lrNum) * bg) / den).toLong
+    }
+    (w, bias)
+  }
+
+  test("logisticModel: the one-aggregate-per-epoch trainer returns exactly " +
+       "the (w, bias) of the groupBy formulation — steps 1..3, null text, " +
+       "repeated tokens, all-negative labels, bucket collisions") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "aaa aaa aaa bbb", true),
+      (2L, "bbb ccc ddd", false),
+      (3L, null, true), // null text: no tokens, not a document
+      (4L, "eee eee fff fff fff ggg", true),
+      (5L, "the quick brown fox jumps over the lazy dog", false),
+      (6L, "", false), // one empty token
+      (7L, "aaa ggg zzz zzz", true),
+      (8L, "ccc  ddd", false)) // the empty token between the spaces
+      .toDF("doc_id", "text", "hq")
+    val allNeg = corpus.withColumn("hq", lit(false))
+    for ((df, label) <- Seq(corpus -> "mixed", allNeg -> "all-false");
+         buckets <- Seq(5, 1024); steps <- 1 to 3) {
+      val got = Classifier.logisticModel(df.repartition(3), col("text"),
+        col("hq"), buckets = buckets, steps = steps)
+      assert(got === refLogisticModel(df, buckets, steps),
+        s"$label buckets=$buckets steps=$steps")
+    }
+  }
+
+  test("logisticModel: an empty corpus (or only null text) is rejected") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String, Boolean)].toDF("doc_id", "text", "hq")
+    val nullOnly = Seq((1L, null: String, true)).toDF("doc_id", "text", "hq")
+    Seq(empty, nullOnly).foreach { df =>
+      val e = intercept[IllegalArgumentException](
+        Classifier.logisticModel(df, col("text"), col("hq")))
+      assert(e.getMessage.contains("logistic training needs a non-empty corpus"))
+    }
+  }
+
+  test("logisticModel runs 1 + 2·steps jobs over a non-shuffled input: " +
+       "one staging barrier, then one aggregate (map + result job) per epoch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val corpus = spark.range(40).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("w"), (col("id") % 7).cast("string"),
+        (col("id") % 3).cast("string")).as("text"),
+      (col("id") % 2 === 0).as("hq"))
+    (1 to 3).foreach { steps =>
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Classifier.logisticModel(corpus, col("text"), col("hq"), steps = steps)
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get === 1 + 2 * steps, s"steps=$steps")
+    }
+  }
+
   test("good-turing: hand-computed count-of-counts, turing-smoothed " +
        "counts, unseen mass at r=0, determinism across partitionings") {
     import spark.implicits._
