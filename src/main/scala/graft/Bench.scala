@@ -169,9 +169,9 @@ object Bench {
     // the x10 side should be pure shingle-scan growth
     "source_overlap",
     // trained logistic classifier (r15): the corpus is tokenized ONCE
-    // into the checkpointed count sliver; each GD epoch is sliver-scale
-    // shuffles + a ≤1024-row collect — the pair should track the token
-    // pass, with the epochs flat across the decade
+    // into staged per-doc bucket arrays; each GD epoch is one
+    // bucket-keyed aggregate over them (≤ buckets+1 groups collected) —
+    // the pair should track the token pass and the per-epoch array scan
     "quality_logistic",
     // SQ8 ANN (r16): one scalar agg for the scale + the embed_topk
     // broadcast-query scoring shape on codes — the pair should track
@@ -219,19 +219,6 @@ object Bench {
     // curate_filters_map
     "dclm_e2e")
 
-  /**
-   * Stage a 10× corpus: the sf documents table replicated 10 times with
-   * distinct ids (docId*10+rep). Replica texts are made DISJOINT documents
-   * via a per-replica consonant rotation (`translate`), not near-copies:
-   * replicating verbatim (or with a token appended) would hand LSH 10-doc
-   * near-dup groups everywhere, and the measurement would track the
-   * quadratic pair OUTPUT of a mass-duplicated corpus — that adversarial
-   * shape is what the skew_* rows measure. The x10 rows answer a different
-   * question: does wall time stay ~linear when a UNIFORM corpus grows 10×?
-   * The rotation is codegen'd, content-deterministic, and keeps word/space
-   * structure (token counts, shingle counts, segment windows all scale
-   * exactly 10×); rep 0 is the original text.
-   */
   /** Stage-once marker protocol shared by the staging helpers: ONE marker
     * may exist per staging dir. The dir's content is mutually exclusive
     * across scale factors (each restage OVERWRITES it), so a marker is
@@ -252,6 +239,19 @@ object Bench {
     }
   }
 
+  /**
+   * Stage a 10× corpus: the sf documents table replicated 10 times with
+   * distinct ids (docId*10+rep). Replica texts are made DISJOINT documents
+   * via a per-replica consonant rotation (`translate`), not near-copies:
+   * replicating verbatim (or with a token appended) would hand LSH 10-doc
+   * near-dup groups everywhere, and the measurement would track the
+   * quadratic pair OUTPUT of a mass-duplicated corpus — that adversarial
+   * shape is what the skew_* rows measure. The x10 rows answer a different
+   * question: does wall time stay ~linear when a UNIFORM corpus grows 10×?
+   * The rotation is codegen'd, content-deterministic, and keeps word/space
+   * structure (token counts, shingle counts, segment windows all scale
+   * exactly 10×); rep 0 is the original text.
+   */
   private def stageX10(spark: SparkSession, sfDir: String): String = {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-bench-x10"
     stageOnce(out, sfDir) {

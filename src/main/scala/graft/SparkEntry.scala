@@ -4689,9 +4689,8 @@ object SparkEntry {
     * ≈ 6k subqueries per round. An empty pick empties every later pick
     * of its round (the comma join against the empty previous), exactly
     * the Scala loop's exhaustion behavior. */
-  private def bpeBatchedRoundsCteChained(n: Int, batch: Int,
-                                         docsSql: String = "documents",
-                                         maxRounds: Int = 0): String = {
+  private def bpeBatchedRoundsCteChained(n: Int, batch: Int, docsSql: String,
+                                         maxRounds: Int): String = {
     val k = batch * graft.pipeline.Bpe.CandidateFactor
     val rounds =
       if (maxRounds > 0) maxRounds else (n + batch - 1) / batch

@@ -175,282 +175,100 @@ object FlowConfig {
     }
   }
 
-  /** Parse the YAML "MiNiFi Config Version: 3" document. */
-  def parseYaml(text: String): FlowDef = {
-    val root = new org.yaml.snakeyaml.Yaml()
-      .load[java.util.Map[String, Object]](text)
-    val m = root.asScala
-    val name = m.get("Flow Controller").flatMap(Option(_)).map(asMap)
-      .flatMap(_.get("name")).flatMap(Option(_)).map(_.toString)
-      .getOrElse("MiNiFi Flow")
-    val contexts = parseContextsPlane(
-      asList(m.getOrElse("Parameter Contexts", null)),
-      idKey = "id", inheritsKey = "Inherited Parameter Contexts",
-      parametersKey = "Parameters")
-    val ids = new IdRegistry
+  /** The key schema of one flow-config dialect, like the reference's
+    * FlowSchema (libminifi/src/core/flow/FlowSchema.cpp): every key the
+    * group walk reads, so YAML and NiFi JSON share ONE walk and differ
+    * only here. A `Seq` field lists alternative spellings — the first
+    * key with a value wins, except that `remoteGroups` reads every list;
+    * `Nil` means the dialect has no such key. A `...Path` field is a key
+    * path from its node: YAML's flat `source id` against JSON's nested
+    * `source` / `id` is the one structural difference. */
+  private final case class Dialect(
+      flowNamePath: Seq[String], rootGroupPath: Seq[String],
+      parameterContexts: String, inheritedContexts: String,
+      parameters: String, parameterContextName: String,
+      id: String, processors: String, processorClass: String,
+      schedulingStrategy: String, schedulingPeriod: String,
+      autoTerminated: String, properties: String, funnels: String,
+      inputPorts: String, outputPorts: String,
+      remoteGroups: Seq[String], remoteUrl: Seq[String],
+      remotePortTargetId: Seq[String],
+      connections: String, relationships: Seq[String], expiration: String,
+      queueSize: String, queueDataSize: String, swapThreshold: Seq[String],
+      dropEmpty: String,
+      sourceIdPath: Seq[String], sourceNamePath: Seq[String],
+      destinationIdPath: Seq[String], destinationNamePath: Seq[String],
+      services: String, serviceClass: Seq[String], childGroups: String)
 
-    val groups = collection.mutable.ArrayBuffer[RawGroup]()
-    def walk(g: scala.collection.Map[String, Object], parentIdx: Int): Unit = {
-      val idx = groups.length
-      groups += null // reserve position, children get correct idx
-      val procs = Seq.newBuilder[ProcessorDef]
-      asList(g.getOrElse("Processors", null)).foreach { p0 =>
-        val p = asMap(p0)
-        procs += ProcessorDef(
-          id = ids.register(str(p, "id", "")) match {
-            case "" => str(p, "name", "")
-            case v  => v
-          },
-          name = str(p, "name", str(p, "id", "")),
-          clazz = str(p, "class", ""),
-          schedulingStrategy = str(p, "scheduling strategy", "TIMER_DRIVEN"),
-          schedulingPeriod = str(p, "scheduling period", "1 sec"),
-          autoTerminated = asList(p.getOrElse(
-            "auto-terminated relationships list", null))
-            .map(v => if (v == null) "" else v.toString).toSet,
-          properties = propMap(p.getOrElse("Properties", null)),
-          groupIdx = idx)
-      }
-      asList(g.getOrElse("Funnels", null)).foreach { f0 =>
-        val f = asMap(f0)
-        ids.register(str(f, "id", ""))
-        val fid = str(f, "id", str(f, "name", ""))
-        procs += ProcessorDef(fid, str(f, "name", fid), "Funnel",
-          "TIMER_DRIVEN", "1 sec", Set.empty, Map.empty, idx)
-      }
-      val ports = collection.mutable.LinkedHashMap[String, Boolean]()
-      def addPorts(key: String, isInput: Boolean): Unit =
-        asList(g.getOrElse(key, null)).foreach { o0 =>
-          val o = asMap(o0)
-          ids.register(str(o, "id", ""))
-          val pid = str(o, "id", str(o, "name", ""))
-          ports(pid) = isInput
-          procs += ProcessorDef(pid, str(o, "name", pid),
-            if (isInput) "InputPort" else "OutputPort",
-            "TIMER_DRIVEN", "1 sec", Set.empty, Map.empty, idx)
-        }
-      addPorts("Input Ports", isInput = true)
-      addPorts("Output Ports", isInput = false)
-      // RPG ports: reachable from the declaring group like plain
-      // processors (ProcessGroup.h findProcessor's RPG descent)
-      Seq("Remote Processing Groups", "Remote Process Groups").foreach { k =>
-        asList(g.getOrElse(k, null)).foreach { r0 =>
-          val r = asMap(r0)
-          ids.register(str(r, "id", ""))
-          Seq("Input Ports", "Output Ports").foreach { pk =>
-            asList(r.getOrElse(pk, null)).foreach { o0 =>
-              val o = asMap(o0)
-              ids.register(str(o, "id", ""))
-              val pid = str(o, "id", str(o, "name", ""))
-              procs += ProcessorDef(pid, str(o, "name", pid),
-                "RemoteProcessGroupPort", "TIMER_DRIVEN", "1 sec", Set.empty,
-                propMap(o.getOrElse("Properties", null)) ++
-                  Seq("url" -> str(r, "url", ""))
-                    .filter(_._2.nonEmpty).toMap,
-                idx)
-            }
-          }
-        }
-      }
-      val conns = asList(g.getOrElse("Connections", null)).map { c0 =>
-        if (c0 == null || !c0.isInstanceOf[java.util.Map[_, _]]) null
-        else {
-          val c = asMap(c0)
-          // v3 spells either "source relationship names" (list OR bare
-          // scalar) or "source relationship name" (single) — empty values
-          // fall through to the funnel/port implicit relationship
-          // (StructuredConnectionParser.cpp:55-72)
-          val single = opt(c.getOrElse("source relationship name", null))
-            .map(_.toString).filter(_.nonEmpty)
-          val rels: Seq[String] = single match {
-            case Some(r) => Seq(r)
-            case None => c.get("source relationship names").flatMap(Option(_)) match {
-              case Some(l: java.util.List[_]) =>
-                l.asScala.toSeq.map(v => if (v == null) "" else v.toString)
-              case Some(scalar) if scalar.toString.nonEmpty =>
-                Seq(scalar.toString)
-              case _ => Nil
-            }
-          }
-          RawConn(
-            ConnectionDef(
-              id = ids.register(str(c, "id", "")),
-              name = str(c, "name", str(c, "id", "")),
-              sourceId = "", relationships = rels, destinationId = "",
-              // lenient like getFlowFileExpiration (a unitless "12" or "0"
-              // parses to 0 = never expire, it does not fail the load)
-              expirationMs = opt(c.getOrElse("flowfile expiration", null))
-                .flatMap(v => Units.parseDurationMsOpt(v.toString)).filter(_ > 0),
-              maxQueueSize = opt(c.getOrElse("max work queue size", null))
-                .flatMap(v => Units.parseIntegralOpt(v.toString)),
-              maxQueueDataSize = opt(c.getOrElse("max work queue data size", null))
-                .flatMap(v => Units.parseBytesOpt(v.toString)),
-              swapThreshold = opt(c.getOrElse("swap threshold", null))
-                .flatMap(v => Units.parseBytesOpt(v.toString)).getOrElse(0L),
-              dropEmpty = opt(c.getOrElse("drop empty", null))
-                .flatMap(v => Units.parseBoolOpt(v.toString)).getOrElse(false),
-              groupIdx = idx),
-            sourceIdKey = opt(c.getOrElse("source id", null)).map(_.toString),
-            sourceNameKey = opt(c.getOrElse("source name", null)).map(_.toString),
-            destIdKey = opt(c.getOrElse("destination id", null)).map(_.toString),
-            destNameKey = opt(c.getOrElse("destination name", null)).map(_.toString),
-            explicitRels = rels.nonEmpty)
-        }
-      }
-      val svcs = asList(g.getOrElse("Controller Services", null)).map { s0 =>
-        val s = asMap(s0)
-        ids.register(str(s, "id", ""))
-        ServiceDef(
-          id = str(s, "id", str(s, "name", "")),
-          name = str(s, "name", str(s, "id", "")),
-          clazz = str(s, "class", str(s, "type", "")),
-          properties = propMap(s.getOrElse("Properties", null)))
-      }
-      groups(idx) = RawGroup(idx, parentIdx,
-        opt(g.getOrElse("Parameter Context Name", null)).map(_.toString),
-        procs.result(), ports.toMap, conns, svcs)
-      asList(g.getOrElse("Process Groups", null))
-        .foreach(cg => walk(asMap(cg), idx))
-    }
-    walk(m.toMap, -1)
-    assemble(name, groups.toSeq, contexts)
-  }
+  /** YAML "MiNiFi Config Version: 3": the document itself is the root
+    * group. */
+  private val Yaml = Dialect(
+    flowNamePath = Seq("Flow Controller", "name"), rootGroupPath = Nil,
+    parameterContexts = "Parameter Contexts",
+    inheritedContexts = "Inherited Parameter Contexts",
+    parameters = "Parameters", parameterContextName = "Parameter Context Name",
+    id = "id", processors = "Processors", processorClass = "class",
+    schedulingStrategy = "scheduling strategy",
+    schedulingPeriod = "scheduling period",
+    autoTerminated = "auto-terminated relationships list",
+    properties = "Properties", funnels = "Funnels",
+    inputPorts = "Input Ports", outputPorts = "Output Ports",
+    remoteGroups = Seq("Remote Processing Groups", "Remote Process Groups"),
+    remoteUrl = Seq("url"), remotePortTargetId = Nil,
+    connections = "Connections",
+    // v3 spells "source relationship name" (single) or "source
+    // relationship names" (list OR bare scalar); empty values fall through
+    // to the funnel/port implicit relationship
+    // (StructuredConnectionParser.cpp:55-72)
+    relationships = Seq("source relationship name", "source relationship names"),
+    expiration = "flowfile expiration", queueSize = "max work queue size",
+    queueDataSize = "max work queue data size",
+    swapThreshold = Seq("swap threshold"), dropEmpty = "drop empty",
+    sourceIdPath = Seq("source id"), sourceNamePath = Seq("source name"),
+    destinationIdPath = Seq("destination id"),
+    destinationNamePath = Seq("destination name"),
+    services = "Controller Services", serviceClass = Seq("class", "type"),
+    childGroups = "Process Groups")
+
+  /** The NiFi JSON `rootGroup` schema (the examples' .json configs). */
+  private val NiFiJson = Dialect(
+    flowNamePath = Seq("rootGroup", "name"), rootGroupPath = Seq("rootGroup"),
+    parameterContexts = "parameterContexts",
+    inheritedContexts = "inheritedParameterContexts",
+    parameters = "parameters", parameterContextName = "parameterContextName",
+    id = "identifier", processors = "processors", processorClass = "type",
+    schedulingStrategy = "schedulingStrategy",
+    schedulingPeriod = "schedulingPeriod",
+    autoTerminated = "autoTerminatedRelationships",
+    properties = "properties", funnels = "funnels",
+    inputPorts = "inputPorts", outputPorts = "outputPorts",
+    remoteGroups = Seq("remoteProcessGroups"),
+    // "targetUris" (single value OR array) takes precedence over
+    // "targetUri" (FlowSchema.cpp:156 — rpg_url = {targetUris, targetUri})
+    remoteUrl = Seq("targetUris", "targetUri"),
+    remotePortTargetId = Seq("targetId"),
+    connections = "connections", relationships = Seq("selectedRelationships"),
+    // JSON schema spellings (FlowSchema.cpp:115-124); the JSON plane has
+    // no swap-threshold key
+    expiration = "flowFileExpiration", queueSize = "backPressureObjectThreshold",
+    queueDataSize = "backPressureDataSizeThreshold", swapThreshold = Nil,
+    dropEmpty = "dropEmpty",
+    sourceIdPath = Seq("source", "id"), sourceNamePath = Seq("source", "name"),
+    destinationIdPath = Seq("destination", "id"),
+    destinationNamePath = Seq("destination", "name"),
+    services = "controllerServices", serviceClass = Seq("type"),
+    childGroups = "processGroups")
+
+  /** Parse the YAML "MiNiFi Config Version: 3" document. */
+  def parseYaml(text: String): FlowDef =
+    walkFlow(asMap(new org.yaml.snakeyaml.Yaml().load[Object](text)), Yaml)
 
   /** Parse the JSON `rootGroup` schema (the examples' .json configs). */
   def parseJson(text: String): FlowDef = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // a couple of the reference's shipped configs carry trailing commas;
-    // its rapidjson parse is permissive there, so be equally lenient
-    mapper.configure(
-      com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_TRAILING_COMMA, true)
-    mapper.configure(
-      com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_COMMENTS, true)
-    val root = mapper.readValue(text, classOf[java.util.Map[String, Object]])
-      .asScala
-    val rg = asMap(root.getOrElse("rootGroup",
-      throw new IllegalArgumentException("missing rootGroup")))
-    val contexts = parseContextsPlane(
-      asList(root.getOrElse("parameterContexts", null)),
-      idKey = "identifier", inheritsKey = "inheritedParameterContexts",
-      parametersKey = "parameters")
-    val ids = new IdRegistry
-
-    val groups = collection.mutable.ArrayBuffer[RawGroup]()
-    def walk(g: scala.collection.Map[String, Object], parentIdx: Int): Unit = {
-      val idx = groups.length
-      groups += null
-      val procs = Seq.newBuilder[ProcessorDef]
-      asList(g.getOrElse("processors", null)).foreach { p0 =>
-        val p = asMap(p0)
-        val (firstVals, lists) = propPlanes(p.getOrElse("properties", null))
-        procs += ProcessorDef(
-          id = ids.register(str(p, "identifier", "")) match {
-            case "" => str(p, "name", "")
-            case v  => v
-          },
-          name = str(p, "name", str(p, "identifier", "")),
-          clazz = str(p, "type", ""),
-          schedulingStrategy = str(p, "schedulingStrategy", "TIMER_DRIVEN"),
-          schedulingPeriod = str(p, "schedulingPeriod", "1 sec"),
-          autoTerminated = asList(p.getOrElse("autoTerminatedRelationships",
-            null)).map(v => if (v == null) "" else v.toString).toSet,
-          properties = firstVals,
-          groupIdx = idx,
-          propertyLists = lists)
-      }
-      asList(g.getOrElse("funnels", null)).foreach { f0 =>
-        val f = asMap(f0)
-        ids.register(str(f, "identifier", ""))
-        val fid = str(f, "identifier", str(f, "name", ""))
-        procs += ProcessorDef(fid, str(f, "name", fid), "Funnel",
-          "TIMER_DRIVEN", "1 sec", Set.empty, Map.empty, idx)
-      }
-      val ports = collection.mutable.LinkedHashMap[String, Boolean]()
-      def addPorts(key: String, isInput: Boolean): Unit =
-        asList(g.getOrElse(key, null)).foreach { o0 =>
-          val o = asMap(o0)
-          ids.register(str(o, "identifier", ""))
-          val pid = str(o, "identifier", str(o, "name", ""))
-          ports(pid) = isInput
-          procs += ProcessorDef(pid, str(o, "name", pid),
-            if (isInput) "InputPort" else "OutputPort",
-            "TIMER_DRIVEN", "1 sec", Set.empty, Map.empty, idx)
-        }
-      addPorts("inputPorts", isInput = true)
-      addPorts("outputPorts", isInput = false)
-      asList(g.getOrElse("remoteProcessGroups", null)).foreach { r0 =>
-        val r = asMap(r0)
-        ids.register(str(r, "identifier", ""))
-        // "targetUris" (single value OR array) takes precedence over
-        // "targetUri" (FlowSchema.cpp:156 — rpg_url = {targetUris, targetUri})
-        val uris: Seq[String] = r.get("targetUris").flatMap(Option(_)) match {
-          case Some(l: java.util.List[_]) =>
-            l.asScala.toSeq.map(_.toString).filter(_.nonEmpty)
-          case Some(s) if s.toString.nonEmpty => Seq(s.toString)
-          case _ => opt(r.getOrElse("targetUri", null)).map(_.toString).toSeq
-        }
-        Seq("inputPorts", "outputPorts").foreach { pk =>
-          asList(r.getOrElse(pk, null)).foreach { o0 =>
-            val o = asMap(o0)
-            ids.register(str(o, "identifier", ""))
-            val pid = str(o, "identifier", str(o, "name", ""))
-            procs += ProcessorDef(pid, str(o, "name", pid),
-              "RemoteProcessGroupPort", "TIMER_DRIVEN", "1 sec", Set.empty,
-              propPlanes(o.getOrElse("properties", null))._1 ++
-                opt(o.getOrElse("targetId", null))
-                  .map(t => "Port UUID" -> t.toString).toMap ++
-                (if (uris.nonEmpty) Map("url" -> uris.mkString(",")) else Map.empty),
-              idx)
-          }
-        }
-      }
-      val conns = asList(g.getOrElse("connections", null)).map { c0 =>
-        if (c0 == null || !c0.isInstanceOf[java.util.Map[_, _]]) null
-        else {
-          val c = asMap(c0)
-          val src = asMap(c.getOrElse("source", null))
-          val dst = asMap(c.getOrElse("destination", null))
-          val rels = asList(c.getOrElse("selectedRelationships", null))
-            .map(v => if (v == null) "" else v.toString)
-          RawConn(
-            ConnectionDef(
-              id = ids.register(str(c, "identifier", "")),
-              name = str(c, "name", str(c, "identifier", "")),
-              sourceId = "", relationships = rels, destinationId = "",
-              expirationMs = opt(c.getOrElse("flowFileExpiration", null))
-                .flatMap(v => Units.parseDurationMsOpt(v.toString)).filter(_ > 0),
-              // JSON schema spellings (FlowSchema.cpp:115-124); the JSON
-              // plane has no swap-threshold key
-              maxQueueSize = opt(c.getOrElse("backPressureObjectThreshold", null))
-                .flatMap(v => Units.parseIntegralOpt(v.toString)),
-              maxQueueDataSize = opt(c.getOrElse("backPressureDataSizeThreshold", null))
-                .flatMap(v => Units.parseBytesOpt(v.toString)),
-              dropEmpty = opt(c.getOrElse("dropEmpty", null))
-                .flatMap(v => Units.parseBoolOpt(v.toString)).getOrElse(false),
-              groupIdx = idx),
-            sourceIdKey = opt(src.getOrElse("id", null)).map(_.toString),
-            sourceNameKey = opt(src.getOrElse("name", null)).map(_.toString),
-            destIdKey = opt(dst.getOrElse("id", null)).map(_.toString),
-            destNameKey = opt(dst.getOrElse("name", null)).map(_.toString),
-            explicitRels = rels.nonEmpty)
-        }
-      }
-      val svcs = asList(g.getOrElse("controllerServices", null)).map { s0 =>
-        val s = asMap(s0)
-        ids.register(str(s, "identifier", ""))
-        ServiceDef(
-          id = str(s, "identifier", str(s, "name", "")),
-          name = str(s, "name", str(s, "identifier", "")),
-          clazz = str(s, "type", ""),
-          properties = propPlanes(s.getOrElse("properties", null))._1)
-      }
-      groups(idx) = RawGroup(idx, parentIdx,
-        opt(g.getOrElse("parameterContextName", null)).map(_.toString),
-        procs.result(), ports.toMap, conns, svcs)
-      asList(g.getOrElse("processGroups", null)).foreach(cg => walk(asMap(cg), idx))
-    }
-    walk(rg.toMap, -1)
-    assemble(str(rg, "name", "MiNiFi Flow"), groups.toSeq, contexts)
+    val doc = readJson(text)
+    if (!doc.contains("rootGroup"))
+      throw new IllegalArgumentException("missing rootGroup")
+    walkFlow(doc, NiFiJson)
   }
 
   /** Adaptive payload dispatch (AdaptiveConfiguration.cpp, exercised by
@@ -463,33 +281,131 @@ object FlowConfig {
     * reference's "not valid json … not valid yaml" double log. */
   def parse(text: String): FlowDef = {
     if (!text.dropWhile(_.isWhitespace).startsWith("{")) return parseYaml(text)
-    try parseJson(text)
-    catch {
-      case e: IllegalArgumentException if e.getMessage == "missing rootGroup" =>
-        parseYaml(text)
-      case _: com.fasterxml.jackson.core.JacksonException =>
-        parseYaml(text)
+    val doc = try readJson(text) catch {
+      case _: com.fasterxml.jackson.core.JacksonException => return parseYaml(text)
     }
+    walkFlow(doc, if (doc.contains("rootGroup")) NiFiJson else Yaml)
+  }
+
+  private def readJson(text: String): Node = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // a couple of the reference's shipped configs carry trailing commas;
+    // its rapidjson parse is permissive there, so be equally lenient
+    mapper.configure(
+      com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_TRAILING_COMMA, true)
+    mapper.configure(
+      com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_COMMENTS, true)
+    asMap(mapper.readValue(text, classOf[java.util.Map[String, Object]]))
+  }
+
+  /** The one group walk (StructuredConfiguration's structured parse),
+    * reading every key through the dialect's table. */
+  private def walkFlow(doc: Node, d: Dialect): FlowDef = {
+    val contexts = parseContextsPlane(doc, d)
+    val ids = new IdRegistry
+    val groups = collection.mutable.ArrayBuffer[RawGroup]()
+    def walk(g: Node, parentIdx: Int): Unit = {
+      val idx = groups.length
+      groups += null // reserve position, children get correct idx
+      // a component's id falls back to its name and vice versa
+      def idName(n: Node): (String, String) = {
+        val id = ids.register(str(n, d.id, ""))
+        val name = str(n, "name", id)
+        (if (id.isEmpty) name else id, name)
+      }
+      def component(n: Node, clazz: String,
+                    props: Map[String, String] = Map.empty): ProcessorDef = {
+        val (id, name) = idName(n)
+        ProcessorDef(id, name, clazz, "TIMER_DRIVEN", "1 sec", Set.empty,
+          props, idx)
+      }
+      val procs = Seq.newBuilder[ProcessorDef]
+      nodes(g, d.processors).foreach { p =>
+        val (firstVals, lists) = propPlanes(p.getOrElse(d.properties, null))
+        procs += component(p, str(p, d.processorClass, "")).copy(
+          schedulingStrategy = str(p, d.schedulingStrategy, "TIMER_DRIVEN"),
+          schedulingPeriod = str(p, d.schedulingPeriod, "1 sec"),
+          autoTerminated = asList(p.getOrElse(d.autoTerminated, null))
+            .map(v => if (v == null) "" else v.toString).toSet,
+          properties = firstVals, propertyLists = lists)
+      }
+      nodes(g, d.funnels).foreach(f => procs += component(f, "Funnel"))
+      val ports = collection.mutable.LinkedHashMap[String, Boolean]()
+      Seq(d.inputPorts -> true, d.outputPorts -> false).foreach {
+        case (key, isInput) => nodes(g, key).foreach { o =>
+          val port = component(o, if (isInput) "InputPort" else "OutputPort")
+          ports(port.id) = isInput
+          procs += port
+        }
+      }
+      // RPG ports: reachable from the declaring group like plain
+      // processors (ProcessGroup.h findProcessor's RPG descent)
+      d.remoteGroups.flatMap(nodes(g, _)).foreach { r =>
+        ids.register(str(r, d.id, ""))
+        val url = values(r, d.remoteUrl).filter(_.nonEmpty).mkString(",")
+        (nodes(r, d.inputPorts) ++ nodes(r, d.outputPorts)).foreach { o =>
+          procs += component(o, "RemoteProcessGroupPort",
+            propPlanes(o.getOrElse(d.properties, null))._1 ++
+              first(o, d.remotePortTargetId: _*).map("Port UUID" -> _) ++
+              Some("url" -> url).filter(_._2.nonEmpty))
+        }
+      }
+      val conns = asList(g.getOrElse(d.connections, null)).map {
+        case c0: java.util.Map[_, _] =>
+          val c = asMap(c0)
+          val rels = values(c, d.relationships)
+          RawConn(
+            ConnectionDef(
+              id = ids.register(str(c, d.id, "")),
+              name = str(c, "name", str(c, d.id, "")),
+              sourceId = "", relationships = rels, destinationId = "",
+              // lenient like getFlowFileExpiration (a unitless "12" or "0"
+              // parses to 0 = never expire, it does not fail the load)
+              expirationMs = first(c, d.expiration)
+                .flatMap(Units.parseDurationMsOpt).filter(_ > 0),
+              maxQueueSize = first(c, d.queueSize).flatMap(Units.parseIntegralOpt),
+              maxQueueDataSize = first(c, d.queueDataSize)
+                .flatMap(Units.parseBytesOpt),
+              swapThreshold = first(c, d.swapThreshold: _*)
+                .flatMap(Units.parseBytesOpt).getOrElse(0L),
+              dropEmpty = first(c, d.dropEmpty)
+                .flatMap(Units.parseBoolOpt).getOrElse(false),
+              groupIdx = idx),
+            sourceIdKey = at(c, d.sourceIdPath),
+            sourceNameKey = at(c, d.sourceNamePath),
+            destIdKey = at(c, d.destinationIdPath),
+            destNameKey = at(c, d.destinationNamePath),
+            explicitRels = rels.nonEmpty)
+        case _ => null // an invalid connection node, reported by assemble
+      }
+      val svcs = nodes(g, d.services).map { s =>
+        val (id, name) = idName(s)
+        ServiceDef(id, name, first(s, d.serviceClass: _*).getOrElse(""),
+          propPlanes(s.getOrElse(d.properties, null))._1)
+      }
+      groups(idx) = RawGroup(idx, parentIdx,
+        first(g, d.parameterContextName), procs.result(), ports.toMap, conns,
+        svcs)
+      nodes(g, d.childGroups).foreach(walk(_, idx))
+    }
+    walk(node(doc, d.rootGroupPath), -1)
+    assemble(at(doc, d.flowNamePath).getOrElse("MiNiFi Flow"), groups.toSeq,
+      contexts)
   }
 
   // ---- shared back half: parameter substitution + connection resolution --
 
-  private def parseContextsPlane(nodes: Seq[Object], idKey: String,
-                                 inheritsKey: String,
-                                 parametersKey: String): Seq[ParameterContextDef] =
-    nodes.map { n0 =>
-      val n = asMap(n0)
+  private def parseContextsPlane(doc: Node, d: Dialect): Seq[ParameterContextDef] =
+    nodes(doc, d.parameterContexts).map { n =>
       ParameterContextDef(
-        name = str(n, "name", str(n, idKey, "")),
-        parameters = asList(n.getOrElse(parametersKey, null)).map { p0 =>
-          val p = asMap(p0)
+        name = str(n, "name", str(n, d.id, "")),
+        parameters = nodes(n, d.parameters).map { p =>
           ParameterDef(
             name = str(p, "name", ""),
             value = str(p, "value", ""),
-            sensitive = opt(p.getOrElse("sensitive", null))
-              .exists(_.toString.equalsIgnoreCase("true")))
+            sensitive = first(p, "sensitive").exists(_.equalsIgnoreCase("true")))
         },
-        inherits = asList(n.getOrElse(inheritsKey, null)).map(_.toString))
+        inherits = asList(n.getOrElse(d.inheritedContexts, null)).map(_.toString))
     }
 
   private def assemble(name: String, groups: Seq[RawGroup],
@@ -619,19 +535,35 @@ object FlowConfig {
       substituted.flatMap(_.services), contextDefs, errors.result())
   }
 
-  private def opt(v: Object): Option[Object] = Option(v)
-  private def str(m: scala.collection.Map[String, Object], k: String,
-                  default: String): String =
-    m.get(k).flatMap(Option(_)).map(_.toString).getOrElse(default)
-  private def propMap(v: Object): Map[String, String] =
-    opt(v).map(asMap(_).map { case (k, v) =>
-      k -> (if (v == null) "" else v.toString) }.toMap).getOrElse(Map.empty)
-  /** JSON properties: scalar values plus value sequences
+  private type Node = scala.collection.Map[String, Object]
+  /** The first of the alternative keys holding a non-null value. */
+  private def first(m: Node, keys: String*): Option[String] =
+    keys.iterator.flatMap(k => m.get(k).flatMap(Option(_))).nextOption()
+      .map(_.toString)
+  private def str(m: Node, k: String, default: String): String =
+    first(m, k).getOrElse(default)
+  /** The first of the alternative keys holding a non-empty scalar or
+    * list; list elements keep a null as "". */
+  private def values(m: Node, keys: Seq[String]): Seq[String] =
+    keys.iterator.map(k => m.getOrElse(k, null) match {
+      case l: java.util.List[_] =>
+        l.asScala.toSeq.map(v => if (v == null) "" else v.toString)
+      case null => Nil
+      case v => Seq(v.toString).filter(_.nonEmpty)
+    }).find(_.nonEmpty).getOrElse(Nil)
+  /** The mapping at a key path; a missing step reads as empty. */
+  private def node(m: Node, path: Seq[String]): Node =
+    path.foldLeft(m)((n, k) => asMap(n.getOrElse(k, null)))
+  private def at(m: Node, path: Seq[String]): Option[String] =
+    first(node(m, path.init), path.last)
+  private def nodes(m: Node, k: String): Seq[Node] =
+    asList(m.getOrElse(k, null)).map(asMap)
+  /** Properties: scalar values plus value sequences
     * (`[{"value": ...}, ...]` — FlowSchema property value sequences). The
     * first sequence element doubles as the scalar view, matching the
     * reference's getProperty over a multi-valued property. */
   private def propPlanes(v: Object): (Map[String, String], Map[String, Seq[String]]) = {
-    val m = opt(v).map(asMap).getOrElse(Map.empty)
+    val m = asMap(v)
     val firsts = Map.newBuilder[String, String]
     val lists = Map.newBuilder[String, Seq[String]]
     m.foreach {
@@ -650,7 +582,7 @@ object FlowConfig {
     }
     (firsts.result(), lists.result())
   }
-  private def asMap(v: Object): scala.collection.Map[String, Object] = v match {
+  private def asMap(v: Object): Node = v match {
     case null => Map.empty[String, Object]
     case m: java.util.Map[_, _] =>
       m.asScala.map { case (k, v) => k.toString -> v.asInstanceOf[Object] }

@@ -293,7 +293,7 @@ object FlowStreaming {
 
   /** Source-processor → streaming DataFrame in the FlowFrame shape. */
   private def streamSource(spark: SparkSession, p: ProcessorDef,
-                           limits: QueueLimits = QueueLimits(None, None)): DataFrame = {
+                           limits: QueueLimits): DataFrame = {
     val props = p.properties
     def prop(name: String, default: String): String =
       props.getOrElse(name, default)

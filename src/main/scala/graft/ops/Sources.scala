@@ -13,14 +13,6 @@ import org.apache.spark.sql.functions._
 object Sources {
 
   /**
-   * GetFile (GetFile.cpp:71): poll a directory with name-regex/size filters.
-   * Batch shape: `binaryFile` read with pathGlobFilter; filters push to the
-   * file index, never materializing non-matching files.
-   */
-  def getFile(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
-
-  /**
    * GetFile with the full filter surface (GetFile.h properties: File
    * Filter, Recurse Subdirectories, Min/Max File Size, Min/Max File Age).
    * Size/age filters are plain predicates over the binaryFile metadata

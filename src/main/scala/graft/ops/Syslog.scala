@@ -57,20 +57,6 @@ object Syslog {
       .drop("syslog_valid")
   }
 
-  /** Parse RFC3164 lines (ListenSyslog.cpp:81-90): priority, timestamp,
-    * hostname, msg; non-matching lines route `invalid`. */
-  def parseRfc3164(df: DataFrame, lineCol: Column): DataFrame = {
-    val p = Rfc3164Pattern
-    df
-      .withColumn("syslog_valid", lineCol.rlike(p))
-      .withColumn("syslog_priority", when(col("syslog_valid"), regexp_extract(lineCol, p, 1)))
-      .withColumn("syslog_timestamp", when(col("syslog_valid"), regexp_extract(lineCol, p, 2)))
-      .withColumn("syslog_hostname", when(col("syslog_valid"), regexp_extract(lineCol, p, 3)))
-      .withColumn("syslog_msg", when(col("syslog_valid"), regexp_extract(lineCol, p, 4)))
-      .withColumn("relationship", when(col("syslog_valid"), "success").otherwise("invalid"))
-      .drop("syslog_valid")
-  }
-
   /**
    * Protocol-dispatch parse (ListenSyslog.cpp:67,81): RFC5424 first, then
    * RFC3164, else invalid. RFC5424-only fields (version, app_name, procid,

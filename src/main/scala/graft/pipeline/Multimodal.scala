@@ -111,7 +111,6 @@ object Multimodal {
    * verifiable end-to-end on any byte column.
    */
   def decodeFeatures(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField("mmId", LongType),
       StructField("width", LongType),
@@ -348,17 +347,6 @@ object Multimodal {
   private def fakeWidth(size: Long): Long = size % 640 + 1
   private def fakeHeight(size: Long): Long = (size * 7) % 480 + 1
   private def fakeFrames(size: Long): Long = size / 100 + 1
-
-  /** The same fake decode as Catalyst columns (for oracle-SQL parity). */
-  def fakeWidthCol(size: Column): Column = size % 640 + 1
-  def fakeHeightCol(size: Column): Column = (size * 7) % 480 + 1
-  def fakeFramesCol(size: Column): Column = floor(size / 100) + 1
-
-  /** Frame sampling plan for video-ish payloads: every `stride`-th frame —
-    * explode stays narrow; downstream decode batches per partition. */
-  def sampleFrames(df: DataFrame, nFramesCol: Column, stride: Int): DataFrame =
-    df.withColumn("frameIdx",
-      explode(sequence(lit(0L), (nFramesCol - 1) / stride * stride, lit(stride.toLong))))
 
   // --- content-claim pointers: the FlowFile content-claim design at
   // media scale (FlowFile.h:44-50). Payloads over `inlineMax` do NOT ride

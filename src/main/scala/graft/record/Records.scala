@@ -3,7 +3,6 @@ package graft.record
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /**
  * Record reader/writer subsystem — SURVEY §2.9.
@@ -83,9 +82,4 @@ object Records {
    */
   def xmlReader(contentCol: Column, schema: StructType): Column =
     from_xml(contentCol, schema)
-
-  /** XMLRecordSetWriter (XMLRecordSetWriter.cpp): record struct → XML
-    * string with the given row tag — Spark 4 native `to_xml`. */
-  def xmlWriter(recordCol: Column, rowTag: String): Column =
-    to_xml(recordCol, Map("rowTag" -> rowTag).asJava)
 }

@@ -449,6 +449,190 @@ class FlowConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(f.resolutionErrors === Nil)
   }
 
+  // One flow in both dialects. Keys only one dialect has (JSON's RPG
+  // targetId, YAML's swap threshold) are left out.
+  private val ParityYaml =
+    """Flow Controller:
+      |  name: parity
+      |Parameter Contexts:
+      |- id: ctx1
+      |  name: ctx
+      |  Parameters:
+      |  - {name: sz, sensitive: false, value: 10 B}
+      |Parameter Context Name: ctx
+      |Processors:
+      |- id: gen
+      |  name: Gen
+      |  class: org.apache.nifi.processors.standard.GenerateFlowFile
+      |  scheduling strategy: TIMER_DRIVEN
+      |  scheduling period: 3 sec
+      |  auto-terminated relationships list: [failure]
+      |  Properties:
+      |    File Size: '#{sz}'
+      |    Batch Size: 2
+      |- id: log
+      |  name: Log
+      |  class: org.apache.nifi.processors.standard.LogAttribute
+      |  auto-terminated relationships list: [failure, other]
+      |  Properties: {}
+      |Funnels:
+      |- {id: fun, name: Fun}
+      |Remote Process Groups:
+      |- id: rpg
+      |  name: RPG
+      |  url: http://localhost:8080/nifi
+      |  Input Ports:
+      |  - {id: rin, name: RemoteIn}
+      |Connections:
+      |- id: c1
+      |  name: GenToFun
+      |  source id: gen
+      |  source relationship names: [success]
+      |  destination id: fun
+      |  max work queue size: 7
+      |  max work queue data size: 11 KB
+      |  flowfile expiration: 13 sec
+      |  drop empty: true
+      |- {id: c2, name: FunToChild, source id: fun, destination id: cin}
+      |- {id: c3, name: ChildToLog, source id: cout, destination id: log}
+      |- id: c4
+      |  name: LogToRemote
+      |  source id: log
+      |  source relationship names: [success]
+      |  destination name: RemoteIn
+      |Controller Services:
+      |- id: svc
+      |  name: SSL
+      |  class: SSLContextService
+      |  Properties: {CA Certificate: ca.pem}
+      |Process Groups:
+      |- name: Child
+      |  Input Ports:
+      |  - {id: cin, name: ChildIn}
+      |  Output Ports:
+      |  - {id: cout, name: ChildOut}
+      |  Connections:
+      |  - {id: c5, name: InToOut, source id: cin, destination id: cout}
+      |""".stripMargin
+
+  private val ParityJson =
+    """{
+      |  "parameterContexts": [{"identifier": "ctx1", "name": "ctx",
+      |    "parameters": [{"name": "sz", "sensitive": false, "value": "10 B"}]}],
+      |  "rootGroup": {
+      |    "name": "parity",
+      |    "parameterContextName": "ctx",
+      |    "processors": [{
+      |      "identifier": "gen", "name": "Gen",
+      |      "type": "org.apache.nifi.processors.standard.GenerateFlowFile",
+      |      "schedulingStrategy": "TIMER_DRIVEN", "schedulingPeriod": "3 sec",
+      |      "autoTerminatedRelationships": ["failure"],
+      |      "properties": {"File Size": "#{sz}", "Batch Size": 2}
+      |    }, {
+      |      "identifier": "log", "name": "Log",
+      |      "type": "org.apache.nifi.processors.standard.LogAttribute",
+      |      "autoTerminatedRelationships": ["failure", "other"],
+      |      "properties": {}
+      |    }],
+      |    "funnels": [{"identifier": "fun", "name": "Fun"}],
+      |    "remoteProcessGroups": [{
+      |      "identifier": "rpg", "name": "RPG",
+      |      "targetUri": "http://localhost:8080/nifi",
+      |      "inputPorts": [{"identifier": "rin", "name": "RemoteIn"}]
+      |    }],
+      |    "connections": [{
+      |      "identifier": "c1", "name": "GenToFun",
+      |      "source": {"id": "gen"}, "destination": {"id": "fun"},
+      |      "selectedRelationships": ["success"],
+      |      "backPressureObjectThreshold": 7,
+      |      "backPressureDataSizeThreshold": "11 KB",
+      |      "flowFileExpiration": "13 sec",
+      |      "dropEmpty": true
+      |    },
+      |    {"identifier": "c2", "name": "FunToChild",
+      |     "source": {"id": "fun"}, "destination": {"id": "cin"}},
+      |    {"identifier": "c3", "name": "ChildToLog",
+      |     "source": {"id": "cout"}, "destination": {"id": "log"}},
+      |    {"identifier": "c4", "name": "LogToRemote",
+      |     "source": {"id": "log"}, "destination": {"name": "RemoteIn"},
+      |     "selectedRelationships": ["success"]}],
+      |    "controllerServices": [{
+      |      "identifier": "svc", "name": "SSL", "type": "SSLContextService",
+      |      "properties": {"CA Certificate": "ca.pem"}
+      |    }],
+      |    "processGroups": [{
+      |      "name": "Child",
+      |      "inputPorts": [{"identifier": "cin", "name": "ChildIn"}],
+      |      "outputPorts": [{"identifier": "cout", "name": "ChildOut"}],
+      |      "connections": [{"identifier": "c5", "name": "InToOut",
+      |        "source": {"id": "cin"}, "destination": {"id": "cout"}}]
+      |    }]
+      |  }
+      |}""".stripMargin
+
+  test("dialect parity: one flow written in YAML and in NiFi JSON parses " +
+       "to equal FlowDefs") {
+    val y = FlowConfig.parseYaml(ParityYaml)
+    assert(y === FlowConfig.parseJson(ParityJson))
+    // the flow really exercises every plane the two dialects share
+    assert(y.processors.map(p => p.id -> p.kind) === Seq(
+      "gen" -> "GenerateFlowFile", "log" -> "LogAttribute",
+      "fun" -> "Funnel", "rin" -> "RemoteProcessGroupPort",
+      "cin" -> "InputPort", "cout" -> "OutputPort"))
+    assert(y.processor("Gen").properties ===
+      Map("File Size" -> "10 B", "Batch Size" -> "2"))
+    assert(y.processor("Log").autoTerminated === Set("failure", "other"))
+    assert(y.processor("RemoteIn").properties ===
+      Map("url" -> "http://localhost:8080/nifi"))
+    assert(y.processor("ChildIn").groupIdx === 1)
+    val c1 = y.connections.head
+    assert((c1.maxQueueSize, c1.maxQueueDataSize, c1.expirationMs,
+      c1.dropEmpty) === ((Some(7L), Some(11L * 1024), Some(13000L), true)))
+    assert(y.connections.map(c => (c.id, c.sourceId, c.relationships,
+      c.destinationId)) === Seq(
+      ("c1", "gen", Seq("success"), "fun"),
+      ("c2", "fun", Seq("success"), "cin"),
+      ("c3", "cout", Nil, "log"),
+      ("c4", "log", Seq("success"), "rin"),
+      ("c5", "cin", Nil, "cout")))
+    assert(y.services === Seq(ServiceDef("svc", "SSL", "SSLContextService",
+      Map("CA Certificate" -> "ca.pem"))))
+    assert(y.parameterContexts.map(_.name) === Seq("ctx"))
+    assert(y.resolutionErrors === Nil)
+  }
+
+  test("property value sequences: the first element is the scalar view " +
+       "and propertyLists holds the whole sequence, in both dialects " +
+       "(FlowJsonTests.cpp \"Property value sequences\")") {
+    val yaml =
+      """Flow Controller:
+        |  name: root
+        |Processors:
+        |- id: gen
+        |  name: Gen
+        |  class: GenerateFlowFile
+        |  Properties:
+        |    Simple Property:
+        |    - value: a
+        |    - value: b
+        |    Plain: c
+        |Connections: []
+        |""".stripMargin
+    val json =
+      """{"rootGroup": {"name": "root", "processors": [{
+        |  "identifier": "gen", "name": "Gen", "type": "GenerateFlowFile",
+        |  "properties": {"Simple Property": [{"value": "a"}, {"value": "b"}],
+        |                 "Plain": "c"}}], "connections": []}}""".stripMargin
+    Seq("yaml" -> FlowConfig.parseYaml(yaml),
+        "json" -> FlowConfig.parseJson(json)).foreach { case (dialect, f) =>
+      val p = f.processor("Gen")
+      assert(p.properties === Map("Simple Property" -> "a", "Plain" -> "c"),
+        dialect)
+      assert(p.propertyLists === Map("Simple Property" -> Seq("a", "b")),
+        dialect)
+    }
+  }
+
   test("adaptive payload dispatch: YAML-dialect keys serialized as JSON " +
        "parse via the yaml schema; broken JSON falls through to the yaml " +
        "error (AdaptiveConfigurationTests.cpp:27-93)") {

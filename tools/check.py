@@ -3,16 +3,36 @@
 
 Mirrors the driver's compare: per query, sort columns by name, sort rows,
 hash values. Exact for ints/strings/bools; doubles compared bit-exact."""
-import sys, json, glob, os
+import sys, json, glob, os, resource
+import concurrent.futures as cf
+import multiprocessing as mp
 import duckdb
 import pandas as pd
 import numpy as np
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem",
-          "events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+# DuckDB is sized to this machine. Its defaults (80% of RAM, every core)
+# leave no room for the pandas frames this process holds, and the planner
+# memory of the largest recursive-CTE oracles lies outside memory_limit
+# altogether. So each statement runs in a forked child with half of
+# MemTotal for DuckDB, the usable CPUs, spill files under the output dir,
+# and an address-space cap of three quarters of MemTotal; a statement that
+# hits a limit is a FAIL carrying DuckDB's error, and the next one starts
+# in a fresh process.
+with open("/proc/meminfo") as f:
+    mem_kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+
+def duck(sql):
+    cap = mem_kb * 1024 * 3 // 4
+    resource.setrlimit(resource.RLIMIT_AS, (cap, cap))
+    con = duckdb.connect(config={
+        "memory_limit": f"{mem_kb // 2 // 1024}MB",
+        "threads": len(os.sched_getaffinity(0)),
+        "temp_directory": os.path.join(out_dir, ".duckdb_tmp")})
+    for t in ["region","nation","customer","supplier","part","orders","lineitem",
+              "events","documents","embeddings"]:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con.execute(sql).df()
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails, passes = [], []
@@ -25,7 +45,8 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         fails.append((name, f"spark read: {e}")); continue
     try:
-        duck_df = con.execute(sql).df()
+        with cf.ProcessPoolExecutor(1, mp_context=mp.get_context("fork")) as ex:
+            duck_df = ex.submit(duck, sql).result()
     except Exception as e:
         fails.append((name, f"duckdb: {type(e).__name__}: {e}")); continue
     sc, dc = sorted(spark_df.columns), sorted(duck_df.columns)
