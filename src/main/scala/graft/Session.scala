@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * count; the session settings every surface shares live here: UTC session
   * time zone, parquet TIMESTAMP(NANOS) read as epoch longs (the events
   * fixture has shipped in both encodings, see `SparkEntry.events`), no UI,
-  * WARN logging. */
+  * WARN logging, and the fork-free local checkpoint store for streaming
+  * (`streaming.LocalCheckpointFileManager`). */
 object Session {
   def apply(master: String, partitions: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -18,6 +19,7 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    streaming.LocalCheckpointFileManager.install(spark)
     spark
   }
 }

@@ -2844,8 +2844,9 @@ object SparkEntry {
       // NOTE this per-document partitionBy is an ORACLE FIXTURE shape, not
       // the 100 TB pattern — tens of millions of partition dirs is the
       // small-files anti-pattern. At scale, PutFile maps to a plain
-      // df.write partitioned by a COARSE key (date/source), or the
-      // relationshipSink's partitionBy("relationship"); per-row file
+      // df.write partitioned by a COARSE key (date/source), or, for a
+      // stream, relationshipSink's file sink partitioned by relationship
+      // (one _spark_metadata commit per micro-batch); per-row file
       // naming belongs to FetchFile/ListFile semantics, not bulk writes.
       docs.select(col("doc_id"), col("text").as("value"))
         .write.mode("overwrite").partitionBy("doc_id").text(out.toString)
@@ -4688,16 +4689,15 @@ object SparkEntry {
     * unions — at maxBatch = 64 the per-pick unions would total O(batch²)
     * ≈ 6k subqueries per round. An empty pick empties every later pick
     * of its round (the comma join against the empty previous), exactly
-    * the Scala loop's exhaustion behavior. */
-  private def bpeBatchedRoundsCteChained(n: Int, batch: Int, docsSql: String,
-                                         maxRounds: Int): String = {
+    * the Scala loop's exhaustion behavior. Always [[DeepRounds]] rounds,
+    * the budget both deep rows train with. */
+  private def bpeBatchedRoundsCteChained(batch: Int,
+                                         docsSql: String): String = {
     val k = batch * graft.pipeline.Bpe.CandidateFactor
-    val rounds =
-      if (maxRounds > 0) maxRounds else (n + batch - 1) / batch
     def round(b: Int, prev: String): String = {
       // every round attempts a FULL batch (mirrors Bpe.train under
-      // maxRounds; the caller cuts the final union at rank <= n — the
-      // greedy picks are a prefix-stable sequence, so a narrower Scala
+      // maxRounds; the caller cuts the final union at its merge count n —
+      // the greedy picks are a prefix-stable sequence, so a narrower Scala
       // `want` in the round that crosses n takes exactly the first picks
       // of the same sequence)
       val want = batch
@@ -4745,7 +4745,7 @@ object SparkEntry {
            |    FROM cb${b}_m) p)""".stripMargin
       (Seq(kCte) ++ sels ++ Seq(mCte, rewrite)).mkString(",\n")
     }
-    val roundCtes = (0 until rounds).map(b =>
+    val roundCtes = (0 until DeepRounds).map(b =>
       round(b, if (b == 0) "w0" else s"cb${b - 1}")).mkString(",\n")
     s"""w AS MATERIALIZED (
        |  SELECT word, count(*) AS freq FROM (
@@ -4757,15 +4757,15 @@ object SparkEntry {
        |$roundCtes""".stripMargin
   }
 
-  /** Deep BPE-training oracle: 512 merges in [[DeepRounds]] (20) chained
-    * batched-greedy rounds of maxBatch = 64 — the registered
-    * bpe_train_512 config — over the deep-vocabulary derived corpus,
-    * cut at rank 512. */
   /** Round budget for the deep rows: early rounds are conflict-starved
     * (the 26-letter alphabet bounds symbol-disjoint picks), so 512 merges
     * need more than ceil(512/64) rounds; 20 is measured comfortable. */
   private val DeepRounds = 20
 
+  /** Deep BPE-training oracle: 512 merges in [[DeepRounds]] (20) chained
+    * batched-greedy rounds of maxBatch = 64 — the registered
+    * bpe_train_512 config — over the deep-vocabulary derived corpus,
+    * cut at rank 512. */
   private val BpeTrain512Oracle: String = {
     val n = 512
     val batch = 64
@@ -4777,7 +4777,7 @@ object SparkEntry {
     // raises the limit first — duckdb-python executes the pair and
     // returns the final SELECT's frame
     s"""SET max_expression_depth TO 7500;
-       |WITH ${bpeBatchedRoundsCteChained(n, batch, DeepVocabDocsSql, DeepRounds)}
+       |WITH ${bpeBatchedRoundsCteChained(batch, DeepVocabDocsSql)}
        |SELECT * FROM (
        |  SELECT CAST(row_number() OVER (ORDER BY b, j) AS BIGINT) AS rank,
        |    l AS left_sym, r AS right_sym, CAST(c AS BIGINT) AS pair_count
@@ -4797,7 +4797,7 @@ object SparkEntry {
     val sel = (0 until DeepRounds).map(b =>
       s"SELECT $b AS b, j, l, r FROM cb${b}_m").mkString(" UNION ALL ")
     s"""SET max_expression_depth TO 7500;
-       |WITH RECURSIVE ${bpeBatchedRoundsCteChained(n, batch, DeepVocabDocsSql, DeepRounds)},
+       |WITH RECURSIVE ${bpeBatchedRoundsCteChained(batch, DeepVocabDocsSql)},
        |mt AS MATERIALIZED (SELECT * FROM (
        |  SELECT CAST(row_number() OVER (ORDER BY b, j) AS BIGINT) AS rank,
        |    l, r FROM ($sel)) WHERE rank <= $n),

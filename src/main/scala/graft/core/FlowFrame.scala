@@ -116,9 +116,10 @@ object FlowFrame {
    * default the routed frame is persisted (memory-and-disk) and the N
    * filters share one materialization; call `unpersist()` on the input
    * when done, or pass `cache = false` if a single relationship will be
-   * consumed. For writing all edges in ONE pass, prefer
-   * `FlowRuntime.relationshipSink` — a single
-   * `partitionBy("relationship")` write is the scan-once shape at 100 TB.
+   * consumed. For writing all edges of a stream in ONE pass, prefer
+   * `FlowRuntime.relationshipSink` — a file sink partitioned by
+   * relationship is the scan-once shape at 100 TB, and it commits each
+   * micro-batch exactly once.
    */
   def routed(df: DataFrame, relationships: Seq[String],
              cache: Boolean = true): Map[String, DataFrame] = {

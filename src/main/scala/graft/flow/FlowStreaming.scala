@@ -14,8 +14,11 @@ import graft.streaming.FlowRuntime
  * lazy transforms the batch sweep uses (they are relationship-routed
  * column ops, agnostic to batch vs stream), and the terminal edge lands
  * in a relationship-partitioned sink — one query, one checkpoint, the
- * micro-batch as the session commit. The scheduling strategy/period of
- * the SOURCE processor picks the trigger (FlowRuntime.trigger).
+ * micro-batch as the session commit. The sink is Spark's exactly-once
+ * file sink, so a sink root belongs to the one checkpoint that wrote it
+ * (`run`, `runCron` and `runWithTerminalSink` refuse a fresh checkpoint
+ * over a written root). The scheduling strategy/period of the SOURCE
+ * processor picks the trigger (FlowRuntime.trigger).
  *
  * Scope: linear/branching DAGs with ONE source and ONE terminal
  * processor. Stateful fan-in (DefragmentText, MergeContent Bin-Pack)
@@ -73,8 +76,28 @@ object FlowStreaming {
     * parquet) with the source's scheduling strategy as the trigger;
     * drains available data and returns the running query. */
   def run(spark: SparkSession, flow: FlowDef, outRoot: String,
-          checkpoint: String): StreamingQuery = {
-    val routed = assemble(spark, flow)
+          checkpoint: String): StreamingQuery =
+    drainInto(assemble(spark, flow), outRoot, checkpoint)
+
+  /** Drain `routed` into the relationship sink at `outRoot`, once the
+    * root is known to belong to `checkpoint`. The file sink skips every
+    * batch id its `_spark_metadata` log already holds, so a fresh
+    * checkpoint (batch ids from 0) over a root that another query wrote
+    * would silently drop data: refuse that start. A checkpoint that has
+    * run before has a `commits` log and passes, as do first runs. */
+  private def drainInto(routed: DataFrame, outRoot: String,
+                        checkpoint: String): StreamingQuery = {
+    val conf = routed.sparkSession.sessionState.newHadoopConf()
+    def exists(p: String): Boolean = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(conf).exists(path)
+    }
+    if (exists(s"$outRoot/_spark_metadata") && !exists(s"$checkpoint/commits"))
+      throw new IllegalStateException(
+        s"sink root $outRoot holds another query's _spark_metadata log but " +
+          s"checkpoint $checkpoint has never run: the file sink would skip " +
+          "the batch ids that log already holds and lose their rows. Resume " +
+          "with the checkpoint that wrote the root, or write to a new root.")
     FlowRuntime.runAvailable(
       FlowRuntime.relationshipSink(routed, outRoot), checkpoint)
   }
@@ -105,10 +128,7 @@ object FlowStreaming {
           s"cron '${source.schedulingPeriod}' never fires again"))
       val delay = java.time.Duration.between(now, next).toMillis
       if (delay > 0) Thread.sleep(delay)
-      val q = FlowRuntime.runAvailable(
-        FlowRuntime.relationshipSink(assemble(spark, flow), outRoot),
-        checkpoint)
-      q.stop()
+      drainInto(assemble(spark, flow), outRoot, checkpoint).stop()
       next
     }
   }
@@ -131,9 +151,7 @@ object FlowStreaming {
         // results already (Processors dispatch); its DIRECTORY becomes
         // the partitioned sink root for the flow's upstream edge instead,
         // which is the scan-once bulk-write shape at scale
-        val upstream = assembleUpTo(spark, flow, terminal)
-        FlowRuntime.runAvailable(
-          FlowRuntime.relationshipSink(upstream, props("Directory")),
+        drainInto(assembleUpTo(spark, flow, terminal), props("Directory"),
           checkpoint)
       case "PublishKafka" =>
         val upstream = assembleUpTo(spark, flow, terminal)

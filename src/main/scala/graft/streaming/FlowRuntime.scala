@@ -11,9 +11,18 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
  * Streaming: a processor chain is a DataFrame transform composition, a
  * Connection hand-off is a micro-batch boundary, and per-relationship
  * fan-out (ProcessSession::routeFlowFile, ProcessSession.cpp:804) becomes a
- * relationship-partitioned sink — one `foreachBatch` write, partitioned by
- * the relationship column, so each edge lands in its own directory without
+ * relationship-partitioned sink — Spark's file sink partitioned by the
+ * relationship column, so each edge lands in its own directory without
  * N separate filtered queries.
+ *
+ * The file sink is exactly-once: it writes part files in place, commits
+ * them with one `_spark_metadata` log entry per batch, and skips a batch
+ * id its log already holds, so a restart that re-runs the last batch
+ * adds no rows. Readers see only committed files when they read the sink
+ * root (`spark.read.parquet(root)`). The same log makes the sink single-
+ * writer: a root belongs to one checkpoint (see `FlowStreaming`'s guard).
+ * Checkpoint and sink logs on local paths commit through
+ * [[LocalCheckpointFileManager]].
  */
 object FlowRuntime {
 
@@ -62,14 +71,17 @@ object FlowRuntime {
   }
 
   /** Relationship-partitioned sink: every micro-batch writes each output
-    * edge under <root>/relationship=<name>/ (parquet). The micro-batch is
-    * the reference's per-trigger session commit (ProcessSession.cpp:855). */
-  def relationshipSink(routed: DataFrame, root: String): DataStreamWriter[Row] =
-    routed.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      batch.write.mode("append")
-        .partitionBy("relationship")
-        .parquet(root)
-    }
+    * edge under <root>/relationship=<name>/ (parquet) and commits the
+    * batch in <root>/_spark_metadata. The micro-batch is the reference's
+    * per-trigger session commit (ProcessSession.cpp:855). Installs the
+    * local checkpoint store on the session first, for sessions that were
+    * not built by `graft.Session`. */
+  def relationshipSink(routed: DataFrame, root: String): DataStreamWriter[Row] = {
+    LocalCheckpointFileManager.install(routed.sparkSession)
+    routed.writeStream.format("parquet")
+      .partitionBy("relationship")
+      .option("path", root)
+  }
 
   /** Start + drain helper for batch-like runs (tests, cron ticks). */
   def runAvailable(writer: DataStreamWriter[Row], checkpoint: String): StreamingQuery = {
