@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -518,18 +519,9 @@ object Bench {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-ndrun-" +
       java.util.UUID.randomUUID
     val schema = spark.read.parquet(s"$docsDir/documents.parquet").schema
-    // two corpus layouts: the staged corpora ship documents.parquet as a
-    // DIRECTORY of part files (stream path = that dir), the sf fixture
-    // as ONE FILE (the file-stream source needs a directory path, so
-    // stream the parent dir with a name filter — it lists leaf files
-    // only, never descending into sibling .parquet dirs)
-    val one = new java.io.File(s"$docsDir/documents.parquet")
-    val docs =
-      if (one.isDirectory)
-        spark.readStream.schema(schema).parquet(s"$docsDir/documents.parquet")
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(docsDir)
+    // stageNearDupCorpus writes documents.parquet as a DIRECTORY of part
+    // files, which the file-stream source lists (it needs a directory path)
+    val docs = spark.readStream.schema(schema).parquet(s"$docsDir/documents.parquet")
     val banded = graft.streaming.StatefulOps.bandDocs(docs, col("doc_id"),
       col("text"), col("doc_id"), n = 5, numHashes = 8, rowsPerBand = 2)
     val hits = graft.streaming.StatefulOps.detectNearDuplicates(banded,
@@ -542,28 +534,179 @@ object Bench {
     q.awaitTermination()
   }
 
-  def main(args: Array[String]): Unit = {
-    // all JSON emitters below use the f-interpolator (= String.format in
-    // the DEFAULT locale): pin ROOT so a comma-decimal locale can never
-    // emit unparseable "0,123" numbers (r19 ADVICE)
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Session(s"local[$cpus]", cpus)
-    // Warm EVERY headline query once at the smallest scale before measuring:
-    // profiled cold-vs-warm (`graft.Dev time`, sf0.1) shows 5-7 s of one-time
-    // codegen compile + classloading per distinct query shape vs 0.8-1.8 s
-    // steady-state. A cluster run amortizes that one-time cost over hours,
-    // so the number that predicts 100 TB throughput is the warm pass. The
-    // warm-up runs at sf0.01 — an order of magnitude below the measured
-    // scale, so no target-scale data is pre-cached, but with enough task
-    // volume that the JIT actually tiers the generated code (one pass at
-    // sf0.001 measured insufficient: the measured pass still paid compile).
+  /** A corpus directory, staged on first use and then reused. Its name
+    * tells the uniform sf corpus ("sf") from the staged ones without
+    * staging anything. */
+  final class Corpus(val name: String, stage: => String) {
+    lazy val dir: String = stage
+  }
+
+  /** A throughput row: `name` = the basis `count`ed over the row's corpus
+    * divided by the row's min. */
+  final case class Basis(name: String, count: String => Long)
+
+  /** One bench step, in run order. */
+  sealed trait Step
+
+  /** An unmeasured pass; [[run]] logs its failure and goes on. */
+  final case class Warm(tag: String, body: () => Unit) extends Step
+
+  /** A measured row: `reps` traced runs of `body` over the corpus dir,
+    * which is staged before the clock starts. */
+  final case class Row(name: String, corpus: Corpus, reps: Int,
+                       body: String => Unit, headline: Boolean = false,
+                       basis: Option[Basis] = None) extends Step
+
+  /** A published row: its reps (barrier plans dropped) and its throughput,
+    * if it has a basis. */
+  final case class Measured(row: Row, reps: Seq[Dev.Trace],
+                            throughput: Option[(String, Double)]) {
+    def times: Seq[Double] = reps.map(_.wallS)
+    /** The rep that set the row's min; its jobs and segments are the
+      * row's record. */
+    def best: Dev.Trace = reps.minBy(_.wallS)
+  }
+
+  /** A row that published no number, with the first line of its first
+    * error. */
+  final case class Failed(row: Row, error: String)
+
+  final case class Report(rows: Seq[Measured], failed: Seq[Failed]) {
+    /** The headline-subset sum (the stable round-over-round unit), unless a
+      * headline row failed: a partial sum would read as a faster run. */
+    def value: Option[Double] =
+      if (failed.exists(_.row.headline)) None
+      else Some(rows.filter(_.row.headline).map(_.best.wallS).sum)
+
+    /** The sum over every row, unless any row failed. */
+    def sumAllRows: Option[Double] =
+      if (failed.nonEmpty) None else Some(rows.map(_.best.wallS).sum)
+
+    private def head = ListMap("metric" -> "headline_sum", "value" -> value,
+      "unit" -> "sec", "sum_all_rows" -> sumAllRows)
+    private def secs(rs: Seq[Measured]) =
+      ListMap.from(rs.map(m => m.row.name -> m.best.wallS))
+    // throughput rows live in their own section with an explicit unit:
+    // every row in `queries` is seconds
+    private def throughput = ListMap.from(rows.flatMap(_.throughput)
+      .map { case (k, v) => k -> math.round(v) })
+    private def failedRows = ListMap.from(failed.map(f => f.row.name -> f.error))
+
+    /** The full record. `spread` keeps min (the published point estimate)
+      * with the med/max band one run actually spans, so a cross-run delta
+      * can be judged against a measured band; `trace` holds the jobs and
+      * segments of the rep that set each row's min. */
+    def json(sf: String): String = js(head ++ ListMap(
+      "queries" -> secs(rows),
+      "spread" -> ListMap.from(rows.map(m => m.row.name -> ListMap("min" -> m.times.min,
+        "med" -> median(m.times), "max" -> m.times.max, "reps" -> m.times.size))),
+      "throughput" -> ListMap("unit" -> "per_sec (suffix carries the basis)",
+        "rows" -> throughput),
+      "trace" -> ListMap.from(rows.map(m => m.row.name -> ListMap("jobs" -> m.best.jobs,
+        "segments" -> m.best.segments.map(s => ListMap(
+          "label" -> s.label, "wall_ms" -> s.wallMs, "jobs" -> s.jobs))))),
+      "failed_rows" -> failedRows, "sf" -> sf))
+
+    /** The compact last line: totals, throughput, the ten slowest rows and
+      * the failed rows, well under a 2 KB tail window. */
+    def summary(sf: String): String = js(head ++ ListMap("sf" -> sf,
+      "rows" -> rows.size, "full" -> "BENCH_LATEST.json", "throughput" -> throughput,
+      "top10" -> secs(rows.sortBy(-_.best.wallS).take(10)), "failed_rows" -> failedRows))
+  }
+
+  private def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** JSON text: maps keep their order, None is null, doubles print with
+    * three decimals. */
+  private def js(v: Any): String = v match {
+    case None => "null"
+    case Some(x) => js(x)
+    case d: Double => f"$d%.3f"
+    case m: ListMap[_, _] =>
+      m.map { case (k, x) => js(k) + ":" + js(x) }.mkString("{", ",", "}")
+    case xs: Seq[_] => xs.map(js).mkString("[", ",", "]")
+    case s: String => s.iterator.map {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c    => c.toString
+    }.mkString("\"", "", "\"")
+    case x => x.toString
+  }
+
+  /** The one measured loop: every rep of every row runs through Dev's
+    * tracer ([[Dev.measure]]). A failed warm-up is logged and the run goes
+    * on: the row's measured reps then fail on their own and land in
+    * failed_rows, instead of one warm-up killing every row. */
+  def run(spark: SparkSession, steps: Seq[Step]): Report = {
+    val (failed, rows) = steps.flatMap {
+      case Warm(tag, body) =>
+        try body()
+        catch { case e: Throwable => System.err.println(s"[bench] warm $tag: $e") }
+        None
+      case r: Row => Some(measure(spark, r))
+    }.partitionMap(identity)
+    Report(rows, failed)
+  }
+
+  /** One row, its corpus staged before the clock starts. A row whose
+    * corpus, rep or basis fails publishes nothing. */
+  private def measure(spark: SparkSession, r: Row): Either[Failed, Measured] =
+    (for {
+      dir <- scala.util.Try(r.corpus.dir).toEither
+      reps <- Dev.measure(spark, r.reps)(r.body(dir))(t =>
+        t.copy(segments = t.segments.map(_.copy(barrier = None))))
+      tp <- scala.util.Try(r.basis.map(b =>
+        b.name -> b.count(dir) / reps.map(_.wallS).min)).toEither
+    } yield Measured(r, reps, tp)).left.map { e =>
+      System.err.println(s"[bench] ${r.name}: $e")
+      Failed(r, e.toString.linesIterator.nextOption().getOrElse("").take(200))
+    }
+
+  /** Every bench step, in run order. Corpora are staged on first use, so
+    * each staging write lands right before the first step that reads it. */
+  def steps(spark: SparkSession, sfDir: String): Seq[Step] = {
+    import graft.pipeline.{Similarity, Staging}
+    // Warm EVERY benched query shape once at the smallest scale before
+    // measuring: profiled cold-vs-warm (`graft.Dev time`, sf0.1) shows 5-7 s
+    // of one-time codegen compile + classloading per distinct query shape
+    // vs 0.8-1.8 s steady-state. A cluster run amortizes that one-time cost
+    // over hours, so the number that predicts 100 TB throughput is the warm
+    // pass. The warm-up runs at sf0.01 — an order of magnitude below the
+    // measured scale, so no target-scale data is pre-cached, but with enough
+    // task volume that the JIT actually tiers the generated code (one pass
+    // at sf0.001 measured insufficient: the measured pass still paid
+    // compile). Non-headline rows are warmed too: a row whose first
+    // measured rep pays codegen compile publishes an inverted 1×-vs-x10
+    // pair (observed: a cold 1× row slower than its warm x10 row).
     val warmDir = "/root/testdata/sf0.01"
-    // warm EVERY benched query shape, not only the headline set — a
-    // non-headline row whose first measured rep pays codegen compile
-    // publishes an inverted 1×-vs-x10 pair (observed: a cold 1× row
-    // slower than its warm x10 row)
+    val sf = new Corpus("sf", sfDir)
+    // Staging time is excluded (fixture construction, not query work); each
+    // measured rep still reads its staged parquet from disk.
+    val skewC = new Corpus("skew", stageSkewed(spark, sfDir))
+    val x10C = new Corpus("x10", stageX10(spark, sfDir))
+    val long1x = new Corpus("longdoc", stageLongDocs(spark, sfDir, "1x"))
+    val long10x = new Corpus("x10_longdoc",
+      stageLongDocs(spark, x10C.dir, "10x", contentKey = sfDir))
+    val substrSkew = new Corpus("skew_longdoc",
+      stageSubstrSkew(spark, long1x.dir, sfDir))
+    val massDup = new Corpus("massdup", stageMassDup(spark, sfDir))
+    val embSkew = new Corpus("skew_embeddings",
+      stageEmbSkew(spark, x10C.dir, "10x", contentKey = sfDir))
+    // mult=30 per the round-11 finding (see stageTailCorpus): the drain
+    // must be data-dominated before the 1×/x10 pair means anything
+    val tail1x = new Corpus("tail", stageTailCorpus(spark, sfDir, "1x", mult = 30))
+    val tail10x = new Corpus("x10_tail",
+      stageTailCorpus(spark, x10C.dir, "10x", mult = 30, contentKey = sfDir))
+    val nd1x = new Corpus("neardup",
+      stageNearDupCorpus(spark, sfDir, "1x", mult = 10))
+    val nd10x = new Corpus("x10_neardup",
+      stageNearDupCorpus(spark, x10C.dir, "10x", mult = 10, contentKey = sfDir))
+
     // Force FULL output materialization through the noop sink. r14 audit
     // of every benched row's `groupBy().count()` optimized plan: Catalyst's
     // column pruning + unique-key outer-join elimination gutted several
@@ -572,385 +715,64 @@ object Bench {
     // materialized), token_count and curate_filters_map lost all their
     // per-doc computation, and shuffle_export shuffled only the 32-byte
     // key. The noop sink executes the exact output schema every engine
-    // consumer would receive and discards it executor-side — no driver
-    // collect, no files. Any new row must be measured this way, never by
-    // a count.
-    def force(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    // The one unmeasured warm pass. A failed warm-up is logged and the run
-    // goes on: the row's measured reps then fail on their own and publish
-    // the sentinel (see rep), instead of one warm-up killing every row.
-    def warm(tag: String)(once: => Unit): Unit =
-      try once
-      catch { case e: Throwable => System.err.println(s"[bench] warm $tag: $e") }
-    (0 until 2).foreach { _ =>
-      (headline ++ skewed ++ x10 ++ extra).distinct.foreach { name =>
-        warm(name)(force(name, warmDir))
-      }
-    }
+    // consumer would receive and discards it executor-side. Any new row
+    // must be measured this way, never by a count.
+    def query(name: String)(dir: String): Unit =
+      Dev.noop(SparkEntry.queries(name)(spark, dir))
     // Min of N measured reps per query: the container's vCPUs see bursty
-    // steal (same binary, same data: 0.4 s vs 2.9 s run-to-run; the composed
-    // pipeline_e2e spans many job boundaries and swings 2-10 s), and min is
+    // steal (same binary, same data: 0.4 s vs 2.9 s run-to-run), and min is
     // the noise-robust point estimate under one-sided interference noise —
-    // every rep does the full sf-dir read, so no work is hidden, only
-    // scheduler interference. The LSH rows get FIVE reps instead of three:
-    // round 6 published a 2.325 s dedup_minhash_lsh that a rerun measured at
-    // 0.699 s — all three reps had landed in one steal window. More reps (not
-    // a different estimator) is the fix: min stays comparable round-over-
-    // round, while median would sit on top of whatever noise the middle rep
-    // caught.
-    // pipeline_e2e spans many job boundaries and measured 1.5-2.7 s
-    // run-to-run under scheduler steal — same fix as the LSH rows: more
-    // reps, min stays the comparable estimator.
-    // route_text and the ANN probe rows joined the set in round 12: the
-    // published r11 numbers (route_text 0.799, x10_embed_topk_lsh 1.956)
-    // were 2-4× one-sided steal spikes that min-of-3 failed to reject
-    // (idle reruns: 0.524 / 0.498). The base name keys both the 1× and
-    // x10/skew variants of a query.
-    // r21 (r20 verdict #6, variance discipline): rows whose committed
-    // max/min spread exceeded 2× between same-code runs get five reps —
-    // dedup_substrings (its base name also keys the longdoc/skew/x10
-    // variants, the 2-3× swingers of the r20 record) and dclm_e2e (the
-    // r20 round's med swung 12.8-17.4 s under driver load while idle
-    // runs read ~4 s). Additions-only: no existing row's timing loop or
-    // estimator changed, reps ride along in the spread record.
+    // every rep does the full corpus read, so no work is hidden, only
+    // scheduler interference. Rows that kept landing all three reps in one
+    // steal window get FIVE: the LSH rows (round 6 published a 2.325 s
+    // dedup_minhash_lsh that a rerun measured at 0.699 s), pipeline_e2e
+    // (many job boundaries, 1.5-2.7 s run-to-run), route_text and the ANN
+    // probe rows (r11's 0.799 / 1.956 were 2-4× spikes, idle reruns 0.524 /
+    // 0.498), and r21's dedup_substrings (2-3× swings across its
+    // longdoc/skew/x10 variants) and dclm_e2e (med 12.8-17.4 s under driver
+    // load vs ~4 s idle). More reps, not a different estimator: min stays
+    // comparable round-over-round. The base name keys every variant.
     val wideNoise = Set("dedup_minhash_lsh", "dedup_minhash_lsh_capped",
       "pipeline_e2e", "route_text", "embed_topk_lsh", "embed_topk",
       "embed_neardup", "tfidf_topk",
       "dedup_substrings", "dclm_e2e")
-    // r19 (verdict #4): per-ROW spread telemetry. Every published row keeps
-    // min as its point estimate (noise-robust under one-sided steal, the
-    // established round-over-round unit), but the full rep vector is
-    // recorded so BENCH_LATEST.json carries min/median/max per row — cross-
-    // run deltas (the driver re-run swung x10_slimpajama_e2e 68% vs the
-    // committed idle run) can then be judged against a MEASURED band
-    // instead of a remembered one.
-    val repTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def rec(row: String, ts: Seq[Double]): (String, Double) = {
-      repTimes(row) = ts
-      row -> ts.min
-    }
-    // The one measured-rep loop. A FAILED rep records the 1e9 s sentinel,
-    // never its wall time: publishing a crash's time-to-exception as a
-    // timing would read as a (fast) valid row, and min-of-N would even
-    // prefer it. A row whose every rep fails publishes 1e9.
-    def rep(tag: String, n: Int)(once: => Unit): Seq[Double] =
-      (0 until n).map { _ =>
-        val t0 = System.nanoTime()
-        try { once; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag: $e"); 1e9 }
-      }
-    def timesOfN(name: String, dir: String): Seq[Double] =
-      rep(name, if (wideNoise(name)) 5 else 3)(force(name, dir))
-    val results = headline.map(name => rec(name, timesOfN(name, sfDir)))
-    // Degenerate-skew rows: same queries, mass-duplicated corpus. Staging
-    // time is excluded (it is test-fixture construction, not query work);
-    // each measured rep still reads the skewed parquet from disk. Skewed
-    // queries outside the headline set also get a uniform comparator row;
-    // neither counts toward the round-over-round total.
-    // uniform comparator rows are measured BEFORE any staging write: a
-    // just-finished multi-hundred-MB corpus write leaves GC/page-cache
-    // pressure that outlasts min-of-3 (measured: a comparator row 5×
-    // slower right after stageX10 vs identical in isolation)
-    val skewComparators =
-      skewed.filterNot(headline.contains)
-        .map(name => rec(name, timesOfN(name, sfDir)))
-    val x10Comparators =
-      x10.filterNot(n => headline.contains(n) || skewed.contains(n))
-        .map(name => rec(name, timesOfN(name, sfDir)))
-    val skewDir = stageSkewed(spark, sfDir)
-    val skewResults =
-      skewComparators ++
-      skewed.map(name => rec(s"skew_$name", timesOfN(name, skewDir)))
-    // Scale-decade rows: same queries, a 10× corpus staged from the sf
-    // documents (staging time excluded — fixture construction, not query
-    // work). Each x10_* row pairs with a 1× row measured this same run
-    // (headline or uniform comparator); the ratio is the near-linearity
-    // evidence. Queries outside the headline set get their uniform
-    // comparator row exactly like the skewed set does.
-    val x10Dir = stageX10(spark, sfDir)
-    // Pin a warm pass AT the x10 scale before measuring: r13's
-    // x10_dedup_minhash_lsh published 0.723 s against a 1.051 s idle
-    // rerun — this row's second >30% excursion in three rounds. The
-    // sf0.01 warm-up tiers the codegen but leaves the first x10-scale rep
-    // with cold page cache and un-scaled JIT profiles; one unmeasured
-    // x10 pass makes every measured rep steady-state in both directions.
-    x10.foreach(name => warm(s"x10 $name")(force(name, x10Dir)))
-    val x10Results =
-      x10Comparators ++
-      x10.map(name => rec(s"x10_$name", timesOfN(name, x10Dir)))
-    // EXACTSUBSTR long-doc pair (see stageLongDocs): the same registered
-    // query, 16× the tokens per doc — the explode/agg path dominates the
-    // job floor, so THIS pair carries the near-linearity evidence; the
-    // plain dedup_substrings rows above stay as the regression guard.
-    val longDir1 = stageLongDocs(spark, sfDir, "1x")
-    val longDir10 = stageLongDocs(spark, x10Dir, "10x", contentKey = sfDir)
-    Seq(longDir1, longDir10).foreach(d =>
-      warm("longdoc")(force("dedup_substrings", d)))
-    val longResults = Seq(
-      rec("longdoc_dedup_substrings", timesOfN("dedup_substrings", longDir1)),
-      rec("x10_longdoc_dedup_substrings",
-        timesOfN("dedup_substrings", longDir10)))
-    // Mass-duplication skew row for EXACTSUBSTR (see stageSubstrSkew):
-    // pairs with longdoc_dedup_substrings above — a hot window key with
-    // ~1,500 copies must stay within the capped-family band, not funnel
-    val substrSkewDir = stageSubstrSkew(spark, longDir1, sfDir)
-    warm("substr skew")(force("dedup_substrings", substrSkewDir))
-    val substrSkewResults = Seq(
-      rec("skew_longdoc_dedup_substrings",
-        timesOfN("dedup_substrings", substrSkewDir)))
-    // Mass-duplication EXACTSUBSTR pair (r16, the done-criterion for the
-    // now-implemented hot-key salt): see stageMassDup — ONE window key
-    // with ~0.3·|docs|·10,745 copies (~48M at sf0.1). Unsalted, that key
-    // funnels through ONE count-window partition (probed 11.9 s vs 8.2 s
-    // salted at sf0.1, the gap growing with the hot mass — measured as
-    // the contrast row, min-of-2 like the uncapped semantic-skew row);
-    // with hotKeyThreshold = 100k the heavy-hitter pre-pass salts it
-    // into ~480 sub-partitions and the tail parallelizes.
-    val massDupDir = stageMassDup(spark, sfDir)
-    def substrOnce(dir: String, thr: Long): Unit =
-      graft.pipeline.Dedup.dedupSubstrings(
+    def row(corpus: Corpus, base: String, prefix: String = ""): Row =
+      Row(prefix + base, corpus, if (wideNoise(base)) 5 else 3, query(base),
+        headline = prefix.isEmpty && Bench.headline.contains(base))
+    def embeddings(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
+    def substr(thr: Long)(dir: String): Unit =
+      Dev.noop(graft.pipeline.Dedup.dedupSubstrings(
         spark.read.parquet(s"$dir/documents.parquet"),
-        col("doc_id"), col("text"), k = 8, hotKeyThreshold = thr)
-        .write.format("noop").mode("overwrite").save()
-    def substrTimes(dir: String, thr: Long, reps: Int): Seq[Double] =
-      rep("massdup", reps)(substrOnce(dir, thr))
-    warm("massdup")(substrOnce(massDupDir, 100000L)) // the salted shape at scale
-    val massDupResults = Seq(
-      rec("massdup_dedup_substrings", substrTimes(massDupDir, 0L, 2)),
-      // r21: 5 reps (was 3) — committed same-code runs of this row read
-      // 4.3 vs 8.5 s (r20 record); the unsalted twin stays min-of-2 (a
-      // deliberately slow contrast row, more reps buy nothing)
-      rec("massdup_dedup_substrings_salted",
-        substrTimes(massDupDir, 100000L, 5)))
-    // SemDeDup scale pair: the registered query's fixed nCentroids=8 would
-    // make the intra-cluster pair join quadratic at 10× BY CONFIG (cluster
-    // population ∝ N at fixed k) — the paper's own scale knob is cluster
-    // count ∝ corpus (Abbas 2023 §3 runs 50k clusters on LAION), which
-    // holds per-cluster population (and so pair volume per row) constant.
-    // The x10 row scales k 8→80 accordingly; the pair ratio is the
-    // linearity evidence UNDER the published scaling rule. (The 1× row
-    // here matches dedup_semantic's registered config exactly.)
-    def semDedupOnce(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2)
-        .write.format("noop").mode("overwrite").save()
-    def semDedupTimes(dir: String, nC: Int): Seq[Double] =
-      rep("semdedup", 3)(semDedupOnce(dir, nC))
-    warm("semdedup")(semDedupOnce(warmDir, 8))
-    warm("x10 semdedup")(semDedupOnce(x10Dir, 80))
-    val semResults = Seq(
-      rec("dedup_semantic", semDedupTimes(sfDir, 8)),
-      rec("x10_dedup_semantic", semDedupTimes(x10Dir, 80)))
-    // Full D4 pair, same cluster-count scaling rule as the SemDeDup pair
-    // (k ∝ corpus per Abbas 2023 §3; the re-cluster phase scales with it)
-    def d4Once(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.d4(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, dropFraction = 0.3, nCentroids = nC, lloydIters = 2)
-        .write.format("noop").mode("overwrite").save()
-    def d4Times(dir: String, nC: Int): Seq[Double] =
-      rep("d4", 3)(d4Once(dir, nC))
-    warm("d4")(d4Once(warmDir, 8))
-    warm("x10 d4")(d4Once(x10Dir, 80))
-    val d4Results = Seq(
-      rec("d4_e2e", d4Times(sfDir, 8)),
-      rec("x10_d4_e2e", d4Times(x10Dir, 80)))
-    // r18 (#7): the 100 TB fault-tolerance mode, priced — the same
-    // d4_e2e row under spark.graft.staging=reliable (durable checkpoint
-    // instead of executor-local blocks at EVERY compute-once barrier;
-    // results identical by StagingSpec). The gap vs d4_e2e is the
-    // per-barrier durable write+read a deployment pays so the heaviest
-    // staged chain survives executor loss.
-    val d4ReliableResults = {
-      spark.sparkContext.setCheckpointDir(
-        s"${System.getProperty("java.io.tmpdir")}/graft-bench-ckpt")
-      // restore whatever the conf held BEFORE the block (r18 ADVICE:
-      // hardcoding "local" in the finally would silently clobber a
-      // non-default spark.graft.staging for all subsequent rows)
-      val prevStaging = spark.conf.getOption(graft.pipeline.Staging.ConfKey)
-      spark.conf.set(graft.pipeline.Staging.ConfKey, "reliable")
-      try {
-        warm("d4 reliable")(d4Once(sfDir, 8))
-        Seq(rec("d4_e2e_reliable", d4Times(sfDir, 8)))
-      } finally prevStaging match {
-        case Some(v) => spark.conf.set(graft.pipeline.Staging.ConfKey, v)
-        case None    => spark.conf.unset(graft.pipeline.Staging.ConfKey)
-      }
+        col("doc_id"), col("text"), k = 8, hotKeyThreshold = thr))
+    def emb(f: DataFrame => DataFrame): String => Unit =
+      dir => Dev.noop(f(embeddings(dir)))
+    def semDedup(nC: Int) = emb(Similarity.semDedup(_,
+      threshold = 0.3, nCentroids = nC, lloydIters = 2))
+    def d4(nC: Int) = emb(Similarity.d4(_,
+      threshold = 0.3, dropFraction = 0.3, nCentroids = nC, lloydIters = 2))
+    val semDedupCapped = emb(Similarity.semDedup(_,
+      threshold = 0.3, nCentroids = 80, lloydIters = 2, maxClusterSize = 64))
+    val semDedupUnblocked = emb(Similarity.semDedup(_,
+      threshold = 0.3, nCentroids = 80, lloydIters = 2,
+      saltBlockSize = Int.MaxValue))
+    // restore whatever the conf held before: hardcoding "local" afterwards
+    // would silently clobber a non-default spark.graft.staging for all
+    // later rows
+    def d4Reliable(dir: String): Unit = {
+      val prev = spark.conf.getOption(Staging.ConfKey)
+      spark.conf.set(Staging.ConfKey, "reliable")
+      try d4(8)(dir)
+      finally prev.fold(spark.conf.unset(Staging.ConfKey))(
+        spark.conf.set(Staging.ConfKey, _))
     }
-    // Degenerate-cluster contrast set (r15, mirroring the capped LSH
-    // pair): 70% of the corpus becomes ONE exact direction — identical
-    // quantized vectors score identical cosines to every centroid and
-    // the (negCos, cent) tie-break sends the whole mass to one cluster.
-    // r17: the DEFAULT path is now exact-salted (the within-cluster pair
-    // join splits block-wise past saltBlockSize), so skew_dedup_semantic
-    // measures the default a naive caller gets; _unblocked disables the
-    // salt (saltBlockSize = MaxValue, the r16 one-task quadratic) as the
-    // contrast, and _capped keeps the recall-trade bound. The default
-    // must land near the capped row, not the unblocked one.
-    // staged from the x10 embeddings (20k vectors at sf0.1): at the 1×
-    // corpus's 2,000 vectors the hot cluster's quadratic term is below
-    // the job floor (probed 2.19 vs 2.13 uniform) and the pair proves
-    // nothing — 14k identical vectors make the uncapped pair join ~100M
-    // cosine evaluations, a contrast the cap must visibly bound
-    val embSkewDir = stageEmbSkew(spark, x10Dir, "10x", contentKey = sfDir)
-    def semDedupCappedOnce(dir: String, nC: Int, cap: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2,
-        maxClusterSize = cap)
-        .write.format("noop").mode("overwrite").save()
-    def semDedupCappedTimes(dir: String, nC: Int, cap: Int): Seq[Double] =
-      rep("semdedup cap", 3)(semDedupCappedOnce(dir, nC, cap))
-    // the default (salted-exact) and capped rows get the usual warm +
-    // min-of-3; the unblocked row is the deliberately-adversarial
-    // contrast (r16 measured 42.3 s — ~100M cosine evaluations through
-    // ONE task) and gets ONE rep with no separate warm: its code shape
-    // is warmed by the other rows, and burning 80+ s on more reps of a
-    // row whose point is an order-of-magnitude gap buys nothing.
-    def semDedupUnblockedOnce(dir: String, nC: Int): Unit =
-      graft.pipeline.Similarity.semDedup(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        threshold = 0.3, nCentroids = nC, lloydIters = 2,
-        saltBlockSize = Int.MaxValue)
-        .write.format("noop").mode("overwrite").save()
-    warm("semskew")(semDedupOnce(embSkewDir, 80))
-    warm("semskew cap")(semDedupCappedOnce(embSkewDir, 80, 64))
-    val semSkewResults = Seq(
-      rec("skew_dedup_semantic", semDedupTimes(embSkewDir, 80)),
-      rec("skew_dedup_semantic_unblocked",
-        rep("semskew unblocked", 1)(semDedupUnblockedOnce(embSkewDir, 80))),
-      rec("skew_dedup_semantic_capped",
-        semDedupCappedTimes(embSkewDir, 80, 64)))
-    // Production-parameter IVFADC row (r16, the plan-literal-purge
-    // done-criterion): nCells=256, m=16, k=256 on the x10 embeddings —
-    // the parameter class where r15's typedlit cross-dot map (nCells·m·k
-    // plan entries) exploded codegen; the broadcast cross-dot table makes
-    // it a ~8 MB data question. min-of-2 (a completion-and-band probe,
-    // like the uncapped skew contrast rows), warmed once.
-    // r17: FAISS-style sampled codebook training (trainFraction) — the
-    // Lloyd rounds (the honest bulk of the r16 51.6 s) run on a
-    // deterministic 25% md5-fraction while the full corpus is still
-    // assigned + encoded; the _sampled row is the production
-    // configuration, the full-train row stays as the contrast.
-    def ivfPqProd(dir: String, tf: Double, iters: Int) =
-      graft.pipeline.Similarity.ivfPqTopK(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .filter(col("vec_id") % 100 === 0),
+    def ivfPq(tf: Double, iters: Int)(dir: String) =
+      Similarity.ivfPqTopK(embeddings(dir),
+        embeddings(dir).filter(col("vec_id") % 100 === 0),
         topK = 5, nCells = 256, m = 16, k = 256, iters = iters, nProbe = 3,
         trainFraction = tf)
-    def ivfPqProdOnce(dir: String, tf: Double, iters: Int = 1): Unit =
-      ivfPqProd(dir, tf, iters)
-        .write.format("noop").mode("overwrite").save()
-    warm("ivfpq prod")(ivfPqProdOnce(x10Dir, 0.25))
-    def ivfPqProdTimes(tf: Double, reps: Int, iters: Int = 1): Seq[Double] =
-      rep("ivfpq prod", reps)(ivfPqProdOnce(x10Dir, tf, iters))
-    // r18 (#3): the depth contrast where Lloyd dominates. At iters=1 the
-    // md5-fraction filter pass costs roughly what one Lloyd round saves
-    // (r17 measured _sampled 4.90 vs full 4.39 s), so the trainFraction
-    // knob shows nothing there. At production training depth (iters=4;
-    // FAISS's own defaults run 10-25 rounds) codebook training is the
-    // bulk of index-build cost — the regime the knob exists for. The
-    // _deep_sampled fraction is 0.5, the FAISS training floor at THIS
-    // corpus: k=256 codebooks want >= ~39·k ≈ 10k training points
-    // (faiss's own min_points_per_centroid warning), and 0.5 of the 20k
-    // x10 corpus sits exactly there — an r18 probe at 0.1 (2k points)
-    // cost 6 recall points (12.5% vs 18.4% @5), the under-training the
-    // floor exists to prevent. At deployment scale the floor is
-    // trivially cleared (39·k of a billion-vector corpus is fraction
-    // 1e-5), so trainFraction is a SCALE knob, not a small-corpus knob.
-    // The warm passes double as the recall telemetry: recall@5 vs the
-    // brute-force ground truth across the fraction ladder — sampling at
-    // the floor must hold recall within noise of full training (raw set
-    // agreement between variants is the WRONG metric: differently-
-    // trained codebooks legitimately reorder a top-k whose tail cosines
-    // tie near-exactly).
-    def deepTopkSet(tf: Double): Set[(Long, Long)] =
-      ivfPqProd(x10Dir, tf, iters = 4).select(col("qid"), col("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    warm("ivfpq deep recall") {
-      val brute = graft.pipeline.Similarity.bruteForceTopK(
-        spark.read.parquet(s"$x10Dir/embeddings.parquet"),
-        spark.read.parquet(s"$x10Dir/embeddings.parquet")
-          .filter(col("vec_id") % 100 === 0), 5)
-        .select(col("qid"), col("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      def recall(tf: Double): Double =
-        (deepTopkSet(tf) & brute).size.toDouble / math.max(1, brute.size)
-      System.err.println(f"[bench] ivfpq deep recall@5 vs brute force: " +
-        f"full-train ${100 * recall(1.0)}%.1f%%, " +
-        f"sampled(0.5, the 39·k floor) ${100 * recall(0.5)}%.1f%%, " +
-        f"sampled(0.1, under the floor) ${100 * recall(0.1)}%.1f%%")
-    }
-    // r19 (verdict #3): the deep pair at reps=3 — the r18 min-of-2
-    // direction flipped between the committed run and the driver's re-run
-    // (6.832/7.851 vs 7.449/6.573), so min-of-2 cannot establish a timing
-    // direction on this ~7 s row class. The per-row spread now published
-    // alongside is the evidence either way: if the min±spread bands
-    // overlap, the honest claim is "within run variance at this corpus".
-    val ivfPqProdResults = Seq(
-      rec("prod_embed_topk_ivfpq_sampled", ivfPqProdTimes(0.25, 2)),
-      rec("prod_embed_topk_ivfpq", ivfPqProdTimes(1.0, 2)),
-      rec("prod_embed_topk_ivfpq_deep_sampled",
-        ivfPqProdTimes(0.5, 3, iters = 4)),
-      rec("prod_embed_topk_ivfpq_deep", ivfPqProdTimes(1.0, 3, iters = 4)))
-    // Streaming rows: every other row is batch; these measure the DSv2
-    // tail source + stateful defragment + partitioned streaming sink at
-    // 1× and 10× (corpora staged from the same sf/x10 documents; staging
-    // excluded as fixture construction). One warm drain at the warm-up
-    // scale pays the streaming plane's one-time codegen, like the batch
-    // warm-up does.
-    warm("tail drain")(tailDrain(spark, stageTailCorpus(spark, warmDir, "warm")))
-    // mult=30 per the round-11 finding (see stageTailCorpus): the drain
-    // must be data-dominated before the 1×/x10 pair means anything. The
-    // *_lines_per_sec rows carry the throughput number directly (the only
-    // non-seconds rows in the map; the name is the unit).
-    val tail1x = stageTailCorpus(spark, sfDir, "1x", mult = 30)
-    val tail10x = stageTailCorpus(spark, x10Dir, "10x", mult = 30,
-      contentKey = sfDir)
-    val lines1x = spark.read.textFile(tail1x).count()
-    val lines10x = spark.read.textFile(tail10x).count()
-    // FIVE reps like the wide-noise batch rows: r12's published 10× drain
-    // read 39% above an idle rerun (9.671 s vs 5.940 s) — min-of-3 still
-    // let a steal window through on the longest-running row class
-    val drain1xTimes = rep("tail drain", 5)(tailDrain(spark, tail1x))
-    val drain10xTimes = rep("x10 tail drain", 5)(tailDrain(spark, tail10x))
-    val drain1x = drain1xTimes.min
-    val drain10x = drain10xTimes.min
-    // Streaming near-dup pair (r17): the tail drain's 1×/x10 device —
-    // mult=10 suffix-disjoint replicas make the drain data-dominated
-    // (see stageNearDupCorpus; at mult=1 both sides sat on the ~5 s
-    // streaming fixed floor), banding is map-side, bucket state capped.
-    warm("neardup drain")(neardupDrain(spark,
-      stageNearDupCorpus(spark, warmDir, "warm", mult = 10)))
-    val nd1x = stageNearDupCorpus(spark, sfDir, "1x", mult = 10)
-    val nd10x = stageNearDupCorpus(spark, x10Dir, "10x", mult = 10,
-      contentKey = sfDir)
-    val nd1xTimes = rep("neardup drain", 3)(neardupDrain(spark, nd1x))
-    val nd10xTimes = rep("x10 neardup drain", 3)(neardupDrain(spark, nd10x))
-    val streamResults = Seq(
-      rec("streaming_tail_e2e", drain1xTimes),
-      rec("x10_streaming_tail_e2e", drain10xTimes),
-      rec("streaming_neardup_e2e", nd1xTimes),
-      rec("x10_streaming_neardup_e2e", nd10xTimes))
-    // Deep-decode inference pair (r19): the registered llm_inference pair
-    // is FIXED-COST-dominated (8-step decode over a 70-token context is
-    // ~18k int64 mults per doc — far below the job floor at 50k docs, the
-    // r13 dedup_substrings lesson), so the DATA-dominated scale evidence
-    // for the inference plane is this pair: 512 greedy steps through the
-    // KV-cached decode (the llama.cpp architecture — k/v projected once
-    // per position, each step O(d² + n·d)) on the partition-batched
-    // Exec.llmInference path. repartition(32) on BOTH sides: the sf
-    // fixture is one row group, and without it the 1× side decodes on ONE
-    // core while the staged x10 side gets ten — the r14 longdoc lesson
-    // (the first cut of this pair measured 8.2 vs 8.6 s: pure parallelism
-    // skew, not data cost). Greedy decode is prefix-stable (TinyLlmSpec),
-    // so this measures the SAME model the oracle replays, just deeper.
-    def llmDeepOnce(dir: String): Unit = {
+    def ivfPqOnce(tf: Double, iters: Int = 1)(dir: String): Unit =
+      Dev.noop(ivfPq(tf, iters)(dir))
+    def llmDeep(dir: String): Unit = {
       import spark.implicits._
       // coalesce: a NULL text row must not surface as a null Dataset
       // element (the model guards empty, not null-from-concat)
@@ -960,84 +782,224 @@ object Bench {
             graft.ops.TinyLlm.ContentWindow),
           lit("\n\nDescribe.")).as("u")).as[String]
         .repartition(32)
-      graft.ops.Exec.llmInference(users,
+      Dev.noop(graft.ops.Exec.llmInference(users,
           u => graft.ops.TinyLlm.render(
-            graft.ops.TinyLlm.generate(u, steps = 512)._1))
-        .write.format("noop").mode("overwrite").save()
+            graft.ops.TinyLlm.generate(u, steps = 512)._1)).toDF())
     }
-    def llmDeepTimes(dir: String): Seq[Double] =
-      rep("llm deep", 3)(llmDeepOnce(dir))
-    warm("llm deep")(llmDeepOnce(warmDir))
-    val llmDeepResults = Seq(
-      rec("llm_generate_deep", llmDeepTimes(sfDir)),
-      rec("x10_llm_generate_deep", llmDeepTimes(x10Dir)))
-    // throughput rows live in their own section with an explicit unit —
-    // every row in `queries` is seconds, so round-over-round tooling can
-    // no longer mix 1e6-lines/s values into a seconds comparison.
-    // r20 (verdict #3): the NEARDUP pair gets a docs/s basis too — the
-    // driver's post-commit rerun swung the trigger-drain WALL rows up to
-    // 13× under machine load while compute rows stayed in band, so
-    // cross-run comparisons of the streaming pairs should read the
-    // work-normalized rate (each name carries its unit)
-    val ndDocs1x = spark.read.parquet(s"$nd1x/documents.parquet").count()
-    val ndDocs10x = spark.read.parquet(s"$nd10x/documents.parquet").count()
-    val throughput = Seq(
-      "streaming_tail_lines_per_sec" -> lines1x / drain1x,
-      "x10_streaming_tail_lines_per_sec" -> lines10x / drain10x,
-      "streaming_neardup_docs_per_sec" -> ndDocs1x / nd1xTimes.min,
-      "x10_streaming_neardup_docs_per_sec" -> ndDocs10x / nd10xTimes.min)
-    // total stays headline-only (round-over-round comparable); the skew_*,
-    // x10_* and streaming rows ride along in the queries map for the
-    // comparisons
-    val extraResults = extra.map(name => rec(name, timesOfN(name, sfDir)))
-    val allRows = results ++ skewResults ++ x10Results ++ longResults ++
-      substrSkewResults ++ massDupResults ++ semResults ++ d4Results ++
-      d4ReliableResults ++
-      semSkewResults ++ ivfPqProdResults ++ streamResults ++
-      llmDeepResults ++ extraResults
-    val qs = allRows
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    // per-row rep spread (verdict #4): min is the published point estimate
-    // (same estimator as `queries`); med/max bound the band one idle run
-    // actually spans, so a cross-run delta can be judged against it
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    val spread = repTimes.toSeq.map { case (k, ts) =>
-      "\"" + k + "\":{" +
-        f""""min":${ts.min}%.3f,"med":${median(ts)}%.3f,"max":${ts.max}%.3f,"reps":${ts.size}}"""
-    }.mkString("{", ",", "}")
-    val tp = throughput.map { case (k, v) => "\"" + k + f"\":$v%.0f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val sumAll = allRows.map(_._2).sum
-    val json = f"""{"metric":"headline_sum","value":$total%.3f,"unit":"sec","sum_all_rows":$sumAll%.3f,"queries":$qs,"spread":$spread,"throughput":{"unit":"per_sec (suffix carries the basis)","rows":$tp},"sf":"$sfDir"}"""
-    // The driver's tail-capture window is smaller than this full ~6 KB
-    // line — r15/r16/r17 all arrived HEAD-cut mid-JSON (BENCH_r{N}.json
-    // parsed: null). So: print the full line early + persist it to
-    // BENCH_LATEST.json (the canonical full row set), and make the LAST
-    // printed line a compact summary JSON (total, sf, throughput, top-10
-    // slowest rows) well under the ~2 KB window, so the driver's tail
-    // always holds one complete parseable object.
+    def lines(name: String) = Some(Basis(name, spark.read.textFile(_).count()))
+    def docs(name: String) = Some(Basis(name,
+      dir => spark.read.parquet(s"$dir/documents.parquet").count()))
+
+    Seq.fill(2)((headline ++ skewed ++ x10 ++ extra).distinct)
+      .flatten.map(name => Warm(name, () => query(name)(warmDir))) ++
+    headline.map(row(sf, _)) ++
+    // Skewed and x10 queries outside the headline set get a uniform
+    // comparator row, measured BEFORE any staging write: a just-finished
+    // multi-hundred-MB corpus write leaves GC/page-cache pressure that
+    // outlasts min-of-3 (measured: a comparator row 5× slower right after
+    // stageX10 vs identical in isolation). Neither counts toward the
+    // round-over-round total.
+    skewed.filterNot(headline.contains).map(row(sf, _)) ++
+    x10.filterNot(n => headline.contains(n) || skewed.contains(n))
+      .map(row(sf, _)) ++
+    // Degenerate-skew rows: same queries, mass-duplicated corpus.
+    skewed.map(row(skewC, _, "skew_")) ++
+    // Scale-decade rows: same queries, a 10× corpus staged from the sf
+    // documents. Each x10_* row pairs with a 1× row measured this same run
+    // (headline or uniform comparator); the ratio is the near-linearity
+    // evidence. A warm pass AT the x10 scale comes first: r13's
+    // x10_dedup_minhash_lsh published 0.723 s against a 1.051 s idle
+    // rerun — the sf0.01 warm-up tiers the codegen but leaves the first
+    // x10-scale rep with cold page cache and un-scaled JIT profiles.
+    x10.map(name => Warm(s"x10 $name", () => query(name)(x10C.dir))) ++
+    x10.map(row(x10C, _, "x10_")) ++
+    Seq(
+      // EXACTSUBSTR long-doc pair (see stageLongDocs): the same registered
+      // query, 16× the tokens per doc — the explode/agg path dominates the
+      // job floor, so THIS pair carries the near-linearity evidence; the
+      // plain dedup_substrings rows above stay as the regression guard.
+      Warm("longdoc", () => query("dedup_substrings")(long1x.dir)),
+      Warm("longdoc", () => query("dedup_substrings")(long10x.dir)),
+      row(long1x, "dedup_substrings", "longdoc_"),
+      row(long10x, "dedup_substrings", "x10_longdoc_"),
+      // Mass-duplication skew row for EXACTSUBSTR (see stageSubstrSkew):
+      // pairs with longdoc_dedup_substrings above — a hot window key with
+      // ~1,500 copies must stay within the capped-family band, not funnel
+      Warm("substr skew", () => query("dedup_substrings")(substrSkew.dir)),
+      row(substrSkew, "dedup_substrings", "skew_longdoc_"),
+      // Mass-duplication EXACTSUBSTR pair (r16, the done-criterion for the
+      // hot-key salt): see stageMassDup — ONE window key with
+      // ~0.3·|docs|·10,745 copies (~48M at sf0.1). Unsalted, that key
+      // funnels through ONE count-window partition (probed 11.9 s vs 8.2 s
+      // salted at sf0.1, the gap growing with the hot mass — measured as
+      // the contrast row, min-of-2: a deliberately slow contrast row, more
+      // reps buy nothing); with hotKeyThreshold = 100k the heavy-hitter
+      // pre-pass salts it into ~480 sub-partitions and the tail
+      // parallelizes. r21: the salted row gets 5 reps — committed same-code
+      // runs of it read 4.3 vs 8.5 s (r20 record).
+      Warm("massdup", () => substr(100000L)(massDup.dir)),
+      Row("massdup_dedup_substrings", massDup, 2, substr(0L)),
+      Row("massdup_dedup_substrings_salted", massDup, 5, substr(100000L)),
+      // SemDeDup scale pair: the registered query's fixed nCentroids=8
+      // would make the intra-cluster pair join quadratic at 10× BY CONFIG
+      // (cluster population ∝ N at fixed k) — the paper's own scale knob is
+      // cluster count ∝ corpus (Abbas 2023 §3 runs 50k clusters on LAION),
+      // which holds per-cluster population (and so pair volume per row)
+      // constant. The x10 row scales k 8→80 accordingly; the pair ratio is
+      // the linearity evidence UNDER the published scaling rule. (The 1×
+      // row here matches dedup_semantic's registered config exactly.)
+      Warm("semdedup", () => semDedup(8)(warmDir)),
+      Warm("x10 semdedup", () => semDedup(80)(x10C.dir)),
+      Row("dedup_semantic", sf, 3, semDedup(8)),
+      Row("x10_dedup_semantic", x10C, 3, semDedup(80)),
+      // Full D4 pair, same cluster-count scaling rule as the SemDeDup pair
+      // (k ∝ corpus per Abbas 2023 §3; the re-cluster phase scales with it)
+      Warm("d4", () => d4(8)(warmDir)),
+      Warm("x10 d4", () => d4(80)(x10C.dir)),
+      Row("d4_e2e", sf, 3, d4(8)),
+      Row("x10_d4_e2e", x10C, 3, d4(80)),
+      // r18 (#7): the 100 TB fault-tolerance mode, priced — the same
+      // d4_e2e row under spark.graft.staging=reliable (durable checkpoint
+      // instead of executor-local blocks at EVERY compute-once barrier;
+      // results identical by StagingSpec). The gap vs d4_e2e is the
+      // per-barrier durable write+read a deployment pays so the heaviest
+      // staged chain survives executor loss.
+      Warm("d4 reliable", () => d4Reliable(sfDir)),
+      Row("d4_e2e_reliable", sf, 3, d4Reliable),
+      // Degenerate-cluster contrast set (r15, mirroring the capped LSH
+      // pair): 70% of the corpus becomes ONE exact direction — identical
+      // quantized vectors score identical cosines to every centroid and
+      // the (negCos, cent) tie-break sends the whole mass to one cluster.
+      // r17: the DEFAULT path is exact-salted (the within-cluster pair join
+      // splits block-wise past saltBlockSize), so skew_dedup_semantic
+      // measures the default a naive caller gets; _unblocked disables the
+      // salt (the r16 one-task quadratic) as the contrast, and _capped
+      // keeps the recall-trade bound. The default must land near the
+      // capped row, not the unblocked one. Staged from the x10 embeddings
+      // (20k vectors at sf0.1): at 2,000 vectors the hot cluster's
+      // quadratic term is below the job floor (probed 2.19 vs 2.13
+      // uniform). The unblocked row is the deliberately-adversarial
+      // contrast (r16 measured 42.3 s, ~100M cosine evaluations through ONE
+      // task) and gets ONE rep with no separate warm: its code shape is
+      // warmed by the other rows, and more reps of a row whose point is an
+      // order-of-magnitude gap buy nothing.
+      Warm("semskew", () => semDedup(80)(embSkew.dir)),
+      Warm("semskew cap", () => semDedupCapped(embSkew.dir)),
+      Row("skew_dedup_semantic", embSkew, 3, semDedup(80)),
+      Row("skew_dedup_semantic_unblocked", embSkew, 1, semDedupUnblocked),
+      Row("skew_dedup_semantic_capped", embSkew, 3, semDedupCapped),
+      // Production-parameter IVFADC rows (r16): nCells=256, m=16, k=256 on
+      // the x10 embeddings — the parameter class where r15's typedlit
+      // cross-dot map (nCells·m·k plan entries) exploded codegen; the
+      // broadcast cross-dot table makes it a ~8 MB data question. r17:
+      // FAISS-style sampled codebook training (trainFraction) — the Lloyd
+      // rounds run on a deterministic 25% md5-fraction while the full
+      // corpus is still assigned + encoded; _sampled is the production
+      // configuration, the full-train row stays as the contrast.
+      Warm("ivfpq prod", () => ivfPqOnce(0.25)(x10C.dir)),
+      // r18 (#3): the depth contrast where Lloyd dominates. At iters=1 the
+      // md5-fraction filter pass costs roughly what one Lloyd round saves,
+      // so the trainFraction knob shows nothing there. At production
+      // training depth (iters=4) codebook training is the bulk of
+      // index-build cost. The _deep_sampled fraction is 0.5, the FAISS
+      // training floor at THIS corpus: k=256 codebooks want >= ~39·k ≈ 10k
+      // training points, and 0.5 of the 20k x10 corpus sits exactly there
+      // (an r18 probe at 0.1 cost 6 recall points). This warm pass doubles
+      // as the recall telemetry: recall@5 vs the brute-force ground truth
+      // across the fraction ladder (raw set agreement between variants is
+      // the WRONG metric: differently-trained codebooks legitimately
+      // reorder a top-k whose tail cosines tie near-exactly).
+      Warm("ivfpq deep recall", () => {
+        def topk(df: DataFrame): Set[(Long, Long)] =
+          df.select(col("qid"), col("cid"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val x10Dir = x10C.dir
+        val brute = topk(Similarity.bruteForceTopK(embeddings(x10Dir),
+          embeddings(x10Dir).filter(col("vec_id") % 100 === 0), 5))
+        def recall(tf: Double): Double =
+          (topk(ivfPq(tf, iters = 4)(x10Dir)) & brute).size.toDouble /
+            math.max(1, brute.size)
+        System.err.println(f"[bench] ivfpq deep recall@5 vs brute force: " +
+          f"full-train ${100 * recall(1.0)}%.1f%%, " +
+          f"sampled(0.5, the 39·k floor) ${100 * recall(0.5)}%.1f%%, " +
+          f"sampled(0.1, under the floor) ${100 * recall(0.1)}%.1f%%")
+      }),
+      // min-of-2 for the iters=1 pair (completion-and-band probes); r19:
+      // the deep pair at reps=3 — the r18 min-of-2 direction flipped
+      // between runs, so min-of-2 cannot establish a timing direction on
+      // this ~7 s row class
+      Row("prod_embed_topk_ivfpq_sampled", x10C, 2, ivfPqOnce(0.25)),
+      Row("prod_embed_topk_ivfpq", x10C, 2, ivfPqOnce(1.0)),
+      Row("prod_embed_topk_ivfpq_deep_sampled", x10C, 3, ivfPqOnce(0.5, 4)),
+      Row("prod_embed_topk_ivfpq_deep", x10C, 3, ivfPqOnce(1.0, 4)),
+      // Streaming rows: every other row is batch; these measure the DSv2
+      // tail source + stateful defragment + partitioned streaming sink at
+      // 1× and 10×. One warm drain at the warm-up scale pays the streaming
+      // plane's one-time codegen, like the batch warm-up does. FIVE reps
+      // like the wide-noise batch rows: r12's published 10× drain read 39%
+      // above an idle rerun (9.671 s vs 5.940 s). The throughput rows carry
+      // a work-normalized rate (the name is the unit): a post-commit rerun
+      // swung the trigger-drain WALL rows up to 13× under machine load
+      // while compute rows stayed in band (r20).
+      Warm("tail drain", () =>
+        tailDrain(spark, stageTailCorpus(spark, warmDir, "warm"))),
+      Row("streaming_tail_e2e", tail1x, 5, tailDrain(spark, _),
+        basis = lines("streaming_tail_lines_per_sec")),
+      Row("x10_streaming_tail_e2e", tail10x, 5, tailDrain(spark, _),
+        basis = lines("x10_streaming_tail_lines_per_sec")),
+      // Streaming near-dup pair (r17): the tail drain's 1×/x10 device —
+      // mult=10 suffix-disjoint replicas make the drain data-dominated
+      // (see stageNearDupCorpus; at mult=1 both sides sat on the ~5 s
+      // streaming fixed floor), banding is map-side, bucket state capped.
+      Warm("neardup drain", () => neardupDrain(spark,
+        stageNearDupCorpus(spark, warmDir, "warm", mult = 10))),
+      Row("streaming_neardup_e2e", nd1x, 3, neardupDrain(spark, _),
+        basis = docs("streaming_neardup_docs_per_sec")),
+      Row("x10_streaming_neardup_e2e", nd10x, 3, neardupDrain(spark, _),
+        basis = docs("x10_streaming_neardup_docs_per_sec")),
+      // Deep-decode inference pair (r19): the registered llm_inference pair
+      // is FIXED-COST-dominated (8-step decode over a 70-token context is
+      // ~18k int64 mults per doc — far below the job floor at 50k docs), so
+      // the DATA-dominated scale evidence for the inference plane is this
+      // pair: 512 greedy steps through the KV-cached decode on the
+      // partition-batched Exec.llmInference path. repartition(32) on BOTH
+      // sides: the sf fixture is one row group, and without it the 1× side
+      // decodes on ONE core while the staged x10 side gets ten (the first
+      // cut of this pair measured 8.2 vs 8.6 s: pure parallelism skew).
+      // Greedy decode is prefix-stable (TinyLlmSpec), so this measures the
+      // SAME model the oracle replays, just deeper.
+      Warm("llm deep", () => llmDeep(warmDir)),
+      Row("llm_generate_deep", sf, 3, llmDeep),
+      Row("x10_llm_generate_deep", x10C, 3, llmDeep)) ++
+    extra.map(row(sf, _))
+  }
+
+  def main(args: Array[String]): Unit = {
+    // all JSON emitters use the f-interpolator (= String.format in the
+    // DEFAULT locale): pin ROOT so a comma-decimal locale can never emit
+    // unparseable "0,123" numbers (r19 ADVICE)
+    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session(s"local[$cpus]", cpus)
+    // d4_e2e_reliable's durable checkpoints
+    spark.sparkContext.setCheckpointDir(
+      s"${System.getProperty("java.io.tmpdir")}/graft-bench-ckpt")
+    val report = run(spark, steps(spark, sfDir))
+    val json = report.json(sfDir)
+    // A stdout tail-capture window is smaller than the full line — r15/
+    // r16/r17 all arrived HEAD-cut mid-JSON. So: print the full line early
+    // + persist it to BENCH_LATEST.json (the canonical full row set), and
+    // make the LAST printed line the compact summary. With
+    // `run / outputStrategy := StdoutOutput` in build.sbt it prints RAW — no
+    // sbt "[info] " prefix — so a per-line json.loads succeeds.
     println(json)
     System.out.flush()
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LATEST.json"),
       (json + "\n").getBytes("UTF-8"))
-    val top10 = allRows.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    // r19 (verdict #6): "value" stays the headline-subset sum (the stable
-    // round-over-round unit); "sum_all_rows" is the sum over every row in
-    // "rows", so the compact object reads correctly once parsed. With
-    // `run / outputStrategy := StdoutOutput` in build.sbt (verdict #1) this
-    // last line prints RAW — no sbt "[info] " prefix — so the driver's
-    // per-line json.loads finally succeeds.
-    val summary = f"""{"metric":"headline_sum","value":$total%.3f,"unit":"sec","sum_all_rows":$sumAll%.3f,"sf":"$sfDir","rows":${allRows.size},"full":"BENCH_LATEST.json","throughput":$tp,"top10":$top10}"""
     spark.stop()
     println(json); System.out.flush()
-    println(summary)
+    println(report.summary(sfDir))
     System.out.flush()
   }
 }

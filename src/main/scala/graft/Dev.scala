@@ -21,7 +21,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * `time` runs each query through the noop sink (full output
  * materialization, Bench's discipline) and prints per-rep wall time, the
  * min over reps, and the rep's per-segment breakdown. Not a published
- * number: no staged corpora, no warm-up beyond rep 0.
+ * number: no staged corpora, no warm-up beyond rep 0. A failed rep is
+ * reported like a failed Bench row, with its error and no min, and the
+ * command exits non-zero.
  *
  * `plan` executes each query's own frame (so AQE has settled) and writes
  * `<outDir>/<query>.txt`: the formatted final plan, then one
@@ -45,9 +47,11 @@ object Dev {
   final case class Segment(label: String, wallMs: Long, jobs: Int,
                            barrier: Option[QueryExecution])
 
-  /** One run of one query: `jobs` is the listener's total for the run. */
-  final case class Run(df: DataFrame, wallS: Double, jobs: Int,
-                       segments: Seq[Segment])
+  /** One traced rep: `jobs` is the listener's total for the rep. */
+  final case class Trace(wallS: Double, jobs: Int, segments: Seq[Segment])
+
+  /** One traced run of one query, with the frame it built. */
+  final case class Run(df: DataFrame, trace: Trace)
 
   private val BarrierActions = Set("localCheckpoint", "checkpoint")
 
@@ -104,27 +108,48 @@ object Dev {
       .map(_.replaceAll("\\$anonfun\\$|\\$adapted|\\$\\d+|\\$", ""))
       .getOrElse("(unknown)")
 
-  /** Build a frame with `build`, finish it with `act`, and return the run
-    * split into segments. */
-  def run(spark: SparkSession)(build: => DataFrame)(
-      act: DataFrame => Unit): Run = {
+  /** Run `body` under the segment listener and return its value with the
+    * trace. The one tracer: Bench's rows, `time` and `plan` all use it. A
+    * failure propagates once the listener is removed. */
+  def trace[T](spark: SparkSession)(body: => T): (T, Trace) = {
+    // events of earlier, untraced work (a warm pass, a failed rep) must
+    // not reach this listener
+    GraftListenerBus.drain(spark.sparkContext)
     val t0 = System.nanoTime()
     val segs = new Segments(System.currentTimeMillis())
     spark.sparkContext.addSparkListener(segs)
     spark.listenerManager.register(segs)
     try {
-      val df = build
-      act(df)
+      val value = body
       val endMs = System.currentTimeMillis()
       val wallS = (System.nanoTime() - t0) / 1e9
       GraftListenerBus.drain(spark.sparkContext)
       val (jobs, segments) = segs.result(endMs)
-      Run(df, wallS, jobs, segments)
+      (value, Trace(wallS, jobs, segments))
     } finally {
       spark.listenerManager.unregister(segs)
       spark.sparkContext.removeSparkListener(segs)
     }
   }
+
+  /** Build a frame with `build`, finish it with `act`, and return the run
+    * split into segments. */
+  def run(spark: SparkSession)(build: => DataFrame)(
+      act: DataFrame => Unit): Run = {
+    val (df, t) = trace(spark) { val df = build; act(df); df }
+    Run(df, t)
+  }
+
+  /** `n` traced reps of `body`, each passed through `keep`, or the first
+    * rep's failure. The one failure convention: a failed rep ends its row,
+    * and the row publishes no time, because a crash's time-to-exception
+    * would read as a fast valid rep. `keep` runs right after its rep, so a
+    * caller can drop the barrier plans, and the staged data they hold on
+    * to, before the next rep starts. */
+  def measure[T](spark: SparkSession, n: Int)(body: => Unit)(
+      keep: Trace => T): Either[Throwable, Seq[T]] =
+    try Right((0 until n).map(_ => keep(trace(spark)(body)._2)))
+    catch { case e: Throwable => Left(e) }
 
   /** Filter nodes under a round-robin exchange in a run's final plan and
     * its barrier plans, each counted once. A filter over `repartition(n)`
@@ -149,7 +174,7 @@ object Dev {
         case _ => 0
       }) + children.map(walk(_, rr)).sum
     }
-    (r.df.queryExecution +: r.segments.flatMap(_.barrier))
+    (r.df.queryExecution +: r.trace.segments.flatMap(_.barrier))
       .map(qe => walk(qe.executedPlan, underRoundRobin = false)).sum
   }
 
@@ -157,26 +182,37 @@ object Dev {
     * would plan a separate command and leave it non-final. */
   def execute(df: DataFrame): Unit = df.queryExecution.toRdd.foreach(_ => ())
 
-  private def noop(df: DataFrame): Unit =
+  /** Materialize the full output through the noop sink, discarding it
+    * executor-side: no driver collect, no files. */
+  def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Every query's traces, printed as they are read. A query whose rep
+    * fails prints its error instead of a min, and `time` throws once
+    * every query has run. */
   def time(spark: SparkSession, sfDir: String, reps: Int,
-           names: Seq[String]): Seq[(String, Seq[Run])] =
-    names.map { name =>
-      val runs = (0 until reps).map { i =>
-        val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(noop)
-        println(f"[dev time] $name rep=$i wall=${r.wallS}%.3f s jobs=${r.jobs}")
+           names: Seq[String]): Seq[(String, Seq[Trace])] = {
+    val (failed, timed) = names.map { name =>
+      val rep = Iterator.from(0)
+      val result = measure(spark, reps)(
+          noop(SparkEntry.queries(name)(spark, sfDir))) { r =>
+        println(f"[dev time] $name rep=${rep.next()} wall=${r.wallS}%.3f s " +
+          s"jobs=${r.jobs}")
         r.segments.zipWithIndex.foreach { case (s, j) =>
           println(f"[dev time]   seg ${j + 1}%2d ${s.wallMs / 1e3}%8.3f s " +
             f"jobs=${s.jobs}%3d  ${s.label}")
         }
         r
       }
-      val ts = runs.map(_.wallS)
-      println(f"[dev time] $name min=${ts.min}%.3f " +
-        s"reps=${ts.map(t => f"$t%.3f").mkString(",")}")
-      name -> runs
-    }
+      println(result.fold(e => s"[dev time] $name failed: $e", runs =>
+        f"[dev time] $name min=${runs.map(_.wallS).min}%.3f " +
+          s"reps=${runs.map(r => f"${r.wallS}%.3f").mkString(",")}"))
+      result.left.map(name -> _).map(name -> _)
+    }.partitionMap(identity)
+    if (failed.nonEmpty) throw new IllegalStateException(
+      s"failed_rows: ${failed.map(_._1).mkString(", ")}", failed.head._2)
+    timed
+  }
 
   def plan(spark: SparkSession, sfDir: String, outDir: String,
            names: Seq[String]): Unit = {
@@ -185,7 +221,7 @@ object Dev {
       qe.explainString(ExplainMode.fromString("formatted"))
     names.foreach { name =>
       val r = run(spark)(SparkEntry.queries(name)(spark, sfDir))(execute)
-      val barriers = r.segments.flatMap(_.barrier)
+      val barriers = r.trace.segments.flatMap(_.barrier)
       val plan = formatted(r.df.queryExecution) +
         barriers.zipWithIndex.map { case (qe, i) =>
           s"== staged segment ${i + 1} ==\n" + formatted(qe)

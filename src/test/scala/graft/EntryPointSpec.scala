@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * The program has four entry points — Bench, Verify, EntrySmoke and Dev —
  * over one session builder (`Session`). A new main or a second builder is
  * how hand-copied pipeline fragments and drifting session settings crept
- * in before; attribution work belongs in `graft.Dev`.
+ * in before; attribution work belongs in `graft.Dev`. Jobs and staged
+ * segments are counted by one listener, Dev's tracer, which Bench's rows
+ * run through too; a second hand-rolled counter would drift from it.
  */
 class EntryPointSpec extends AnyFunSuite {
   /** Every main source file, path relative to the source root -> text. */
@@ -36,5 +38,14 @@ class EntryPointSpec extends AnyFunSuite {
   test("SparkSession.builder appears only in Session.scala") {
     assert(filesMatching("""SparkSession\s*\.\s*builder""") ===
       Seq("graft/Session.scala"))
+  }
+
+  test("one job and segment listener: Dev's tracer is the only " +
+       "SparkListener, and the only QueryExecutionListener besides " +
+       "provenance") {
+    assert(filesMatching("""(extends|with|new)\s+SparkListener\b""") ===
+      Seq("graft/Dev.scala"))
+    assert(filesMatching("""(extends|with|new)\s+QueryExecutionListener\b""") ===
+      Seq("graft/Dev.scala", "graft/streaming/Provenance.scala"))
   }
 }
