@@ -450,35 +450,37 @@ object Bench {
   }
 
   /**
-   * One measured streaming drain: DSv2 TailFileSource over the staged log
-   * files → a routing projection (header/body relationship, the
-   * RouteOnAttribute shape) → stateful DefragmentText keyed per source
-   * file (flatMapGroupsWithState) → relationship-partitioned parquet sink,
-   * drained to completion (processAllAvailable over an on-disk corpus =
-   * the AvailableNow batch-like run; FlowRuntime.runAvailable). Fresh
-   * checkpoint + sink per rep so every rep tails the full corpus from
-   * offset zero. Timed by the bench's one rep loop, so the row value is
-   * wall seconds for the drain, same unit as the batch rows; lines/value
-   * is the implied rows/s.
+   * One measured streaming drain: a MiNiFi flow, TailFile in Multiple-file
+   * mode over the staged log files → DefragmentText (one message per
+   * `<id>` header, flatMapGroupsWithState keyed per tailed file), run by
+   * [[graft.flow.FlowStreaming.run]] into the relationship-partitioned
+   * sink and drained to completion. Fresh checkpoint + sink per rep so
+   * every rep tails the full corpus from offset zero. Timed by the bench's
+   * one rep loop, so the row value is wall seconds for the drain, same
+   * unit as the batch rows; lines/value is the implied rows/s.
    */
   private[graft] def tailDrain(spark: SparkSession, corpus: String): Unit = {
-    import spark.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-bench-tailrun-" +
       java.util.UUID.randomUUID
-    val tailed = spark.readStream
-      .format("graft.streaming.TailFileSource")
-      .option("path", corpus).option("glob", ".*\\.txt").load()
-    val routed = tailed.withColumn("relationship",
-      when(col("line").rlike("^<[0-9]+>"), "header").otherwise("body"))
-    val frags = routed.select(col("path").as("source"),
-      col("lineOffset").as("ord"), col("line").as("content"),
-      lit(-1L).as("offset"), lit("").as("uuid"))
-      .as[graft.streaming.StatefulOps.Fragment]
-    val msgs = graft.streaming.StatefulOps.defragmentText(frags, "<[0-9]+>", 0)
-    val q = graft.streaming.FlowRuntime.runAvailable(
-      graft.streaming.FlowRuntime.relationshipSink(msgs.toDF(), s"$base/out"),
-      s"$base/ckpt")
-    q.stop()
+    val flow = graft.flow.FlowConfig.parse(
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: tail
+         |  id: tail
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    tail-mode: Multiple file
+         |    tail-base-directory: $corpus
+         |    File to Tail: .*\\.txt
+         |- name: defrag
+         |  id: defrag
+         |  class: org.apache.nifi.minifi.processors.DefragmentText
+         |  Properties:
+         |    Pattern: "<[0-9]+>"
+         |Connections:
+         |- {id: c1, source id: tail, source relationship names: [success], destination id: defrag}
+         |""".stripMargin)
+    graft.flow.FlowStreaming.run(spark, flow, s"$base/out", s"$base/ckpt").stop()
   }
 
   /** Replicated corpus for the streaming near-dup drain: `mult` copies
@@ -622,7 +624,7 @@ object Bench {
 
   /** JSON text: maps keep their order, None is null, doubles print with
     * three decimals. */
-  private def js(v: Any): String = v match {
+  private[graft] def js(v: Any): String = v match {
     case None => "null"
     case Some(x) => js(x)
     case d: Double => f"$d%.3f"
@@ -773,18 +775,17 @@ object Bench {
     def ivfPqOnce(tf: Double, iters: Int = 1)(dir: String): Unit =
       Dev.noop(ivfPq(tf, iters)(dir))
     def llmDeep(dir: String): Unit = {
-      import spark.implicits._
-      // coalesce: a NULL text row must not surface as a null Dataset
-      // element (the model guards empty, not null-from-concat)
-      val users = spark.read.parquet(s"$dir/documents.parquet")
-        .select(concat(lit("Input data (or flow file content):\n"),
-          substring(coalesce(col("text"), lit("")), 1,
-            graft.ops.TinyLlm.ContentWindow),
-          lit("\n\nDescribe.")).as("u")).as[String]
+      import graft.core.FlowFrame
+      import graft.ops.TinyLlm
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id"),
+          substring(col("text"), 1, TinyLlm.ContentWindow).as("body"))
         .repartition(32)
-      Dev.noop(graft.ops.Exec.llmInference(users,
-          u => graft.ops.TinyLlm.render(
-            graft.ops.TinyLlm.generate(u, steps = 512)._1)).toDF())
+      Dev.noop(graft.ops.Exec.runLlamaInference(
+        FlowFrame.wrap(docs, "body", Seq("doc_id")),
+        col(FlowFrame.Content), lit("Describe."),
+        generate = (_, user) => (TinyLlm.render(TinyLlm.generate(user, steps = 512)._1),
+          TinyLlm.tokenize(user).length.toLong, 512.0)))
     }
     def lines(name: String) = Some(Basis(name, spark.read.textFile(_).count()))
     def docs(name: String) = Some(Basis(name,
@@ -961,8 +962,8 @@ object Bench {
       // is FIXED-COST-dominated (8-step decode over a 70-token context is
       // ~18k int64 mults per doc — far below the job floor at 50k docs), so
       // the DATA-dominated scale evidence for the inference plane is this
-      // pair: 512 greedy steps through the KV-cached decode on the
-      // partition-batched Exec.llmInference path. repartition(32) on BOTH
+      // pair: 512 greedy steps through the KV-cached decode in
+      // RunLlamaCppInference's Exec.runLlamaInference. repartition(32) on BOTH
       // sides: the sf fixture is one row group, and without it the 1× side
       // decodes on ONE core while the staged x10 side gets ten (the first
       // cut of this pair measured 8.2 vs 8.6 s: pure parallelism skew).

@@ -2476,21 +2476,7 @@ object SparkEntry {
     "dclm_e2e" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val docs = docsPar(s, dir)
-      val words = split(col("text"), " ")
-      val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
-      val baseLines = transform(sequence(lit(0), nLines - 1), i => {
-        val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
-        when(col("doc_id") % 9 === 0 && i % 4 === 0, upper(li))
-          .when(col("doc_id") % 7 === 0 && i === 0, upper(li))
-          .otherwise(li)
-      })
-      val page = concat(array_join(baseLines, "\n"),
-        when(col("doc_id") % 5 === 0, lit("\n12345")).otherwise(lit("")),
-        when(col("doc_id") % 6 === 0,
-          concat(lit("\n"), (col("doc_id") % 90 + 1).cast("string"),
-            lit(" likes"))).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("\nsubscribe")).otherwise(lit("")))
-      val fmap = TextAnalysis.refinedWebLineCorrections(page).toMap
+      val fmap = TextAnalysis.refinedWebLineCorrections(refinedWebPage).toMap
       // stage 1 staged BEFORE its keep filter: a filter over docsPar
       // sinks below the round-robin exchange to the one-partition scan,
       // running the line rules serially there and again after the
@@ -2544,21 +2530,7 @@ object SparkEntry {
     }),
 
     "refinedweb_lines" -> ((s, dir) => {
-      val words = split(col("text"), " ")
-      val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
-      val baseLines = transform(sequence(lit(0), nLines - 1), i => {
-        val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
-        when(col("doc_id") % 9 === 0 && i % 4 === 0, upper(li))
-          .when(col("doc_id") % 7 === 0 && i === 0, upper(li))
-          .otherwise(li)
-      })
-      val page = concat(array_join(baseLines, "\n"),
-        when(col("doc_id") % 5 === 0, lit("\n12345")).otherwise(lit("")),
-        when(col("doc_id") % 6 === 0,
-          concat(lit("\n"), (col("doc_id") % 90 + 1).cast("string"),
-            lit(" likes"))).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("\nsubscribe")).otherwise(lit("")))
-      val fmap = TextAnalysis.refinedWebLineCorrections(page).toMap
+      val fmap = TextAnalysis.refinedWebLineCorrections(refinedWebPage).toMap
       docsPar(s, dir).select(
         col("doc_id"),
         fmap("kept_lines").as("kept_lines"),
@@ -2574,16 +2546,7 @@ object SparkEntry {
     // map-side until the final keeper aggregation — and ONE DuckDB oracle
     // recomputes the whole chain.
     "curate_filters_e2e" -> ((s, dir) => {
-      val words = split(col("text"), " ")
-      val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
-      val baseLines = transform(sequence(lit(0), nLines - 1), i => {
-        val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
-        when(i % 3 === 2, li).otherwise(concat(li, lit(".")))
-      })
-      val page = concat(array_join(baseLines, "\n"),
-        when(col("doc_id") % 13 === 0,
-          lit("\nvar cfg = { a: 1 };")).otherwise(lit("")))
-      val c4 = TextAnalysis.c4Clean(page).toMap
+      val c4 = TextAnalysis.c4Clean(curatePage).toMap
       // docsPar, not tbl: the per-row work here (page derivation + both
       // rule sets) is the heaviest map stage in the suite, and the fixture
       // parquet is one file — without the repartition the whole chain runs
@@ -2624,18 +2587,9 @@ object SparkEntry {
     // corpus pass for every flag/count, one bounded stage agg, one
     // hash-keyed keeper agg — the whole report costs one scan
     "curate_funnel" -> ((s, dir) => {
-      val words = split(col("text"), " ")
-      val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
-      val baseLines = transform(sequence(lit(0), nLines - 1), i => {
-        val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
-        when(i % 3 === 2, li).otherwise(concat(li, lit(".")))
-      })
-      val page = concat(array_join(baseLines, "\n"),
-        when(col("doc_id") % 13 === 0,
-          lit("\nvar cfg = { a: 1 };")).otherwise(lit("")))
-      val c4 = TextAnalysis.c4Clean(page).toMap
+      val c4 = TextAnalysis.c4Clean(curatePage).toMap
       val pre = docsPar(s, dir).select(col("doc_id"),
-          size(words).cast("long").as("raw_n"),
+          size(split(col("text"), " ")).cast("long").as("raw_n"),
           c4("cleaned").as("cleaned"), c4("keep").as("c4_keep"))
         .staged // the gopher rules reference `cleaned` ~20×
       val gopher = TextAnalysis.gopherRules(col("cleaned"), minWords = 20,
@@ -2648,16 +2602,7 @@ object SparkEntry {
     }),
 
     "curate_filters_map" -> ((s, dir) => {
-      val words = split(col("text"), " ")
-      val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
-      val baseLines = transform(sequence(lit(0), nLines - 1), i => {
-        val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
-        when(i % 3 === 2, li).otherwise(concat(li, lit(".")))
-      })
-      val page = concat(array_join(baseLines, "\n"),
-        when(col("doc_id") % 13 === 0,
-          lit("\nvar cfg = { a: 1 };")).otherwise(lit("")))
-      val c4 = TextAnalysis.c4Clean(page).toMap
+      val c4 = TextAnalysis.c4Clean(curatePage).toMap
       val gopher = TextAnalysis.gopherRules(col("cleaned"), minWords = 20,
         minStopHits = 1).toMap
       docsPar(s, dir)
@@ -2858,9 +2803,9 @@ object SparkEntry {
     }),
 
     // §2.1 TailFile batch mode (the first tail pass: per-line FlowFiles
-    // with filename/path attrs; rotation state is the streaming source's
-    // plane, covered by TailFileSpec) — staged file read back through the
-    // real flow dispatch
+    // with filename/path attrs, read by the streaming source's first
+    // micro-batch; rotation state is covered by TailFileSpec) — staged
+    // file read back through the real flow dispatch
     "tail_file" -> ((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_tail")
       out.toFile.deleteOnExit()
@@ -4120,6 +4065,42 @@ object SparkEntry {
       |  AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
       |  AND ellipsis_frac <= 0.3 AND alpha_frac >= 0.8
       |  AND stop_hits >= 1)""".stripMargin
+
+  /** The curation fixture page: 10-word lines, each but every third
+    * ending in '.' (C4's terminal-punctuation rule), plus a JavaScript
+    * line for doc%13 (C4's javascript rule). */
+  private def curatePage: Column = {
+    val words = split(col("text"), " ")
+    val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
+    val baseLines = transform(sequence(lit(0), nLines - 1), i => {
+      val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
+      when(i % 3 === 2, li).otherwise(concat(li, lit(".")))
+    })
+    concat(array_join(baseLines, "\n"),
+      when(col("doc_id") % 13 === 0,
+        lit("\nvar cfg = { a: 1 };")).otherwise(lit("")))
+  }
+
+  /** The RefinedWeb fixture page: 10-word lines, uppercased for doc%9
+    * (every fourth line) and doc%7 (the first line), plus a "12345" line
+    * for doc%5, a "<n> likes" line for doc%6 and a "subscribe" line for
+    * doc%4 — every line-correction rule fires both ways. */
+  private def refinedWebPage: Column = {
+    val words = split(col("text"), " ")
+    val nLines = greatest(ceil(size(words) / lit(10.0)).cast("int"), lit(1))
+    val baseLines = transform(sequence(lit(0), nLines - 1), i => {
+      val li = array_join(slice(words, i * lit(10) + 1, lit(10)), " ")
+      when(col("doc_id") % 9 === 0 && i % 4 === 0, upper(li))
+        .when(col("doc_id") % 7 === 0 && i === 0, upper(li))
+        .otherwise(li)
+    })
+    concat(array_join(baseLines, "\n"),
+      when(col("doc_id") % 5 === 0, lit("\n12345")).otherwise(lit("")),
+      when(col("doc_id") % 6 === 0,
+        concat(lit("\n"), (col("doc_id") % 90 + 1).cast("string"),
+          lit(" likes"))).otherwise(lit("")),
+      when(col("doc_id") % 4 === 0, lit("\nsubscribe")).otherwise(lit("")))
+  }
 
   /** The RedPajama-v2 fixture page: 8-word lines with a '.' terminator
     * ('...' for doc%7 — ellipsis/sentence signals), the first 3 words

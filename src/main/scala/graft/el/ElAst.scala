@@ -38,13 +38,6 @@ object ElAst {
     def isSingleExpr: Boolean = parts.size == 1 && parts.head.isRight
   }
 
-  /** Subjectless functions that may open an expression. */
-  val SubjectlessFns: Set[String] = Set(
-    "literal", "hostname", "ip", "UUID", "now", "random", "nextInt",
-    "allAttributes", "anyAttribute", "allMatchingAttributes",
-    "anyMatchingAttribute", "allDelineatedValues", "anyDelineatedValue",
-    "getStateValue", "thread", "reverseDnsLookup")
-
   def parse(input: String): Template = new Parser(input).parseTemplate()
 
   final class ElParseException(msg: String, val pos: Int)

@@ -45,6 +45,12 @@ case class ProcessorDef(
     * the same processor (org.apache.nifi.processors.standard.X,
     * org.apache.nifi.minifi.processors.X); behavior keys off the suffix. */
   def kind: String = clazz.substring(clazz.lastIndexOf('.') + 1)
+  /** A required property — fails with the processor name and property key
+    * (the reference validates these at onSchedule; a bare Map NoSuchElement
+    * would name neither). */
+  def required(key: String): String = properties.getOrElse(key,
+    throw new IllegalArgumentException(
+      s"processor '$name' ($kind) is missing required property '$key'"))
 }
 
 /**

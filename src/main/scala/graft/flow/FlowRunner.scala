@@ -247,6 +247,64 @@ object Processors {
       current_timestamp().as(FlowFrame.EntryDate),
       lit(null).cast("string").as(FlowFrame.Relationship))
 
+  /**
+   * TailFile (TailFile.cpp:582), one path for both modes: per-line
+   * FlowFiles from streaming/TailFileSource, which `load` opens with
+   * `spark.read` in a batch sweep (one pass: the stream's first
+   * micro-batch) or `spark.readStream` in a streaming flow. Single-file
+   * mode tails exactly that name; Multiple-file mode treats "File to
+   * Tail" as a regex under the base directory (TailFile.h:141-151
+   * tail-mode / tail-base-directory).
+   */
+  private[flow] def tailFile(p: ProcessorDef,
+                             load: (String, Map[String, String]) => DataFrame): DataFrame = {
+    val props = p.properties
+    val (dir, glob) = props.getOrElse("tail-mode", "Single file") match {
+      case "Multiple file" =>
+        (p.required("tail-base-directory"), props.getOrElse("File to Tail", ".*"))
+      case _ =>
+        val f = java.nio.file.Paths.get(p.required("File to Tail"))
+        (Option(f.getParent).fold(".")(_.toString),
+          java.util.regex.Pattern.quote(f.getFileName.toString))
+    }
+    val tailed = load("graft.streaming.TailFileSource", Map(
+      "path" -> dir, "glob" -> glob,
+      "initialStartPosition" ->
+        props.getOrElse("Initial Start Position", "Beginning of File")))
+      .withColumn("filename", element_at(split(col("path"), "/"), -1))
+      .withColumn("tailfile.lineOffset", col("lineOffset").cast("string"))
+      // deterministic FlowFile identity: (path, byte offset) names a
+      // tailed line uniquely and survives batch replay — a random uuid()
+      // would fork a line's identity between a replayed batch and the
+      // provenance recorded downstream (see Lineage's determinism note)
+      .withColumn("tail_uuid",
+        concat(col("path"), lit("@"), col("lineOffset").cast("string")))
+    FlowFrame.wrap(tailed, "line", Seq("filename", "path", "tailfile.lineOffset"),
+      uuidCol = Some("tail_uuid"))
+      .withColumn(FlowFrame.Relationship, lit("success"))
+  }
+
+  /** GenerateFlowFile's properties (GenerateFlowFile.h:106-124), read the
+    * same way by the batch sweep and the streaming rate source. */
+  private[flow] final class Generate(p: ProcessorDef) {
+    private def prop(name: String, default: String): String =
+      p.properties.getOrElse(name, default)
+    val batchSize: Long = prop("Batch Size", "1").toLong
+    val fileSize: Int = Units.parseBytes(prop("File Size", "1 kB")).toInt
+    val customText: String = prop("Custom Text", "")
+    val mode: Sources.GenerateMode = (prop("Data Format", "Binary"),
+      Units.parseBool(prop("Unique FlowFiles", "true")),
+      p.properties.contains("Custom Text")) match {
+      case (_, _, true)        => Sources.CustomText
+      case ("Text", true, _)   => Sources.UniqueText
+      case ("Text", false, _)  => Sources.NotUniqueText
+      case (_, true, _)        => Sources.UniqueBytes
+      case (_, false, _)       => Sources.NotUniqueBytes
+    }
+    /** The FlowFile content over a `file_id` column. */
+    def content: Column = Sources.generatedContent(fileSize, mode, customText)
+  }
+
   def apply(spark: SparkSession, p: ProcessorDef,
             input: Option[DataFrame],
             services: Seq[ServiceDef] = Nil): DataFrame = {
@@ -259,13 +317,7 @@ object Processors {
     val props = p.properties
     def prop(name: String, default: String): String =
       props.getOrElse(name, default)
-    // required property — fail with the processor name and property key
-    // (the reference validates these at onSchedule; a bare Map NoSuchElement
-    // would name neither)
-    def req(name: String): String = props.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"processor '${p.name}' (${p.kind}) is missing required property " +
-          s"'$name'"))
+    def req(name: String): String = p.required(name)
     // delimiter-bearing properties arrive with literal backslash escapes
     // when the config writes the plain-YAML spelling ('\n'); unescape the
     // control spellings uniformly so Demarcator / Byte Sequence /
@@ -425,20 +477,9 @@ object Processors {
             lit("success").as(FlowFrame.Relationship))
 
       case "GenerateFlowFile" =>
-        val mode = (prop("Data Format", "Binary"),
-          Units.parseBool(prop("Unique FlowFiles", "true")),
-          props.contains("Custom Text")) match {
-          case (_, _, true)        => Sources.CustomText
-          case ("Text", true, _)   => Sources.UniqueText
-          case ("Text", false, _)  => Sources.NotUniqueText
-          case (_, true, _)        => Sources.UniqueBytes
-          case (_, false, _)       => Sources.NotUniqueBytes
-        }
-        val g = Sources.generateFlowFilesMode(spark,
-          batchSize = prop("Batch Size", "1").toLong,
-          fileSize = Units.parseBytes(prop("File Size", "1 kB")).toInt,
-          mode = mode, customText = prop("Custom Text", ""))
-        success(FlowFrame.wrap(g, "content", Seq("file_id")))
+        val g = new Generate(p)
+        success(FlowFrame.wrap(Sources.generateFlowFilesMode(spark,
+          g.batchSize, g.fileSize, g.mode, g.customText), "content", Seq("file_id")))
 
       // ------------------------------------------------------- transforms
       case "UpdateAttribute" =>
@@ -1208,15 +1249,7 @@ object Processors {
         }
 
       case "TailFile" =>
-        // batch sweep = the FIRST tail pass: the file's current lines
-        // (per-line FlowFiles, TailFile.cpp:582); the streaming runtime
-        // (streaming/TailFileSource) owns rotation/offset state
-        val path = req("File to Tail")
-        val lines = spark.read.textFile(path).toDF("content")
-          .withColumn("filename",
-            lit(path.substring(path.lastIndexOf('/') + 1)))
-          .withColumn("path", lit(path))
-        success(FlowFrame.wrap(lines, "content", Seq("filename", "path")))
+        tailFile(p, (format, opts) => spark.read.format(format).options(opts).load())
 
       case "FetchFile" =>
         val pathCol = props.get("File to Fetch")

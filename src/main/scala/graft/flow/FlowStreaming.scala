@@ -317,40 +317,10 @@ object FlowStreaming {
       props.getOrElse(name, default)
     p.kind match {
       case "TailFile" =>
-        // Single-file mode tails exactly that name; Multiple-file mode
-        // treats "File to Tail" as a regex under the base directory
-        // (TailFile.h:141-151 tail-mode / tail-base-directory)
-        val (dir, glob) = prop("tail-mode", "Single file") match {
-          case "Multiple file" =>
-            (props("tail-base-directory"), prop("File to Tail", ".*"))
-          case _ =>
-            val f = java.nio.file.Paths.get(props("File to Tail"))
-            (f.getParent.toString,
-              java.util.regex.Pattern.quote(f.getFileName.toString))
-        }
-        val tailBase = spark.readStream
-          .format("graft.streaming.TailFileSource")
-          .option("path", dir).option("glob", glob)
-          .option("initialStartPosition",
-            prop("Initial Start Position", "Beginning of File"))
-        val tailLimited = Seq(
-          limits.maxCount.map(n => "maxLinesPerTrigger" -> n.toString),
-          limits.maxBytes.map(n => "maxBytesPerTrigger" -> n.toString))
-          .flatten.foldLeft(tailBase) { case (r, (k, v)) => r.option(k, v) }
-        val tailed = tailLimited.load()
-          .withColumn("filename", element_at(split(col("path"), "/"), -1))
-          .withColumn("tailfile.lineOffset", col("lineOffset").cast("string"))
-          // deterministic FlowFile identity: (path, byte offset) names a
-          // tailed line uniquely and survives batch replay — a random
-          // uuid() would fork a line's identity between a replayed batch
-          // and the provenance recorded downstream (see Lineage's
-          // determinism note)
-          .withColumn("tail_uuid",
-            concat(col("path"), lit("@"), col("lineOffset").cast("string")))
-        FlowFrame.wrap(tailed, "line",
-          Seq("filename", "path", "tailfile.lineOffset"),
-          uuidCol = Some("tail_uuid"))
-          .withColumn(FlowFrame.Relationship, lit("success"))
+        val caps = limits.maxCount.map("maxLinesPerTrigger" -> _.toString) ++
+          limits.maxBytes.map("maxBytesPerTrigger" -> _.toString)
+        Processors.tailFile(p, (format, opts) =>
+          spark.readStream.format(format).options(opts ++ caps).load())
 
       case "ListenSyslog" =>
         // socket listener + protocol-dispatch parse (ListenSyslog.cpp:67,81):
@@ -442,14 +412,12 @@ object FlowStreaming {
         withHeaders.withColumn(FlowFrame.Relationship, lit("success"))
 
       case "GenerateFlowFile" =>
-        val rate = spark.readStream.format("rate")
-          .option("rowsPerSecond", prop("Batch Size", "1")).load()
-        val content = graft.el.ElCompiler.template(
-          prop("Custom Text", "${value}"),
-          { case "value" => col("value").cast("string") })
-        FlowFrame.wrap(
-          rate.withColumn("content", content)
-            .withColumnRenamed("value", "file_id"),
+        // the batch generator's content rule over the rate source's ids
+        val g = new Processors.Generate(p)
+        val ids = spark.readStream.format("rate")
+          .option("rowsPerSecond", g.batchSize).load()
+          .select(col("value").as("file_id"))
+        FlowFrame.wrap(ids.select(col("file_id"), g.content.as("content")),
           "content", Seq("file_id"))
           .withColumn(FlowFrame.Relationship, lit("success"))
 

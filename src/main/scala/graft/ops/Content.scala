@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.util.zip.{DeflaterOutputStream, GZIPInputStream, GZIPOutputStream, InflaterInputStream}
+import java.util.zip.{DeflaterOutputStream, GZIPOutputStream, InflaterInputStream}
 
 import org.apache.commons.compress.compressors.bzip2.{BZip2CompressorInputStream, BZip2CompressorOutputStream}
 import org.apache.commons.compress.compressors.lzma.LZMACompressorInputStream
@@ -34,10 +34,6 @@ object Content {
       val g = new GZIPOutputStream(bos); g.write(b); g.close()
       bos.toByteArray
     })
-
-  val gunzipUdf = udf((b: Array[Byte]) =>
-    if (b == null) null
-    else new GZIPInputStream(new ByteArrayInputStream(b)).readAllBytes())
 
   val deflateUdf = udf((b: Array[Byte]) =>
     if (b == null) null

@@ -310,26 +310,6 @@ object Exec {
       (resp.statusCode(), resp.body())
     } catch { case _: Exception => (-1, "") }
 
-  /**
-   * RunLlamaCppInference (extensions/llamacpp/processors/
-   * RunLlamaCppInference.h:55): prompt a local model with content. The
-   * model is [[TinyLlm]] — a REAL deterministic tiny-transformer forward
-   * pass + greedy decode (r19; formerly a stub) whose output the DuckDB
-   * oracle replays analytically. The partition-batched plumbing (one
-   * model handle per partition, rows streamed through) is the exact shape
-   * a llama.cpp JNI binding plugs into in place of TinyLlm.generate.
-   */
-  def llmInference(prompts: Dataset[String],
-                   model: String => String =
-                     p => TinyLlm.render(TinyLlm.generate(p)._1))
-      : Dataset[String] = {
-    implicit val enc: Encoder[String] = org.apache.spark.sql.Encoders.STRING
-    prompts.mapPartitions { rows =>
-      // a native binding would load the model HERE once per partition
-      rows.map(model)
-    }
-  }
-
   /** The reference's built-in system prompt
     * (RunLlamaCppInference.h SystemPrompt default). */
   val LlamaDefaultSystemPrompt: String =

@@ -76,9 +76,16 @@ object Sources {
    */
   def generateFlowFilesMode(spark: SparkSession, batchSize: Long,
                             fileSize: Int, mode: GenerateMode,
-                            customText: String = "", trigger: Long = 0L): DataFrame = {
+                            customText: String = "", trigger: Long = 0L): DataFrame =
+    spark.range(batchSize).withColumnRenamed("id", "file_id").select(col("file_id"),
+      generatedContent(fileSize, mode, customText, trigger).as("content"))
+
+  /** One generated FlowFile's content as a column over its `file_id`: the
+    * batch sweep feeds it `spark.range`, a streaming flow the rate
+    * source's `value`, so both modes generate the same bytes per id. */
+  def generatedContent(fileSize: Int, mode: GenerateMode,
+                       customText: String = "", trigger: Long = 0L): Column = {
     import graft.el.ElCompiler
-    val base = spark.range(batchSize).withColumnRenamed("id", "file_id")
     def keystream(seed: Column, chars: Int): Column = {
       // md5 chain: block k = md5(seed || k); unrolled at plan time
       val blocks = (0 until (chars + 31) / 32).map(k =>
@@ -87,7 +94,7 @@ object Sources {
     }
     val uniqueSeed = concat(lit(s"gen-$trigger-"), col("file_id"))
     val sharedSeed = lit(s"gen-$trigger")
-    val content: Column = mode match {
+    mode match {
       case EmptyContent   => lit("")
       // null EL results render as empty content, never null
       // (GenerateFlowFileTests.cpp "CustomText evaluates to empty string")
@@ -99,7 +106,6 @@ object Sources {
       case UniqueBytes    => unhex(keystream(uniqueSeed, fileSize * 2))
       case NotUniqueBytes => unhex(keystream(sharedSeed, fileSize * 2))
     }
-    base.select(col("file_id"), content.as("content"))
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Staging.StagingOps
 
@@ -120,7 +120,4 @@ object Clusters {
         coalesce(col("component"), col("id")).as("component"),
         (coalesce(col("component"), col("id")) === col("id")).as("keep"))
   }
-
-  /** Spark needed for nothing here — kept for API symmetry with sources. */
-  private[pipeline] def unused(spark: SparkSession): Unit = ()
 }

@@ -85,12 +85,6 @@ object Multimodal {
   def imageDims(b: Array[Byte]): Option[(Int, Int)] =
     pngDims(b).orElse(jpegDims(b)).orElse(gifDims(b))
 
-  /** Metadata struct carried beside the payload. */
-  val metadataType: StructType = StructType(Seq(
-    StructField("mimeType", StringType),
-    StructField("sizeBytes", LongType),
-    StructField("sourceUri", StringType)))
-
   /** Wrap a table into (id, payload BINARY, meta STRUCT). */
   def wrapBinary(df: DataFrame, idCol: Column, payloadCol: Column,
                  mime: String, sourceCol: Column): DataFrame =

@@ -48,8 +48,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *  - one InputPartition per tailed file → per-file parallelism on a
  *    cluster; readers seek directly (no full-file re-read per batch).
  *
- * Usage: spark.readStream.format("graft.streaming.TailFileSource")
- *          .option("path", dir).option("glob", ".*\\.log").load()
+ * Read by `spark.readStream` (micro-batches) or `spark.read` (one batch:
+ * the first micro-batch). In the engine its one caller is the flow
+ * runtime's TailFile processor (flow.Processors.tailFile), for both modes.
  * Options: glob (file-name regex, Multiple-file-mode FileName),
  *   delimiter (single char, default "\n" — TailFile.cpp Delimiter),
  *   rollingPattern (glob with ${filename}, default "${filename}.*"),
@@ -222,12 +223,25 @@ private class TailTable(opts: TailOptions) extends Table with SupportsRead {
   override def name(): String = s"tail:${opts.dir}"
   override def schema(): StructType = TailFileSource.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new Scan {
       override def readSchema(): StructType = TailFileSource.schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new TailMicroBatchStream(opts)
+      // a batch read is the stream's first micro-batch, planned once:
+      // initialOffset -> latestOffset, same partitions, same reader
+      override def toBatch: Batch = new Batch {
+        private lazy val stream = new TailMicroBatchStream(opts)
+        private lazy val partitions = {
+          val start = stream.initialOffset()
+          stream.planInputPartitions(start,
+            stream.latestOffset(start, ReadLimit.allAvailable()))
+        }
+        override def planInputPartitions(): Array[InputPartition] = partitions
+        override def createReaderFactory(): PartitionReaderFactory =
+          stream.createReaderFactory()
+      }
     }
 }
 

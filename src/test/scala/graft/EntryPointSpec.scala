@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * in before; attribution work belongs in `graft.Dev`. Jobs and staged
  * segments are counted by one listener, Dev's tracer, which Bench's rows
  * run through too; a second hand-rolled counter would drift from it.
+ * TailFile has one reader for batch flows, streaming flows and Bench.
  */
 class EntryPointSpec extends AnyFunSuite {
   /** Every main source file, path relative to the source root -> text. */
@@ -47,5 +48,14 @@ class EntryPointSpec extends AnyFunSuite {
       Seq("graft/Dev.scala"))
     assert(filesMatching("""(extends|with|new)\s+QueryExecutionListener\b""") ===
       Seq("graft/Dev.scala", "graft/streaming/Provenance.scala"))
+  }
+
+  test("one TailFile reader: only Processors.tailFile opens " +
+       "TailFileSource, and flow/ reads no text files") {
+    val opens = sources.flatMap { case (f, text) =>
+      "graft.streaming.TailFileSource".r.findAllIn(text).map(_ => f) }
+    assert(opens === Seq("graft/flow/FlowRunner.scala"))
+    assert(sources.filter(_._1.startsWith("graft/flow/"))
+      .filter(_._2.contains("textFile(")).map(_._1) === Nil)
   }
 }

@@ -1660,6 +1660,95 @@ class FlowSpec extends SparkSpec {
       .map(_.getString(0)).sorted.toSeq === Seq("one", "three", "two"))
   }
 
+  /** One TailFile flow run as a batch sweep and as a streaming drain: each
+    * mode's (content, filename, tailfile.lineOffset, uuid) rows, sorted. */
+  private def tailBothModes(yml: String): (Seq[Seq[String]], Seq[Seq[String]]) = {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      df.select(col("content").cast("string"),
+        element_at(col("attributes"), "filename"),
+        element_at(col("attributes"), "tailfile.lineOffset"), col("uuid"))
+        .collect().map(r => Seq.tabulate(4)(r.getString)).toSeq
+        .sortBy(_.mkString("|"))
+    val flow = FlowConfig.parse(yml)
+    val out = tmpDir("tail-modes-sink")
+    FlowStreaming.run(spark, flow, out, tmpDir("tail-modes-ckpt")).stop()
+    (rows(FlowRunner.run(spark, flow).output("tail")),
+      rows(spark.read.parquet(out)))
+  }
+
+  test("TailFile in Multiple-file mode: the batch sweep and the streaming " +
+       "drain deliver the same FlowFiles") {
+    val dir = tmpDir("tail-multi")
+    Files.write(Paths.get(dir, "a.log"), "a1\na2\n".getBytes)
+    Files.write(Paths.get(dir, "b.log"), "b1\n".getBytes)
+    Files.write(Paths.get(dir, "skip.txt"), "not tailed\n".getBytes)
+    val (batch, stream) = tailBothModes(
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: tail
+         |  id: t
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    tail-mode: Multiple file
+         |    tail-base-directory: $dir
+         |    File to Tail: .*\\.log
+         |""".stripMargin)
+    assert(batch === Seq(
+      Seq("a1", "a.log", "0", s"$dir/a.log@0"),
+      Seq("a2", "a.log", "3", s"$dir/a.log@3"),
+      Seq("b1", "b.log", "0", s"$dir/b.log@0")))
+    assert(stream === batch)
+  }
+
+  test("TailFile holds back an unterminated last line in the batch sweep, " +
+       "as the streaming drain does") {
+    val dir = tmpDir("tail-partial")
+    Files.write(Paths.get(dir, "app.log"),
+      "done one\ndone two\nhalf writ".getBytes)
+    val (batch, stream) = tailBothModes(
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: tail
+         |  id: t
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $dir/app.log
+         |""".stripMargin)
+    assert(batch.map(_.head) === Seq("done one", "done two"))
+    assert(stream === batch)
+  }
+
+  test("streaming GenerateFlowFile generates the batch sweep's content " +
+       "per file id") {
+    val flow = FlowConfig.parse(
+      """MiNiFi Config Version: 3
+        |Processors:
+        |- name: gen
+        |  id: g
+        |  class: org.apache.nifi.minifi.processors.GenerateFlowFile
+        |  Properties:
+        |    Batch Size: 3
+        |    Data Format: Text
+        |    File Size: 8 B
+        |    Unique FlowFiles: false
+        |""".stripMargin)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select(element_at(col("attributes"), "file_id").cast("long"),
+        col("content").cast("string"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    val batch = rows(FlowRunner.run(spark, flow).output("gen"))
+    assert(batch.map(_._1) === Seq(0L, 1L, 2L))
+    assert(batch.forall(_._2.length == 8))
+    val q = FlowStreaming.assemble(spark, flow).writeStream
+      .format("memory").queryName("generated_stream").start()
+    try {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (spark.table("generated_stream").count() < batch.size &&
+             System.nanoTime() < deadline) Thread.sleep(100)
+    } finally q.stop()
+    assert(rows(spark.table("generated_stream")).take(batch.size) === batch)
+  }
+
   test("streaming flow from config: TailFile -> ExtractText -> " +
        "RouteOnAttribute -> relationship sink, offsets survive restart") {
     val dir = tmpDir("flow-stream")
