@@ -564,8 +564,8 @@ object Bench {
   final case class Measured(row: Row, reps: Seq[Dev.Trace],
                             throughput: Option[(String, Double)]) {
     def times: Seq[Double] = reps.map(_.wallS)
-    /** The rep that set the row's min; its jobs and segments are the
-      * row's record. */
+    /** The rep that set the row's min; its jobs, compiles and segments
+      * are the row's record. */
     def best: Dev.Trace = reps.minBy(_.wallS)
   }
 
@@ -596,8 +596,8 @@ object Bench {
 
     /** The full record. `spread` keeps min (the published point estimate)
       * with the med/max band one run actually spans, so a cross-run delta
-      * can be judged against a measured band; `trace` holds the jobs and
-      * segments of the rep that set each row's min. */
+      * can be judged against a measured band; `trace` holds the jobs,
+      * Janino compiles and segments of the rep that set each row's min. */
     def json(sf: String): String = js(head ++ ListMap(
       "queries" -> secs(rows),
       "spread" -> ListMap.from(rows.map(m => m.row.name -> ListMap("min" -> m.times.min,
@@ -605,7 +605,7 @@ object Bench {
       "throughput" -> ListMap("unit" -> "per_sec (suffix carries the basis)",
         "rows" -> throughput),
       "trace" -> ListMap.from(rows.map(m => m.row.name -> ListMap("jobs" -> m.best.jobs,
-        "segments" -> m.best.segments.map(s => ListMap(
+        "compiles" -> m.best.compiles, "segments" -> m.best.segments.map(s => ListMap(
           "label" -> s.label, "wall_ms" -> s.wallMs, "jobs" -> s.jobs))))),
       "failed_rows" -> failedRows, "sf" -> sf))
 

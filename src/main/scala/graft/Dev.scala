@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
@@ -19,11 +20,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
  *   runMain graft.Dev plan <sfDir> <outDir> <query...>
  *
  * `time` runs each query through the noop sink (full output
- * materialization, Bench's discipline) and prints per-rep wall time, the
- * min over reps, and the rep's per-segment breakdown. Not a published
- * number: no staged corpora, no warm-up beyond rep 0. A failed rep is
- * reported like a failed Bench row, with its error and no min, and the
- * command exits non-zero.
+ * materialization, Bench's discipline) and prints per-rep wall time, jobs
+ * and Janino compiles, the min over reps, and the rep's per-segment
+ * breakdown. Not a published number: no staged corpora, no warm-up beyond
+ * rep 0. A failed rep is reported like a failed Bench row, with its error
+ * and no min, and the command exits non-zero.
  *
  * `plan` executes each query's own frame (so AQE has settled) and writes
  * `<outDir>/<query>.txt`: the formatted final plan, then one
@@ -47,8 +48,15 @@ object Dev {
   final case class Segment(label: String, wallMs: Long, jobs: Int,
                            barrier: Option[QueryExecution])
 
-  /** One traced rep: `jobs` is the listener's total for the rep. */
-  final case class Trace(wallS: Double, jobs: Int, segments: Seq[Segment])
+  /** One traced rep: `jobs` is the listener's total for the rep and
+    * `compiles` the number of classes Janino compiled during it (codegen
+    * cache misses, JVM-wide), a count machine noise does not move. A plan
+    * that generates the same source as an earlier run compiles nothing. */
+  final case class Trace(wallS: Double, jobs: Int, compiles: Long,
+                         segments: Seq[Segment])
+
+  /** Classes compiled by Spark's code generator in this JVM so far. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** One traced run of one query, with the frame it built. */
   final case class Run(df: DataFrame, trace: Trace)
@@ -116,6 +124,7 @@ object Dev {
     // not reach this listener
     GraftListenerBus.drain(spark.sparkContext)
     val t0 = System.nanoTime()
+    val c0 = compiles()
     val segs = new Segments(System.currentTimeMillis())
     spark.sparkContext.addSparkListener(segs)
     spark.listenerManager.register(segs)
@@ -123,9 +132,10 @@ object Dev {
       val value = body
       val endMs = System.currentTimeMillis()
       val wallS = (System.nanoTime() - t0) / 1e9
+      val compiled = compiles() - c0
       GraftListenerBus.drain(spark.sparkContext)
       val (jobs, segments) = segs.result(endMs)
-      (value, Trace(wallS, jobs, segments))
+      (value, Trace(wallS, jobs, compiled, segments))
     } finally {
       spark.listenerManager.unregister(segs)
       spark.sparkContext.removeSparkListener(segs)
@@ -197,7 +207,7 @@ object Dev {
       val result = measure(spark, reps)(
           noop(SparkEntry.queries(name)(spark, sfDir))) { r =>
         println(f"[dev time] $name rep=${rep.next()} wall=${r.wallS}%.3f s " +
-          s"jobs=${r.jobs}")
+          s"jobs=${r.jobs} compiles=${r.compiles}")
         r.segments.zipWithIndex.foreach { case (s, j) =>
           println(f"[dev time]   seg ${j + 1}%2d ${s.wallMs / 1e3}%8.3f s " +
             f"jobs=${s.jobs}%3d  ${s.label}")

@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim}
+import org.apache.spark.sql.catalyst.expressions.CurrentTimestamp
 import org.apache.spark.sql.functions._
+import graft.functions.{FlowUuid, PerExecution}
 
 /**
  * The FlowFile data model re-expressed as a DataFrame schema.
@@ -28,6 +30,21 @@ object FlowFrame {
   val Content = "content"
   val EntryDate = "entryDate"
   val Relationship = "relationship"
+
+  /**
+   * The time of the current execution — one flow sweep or one micro-batch,
+   * like `current_timestamp()` — for `entryDate` and every age or clock
+   * check in flow code. Flow code uses this and [[newUuid]], never
+   * `current_timestamp()` or `uuid()`: those write the run's time and the
+   * uuid seed into the generated Java source, so every sweep and every
+   * micro-batch compiles new classes for the same plan
+   * ([[graft.functions.PerExecution]]).
+   */
+  def entryTime: Column = GraftColumnShim.column(PerExecution(CurrentTimestamp()))
+
+  /** A random FlowFile uuid, fresh per execution like `uuid()`
+    * ([[graft.functions.FlowUuid]]). */
+  def newUuid: Column = GraftColumnShim.column(FlowUuid())
 
   /** Core attributes, per SpecialFlowAttribute.h:22-33. */
   object CoreAttrs {
@@ -61,14 +78,14 @@ object FlowFrame {
     def c0(c: String): Column = col(s"`$c`")
     val attrPairs: Seq[Column] =
       attrCols.flatMap(c => Seq(lit(c), c0(c).cast("string")))
-    val id = uuidCol.map(c => c0(c).cast("string")).getOrElse(expr("uuid()"))
+    val id = uuidCol.map(c => c0(c).cast("string")).getOrElse(newUuid)
     df.select(
       id.as(Uuid),
       map(attrPairs: _*).as(Attributes),
       c0(contentCol).as(Content), // native type — BINARY must not be coerced
                                    // (byte-accurate ops like HashContent hash
                                    // the raw claim, HashContent.cpp:57)
-      current_timestamp().as(EntryDate),
+      entryTime.as(EntryDate),
       // typed null: a bare lit(null) is VOID/NullType, which poisons any
       // operator that carries this schema through a row encoder (writing a
       // non-null relationship into a NullType column throws at sink time)

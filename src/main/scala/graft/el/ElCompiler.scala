@@ -420,12 +420,12 @@ object ElCompiler {
       case "literal"  => a(0)
       case "hostname" => lit(java.net.InetAddress.getLocalHost.getHostName)
       case "ip"       => lit(java.net.InetAddress.getLocalHost.getHostAddress)
-      case "UUID"     => expr("uuid()")
+      case "UUID"     => FlowFrame.newUuid
       // epoch MILLIS, the EL date value convention (${now():toNumber()}
       // is milliseconds; format() takes a millis subject) — a raw
       // TIMESTAMP would cast to epoch SECONDS and format() would read it
       // as millis (caught by the Now Date battery: format('%Y') -> 1970)
-      case "now"      => unix_millis(current_timestamp())
+      case "now"      => unix_millis(FlowFrame.entryTime)
       case "random"   => (rand() * lit(Long.MaxValue)).cast("long")
       case "nextInt"  => monotonically_increasing_id()
       // reverseDnsLookup(ip[, timeoutMs]) (Expression.cpp:191-207): resolver

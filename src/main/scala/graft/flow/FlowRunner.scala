@@ -135,7 +135,7 @@ object FlowRunner {
         // queue TTL at the receiving end (Connection.cpp:153-158)
         val alive0 = c.expirationMs match {
           case Some(ms) => selected.filter(
-            unix_millis(current_timestamp()) -
+            unix_millis(FlowFrame.entryTime) -
               unix_millis(col(FlowFrame.EntryDate)) <= ms)
           case None => selected
         }
@@ -225,7 +225,7 @@ object Processors {
         .as(FlowFrame.Attributes),
       pick(col(FlowFrame.Content).cast("string"), col(fragCol))
         .as(FlowFrame.Content),
-      pick(col(FlowFrame.EntryDate), current_timestamp())
+      pick(col(FlowFrame.EntryDate), FlowFrame.entryTime)
         .as(FlowFrame.EntryDate),
       relationship.as(FlowFrame.Relationship))
   }
@@ -244,7 +244,7 @@ object Processors {
       lit("").as(FlowFrame.Uuid),
       map().cast("map<string,string>").as(FlowFrame.Attributes),
       lit("").as(FlowFrame.Content),
-      current_timestamp().as(FlowFrame.EntryDate),
+      FlowFrame.entryTime.as(FlowFrame.EntryDate),
       lit(null).cast("string").as(FlowFrame.Relationship))
 
   /**
@@ -390,10 +390,10 @@ object Processors {
         // prunes it — a pure metadata pass even over huge files
         // min/max size + age filters (ListFile.h:64-83) as metadata
         // predicates on the pruned scan — still no content read
-        // current_timestamp() is fixed per EXECUTION, not per plan build —
+        // FlowFrame.entryTime is fixed per EXECUTION, not per plan build —
         // a lazily-collected or re-evaluated listing ages files against
         // the clock of the run, like the reference's listing-time check
-        val ageMs = unix_millis(current_timestamp()) -
+        val ageMs = unix_millis(FlowFrame.entryTime) -
           unix_millis(col("modificationTime"))
         val listing = spark.read.format("binaryFile")
           .option("recursiveFileLookup",
@@ -473,7 +473,7 @@ object Processors {
               lit(s"maxvalue.$maxColName"), lit(newMax))
               .as(FlowFrame.Attributes),
             col("content").as(FlowFrame.Content),
-            current_timestamp().as(FlowFrame.EntryDate),
+            FlowFrame.entryTime.as(FlowFrame.EntryDate),
             lit("success").as(FlowFrame.Relationship))
 
       case "GenerateFlowFile" =>
@@ -755,7 +755,7 @@ object Processors {
           col("docKey").as(FlowFrame.Uuid),
           col(FlowFrame.Attributes),
           col("merged").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           col(FlowFrame.Relationship))
 
       case "RetryFlowFile" =>
@@ -943,7 +943,7 @@ object Processors {
                     when(identified, col("__joinParents"))))
                   .as(FlowFrame.Attributes),
                 col("merged").as(FlowFrame.Content),
-                current_timestamp().as(FlowFrame.EntryDate),
+                FlowFrame.entryTime.as(FlowFrame.EntryDate),
                 when(col(FlowFrame.Relationship) === "merged", "merged")
                   .otherwise("failure").as(FlowFrame.Relationship))
           case _ => // "Bin-Packing Algorithm"
@@ -969,14 +969,14 @@ object Processors {
               demarcator = demarcator,
               header = headerTxt, footer = footerTxt)
             merged.select(
-              expr("uuid()").as(FlowFrame.Uuid),
+              FlowFrame.newUuid.as(FlowFrame.Uuid),
               map(lit("merge.count"), col("mergeCount").cast("string"),
                 lit("merge.correlation"), col("correlation").cast("string"),
                 lit(Lineage.EventAttr), lit(Lineage.Join),
                 lit(Lineage.ParentsAttr), col("memberIds"))
                 .as(FlowFrame.Attributes),
               col("merged").as(FlowFrame.Content),
-              current_timestamp().as(FlowFrame.EntryDate),
+              FlowFrame.entryTime.as(FlowFrame.EntryDate),
               when(col(FlowFrame.Relationship) === "merged", "merged")
                 .otherwise("failure").as(FlowFrame.Relationship))
         }
@@ -1210,7 +1210,7 @@ object Processors {
             lit(FlowFrame.FragmentAttrs.Count),
             col("fragmentCount").cast("string")).as(FlowFrame.Attributes),
           col("content").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           lit("success").as(FlowFrame.Relationship))
         input match {
           case None =>
@@ -1303,7 +1303,7 @@ object Processors {
           map_filter(map(
             lit("splunk.status.code"), col("__http._1").cast("string"),
             lit("splunk.responded.at"),
-              unix_millis(current_timestamp()).cast("string"),
+              unix_millis(FlowFrame.entryTime).cast("string"),
             lit("splunk.response.code"), respCode,
             lit("splunk.acknowledgement.id"), ackId),
             (_, v) => v.isNotNull))
@@ -1361,7 +1361,7 @@ object Processors {
         val ackedFalse = statuses.filterNot(_._2).keys.toSeq
         val respondedAt = FlowFrame.attr("splunk.responded.at").cast("long")
         val timedOut = respondedAt.isNull ||
-          unix_millis(current_timestamp()) > respondedAt + maxAgeMs
+          unix_millis(FlowFrame.entryTime) > respondedAt + maxAgeMs
         in.withColumn(FlowFrame.Relationship,
           when(idCol.isNull || inSet(dups), "failure")
             .when(inSet(ackedTrue), "acknowledged")
@@ -1462,11 +1462,11 @@ object Processors {
           lit(url), col("body"))
         body.withColumn("__http", call)
           .select(
-            expr("uuid()").as(FlowFrame.Uuid),
+            FlowFrame.newUuid.as(FlowFrame.Uuid),
             map(lit("loki.status.code"), col("__http._1").cast("string"))
               .as(FlowFrame.Attributes),
             col("body").as(FlowFrame.Content),
-            current_timestamp().as(FlowFrame.EntryDate),
+            FlowFrame.entryTime.as(FlowFrame.EntryDate),
             when(col("__http._1").between(200, 299), "success")
               .otherwise("failure").as(FlowFrame.Relationship))
 
@@ -1533,7 +1533,7 @@ object Processors {
               .otherwise(map().cast("map<string,string>")))
             .as(FlowFrame.Attributes),
           coalesce(col("__elem"), col("__orig")).as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           when(col("__elem").isNull, "failure")
             .otherwise("split").as(FlowFrame.Relationship))
 
@@ -1559,11 +1559,11 @@ object Processors {
           in.withColumn("__ord", ord),
           src, col("__ord"), content.cast("string"), req("Pattern"), "\n")
         merged.select(
-          expr("uuid()").as(FlowFrame.Uuid),
+          FlowFrame.newUuid.as(FlowFrame.Uuid),
           map(lit("defragment.source"), col("source").cast("string"))
             .as(FlowFrame.Attributes),
           col("message").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           lit("success").as(FlowFrame.Relationship))
 
       case "PutTCP" =>

@@ -232,7 +232,7 @@ object FlowStreaming {
         // parents are the member fragment uuids — same event shape as the
         // batch MergeContent defragment path
         Some(msgs.toDF().select(
-          expr("uuid()").as(FlowFrame.Uuid),
+          FlowFrame.newUuid.as(FlowFrame.Uuid),
           map(lit("defragment.source"), col("source"),
             lit("defragment.fragment.count"),
             col("fragmentCount").cast("string"),
@@ -240,7 +240,7 @@ object FlowStreaming {
             lit(Lineage.ParentsAttr), col("parents"))
             .as(FlowFrame.Attributes),
           col("message").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           col("relationship")))
 
       case "DetectDuplicate" =>
@@ -264,7 +264,7 @@ object FlowStreaming {
             lit("detectduplicate.seen"), col("seen").cast("string"))
             .as(FlowFrame.Attributes),
           col("content").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           col("relationship")))
 
       case "MergeContent"
@@ -290,14 +290,14 @@ object FlowStreaming {
         // JOIN lineage: the merged bin's parents are its member uuids —
         // the same event shape the batch bin-pack path stamps
         Some(bins.toDF().select(
-          expr("uuid()").as(FlowFrame.Uuid),
+          FlowFrame.newUuid.as(FlowFrame.Uuid),
           map(lit("merge.count"), col("count").cast("string"),
             lit("merge.correlation"), col("correlation"),
             lit(Lineage.EventAttr), lit(Lineage.Join),
             lit(Lineage.ParentsAttr), col("parents"))
             .as(FlowFrame.Attributes),
           col("merged").as(FlowFrame.Content),
-          current_timestamp().as(FlowFrame.EntryDate),
+          FlowFrame.entryTime.as(FlowFrame.EntryDate),
           col("relationship")))
 
       case _ => None
@@ -399,7 +399,7 @@ object FlowStreaming {
             FlowFrame.wrap(listened.withColumn("net.seq",
               col("seq").cast("string")), "message", Seq("sender", "net.seq"))
           else listened.select(
-            expr("uuid()").as(FlowFrame.Uuid),
+            FlowFrame.newUuid.as(FlowFrame.Uuid),
             map_concat(
               map(lit("sender"), col("sender").cast("string"),
                 lit("net.seq"), col("seq").cast("string")),
@@ -408,7 +408,7 @@ object FlowStreaming {
                   array().cast("array<string>"))))
               .as(FlowFrame.Attributes),
             col("message").as(FlowFrame.Content),
-            current_timestamp().as(FlowFrame.EntryDate))
+            FlowFrame.entryTime.as(FlowFrame.EntryDate))
         withHeaders.withColumn(FlowFrame.Relationship, lit("success"))
 
       case "GenerateFlowFile" =>

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.FlowFrame
 
 /**
  * Batch-side source semantics — SURVEY §2.1. The byte-moving plane of the
@@ -29,7 +30,7 @@ object Sources {
                       recursive: Boolean = false,
                       minSize: Long = 0L, maxSize: Long = Long.MaxValue,
                       minAgeMs: Long = 0L, maxAgeMs: Long = Long.MaxValue,
-                      asOf: Column = current_timestamp()): DataFrame = {
+                      asOf: Column = FlowFrame.entryTime): DataFrame = {
     val base = spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", recursive.toString)

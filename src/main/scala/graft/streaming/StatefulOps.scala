@@ -38,9 +38,15 @@ object StatefulOps {
     * byte offset the NEXT contiguous fragment must carry (-1 when the
     * buffer's first fragment carried no offset), the processing time
     * the buffer was opened (for the mid-stream age check), and the member
-    * uuids accumulated for JOIN provenance. */
+    * uuids accumulated for JOIN provenance, joined by [[ParentSep]]. A
+    * string, not a list: a collection field's state deserializer takes a
+    * new lambda-variable id on every batch, so Spark would compile the
+    * state projection again for each one. */
   case class Buffer(content: String, fragments: Int, nextOffset: Long,
-                    openedAtMs: Long, parents: List[String] = Nil)
+                    openedAtMs: Long, parents: String = "")
+  /** Separator of [[Buffer.parents]]: NUL appears in no uuid, and a
+    * `path@offset` uuid may hold commas. */
+  val ParentSep = '\u0000'
 
   /**
    * Streaming DefragmentText with the reference's fragment semantics
@@ -87,16 +93,16 @@ object StatefulOps {
           def flush(buf: Buffer, rel: String): Option[Message] =
             if (buf.fragments == 0) None
             else Some(Message(source, buf.content, buf.fragments, rel,
-              buf.parents.distinct.sorted.mkString(",")))
+              buf.parents.split(ParentSep).distinct.sorted.mkString(",")))
           if (state.hasTimedOut) {
             val out = state.getOption.flatMap(flush(_, ageFlushRel))
             state.remove()
             out.iterator
           } else {
             val nowMs = state.getCurrentProcessingTimeMs()
-            val empty = Buffer("", 0, -1L, nowMs, Nil)
-            def withParent(ps: List[String], u: String): List[String] =
-              if (u.isEmpty) ps else ps :+ u
+            val empty = Buffer("", 0, -1L, nowMs, "")
+            def withParent(ps: String, u: String): String =
+              if (u.isEmpty) ps else if (ps.isEmpty) u else s"$ps$ParentSep$u"
             var buf = state.getOption.getOrElse(empty)
             val out = List.newBuilder[Message]
             // mid-stream age flush: the reference ages the buffer even
@@ -126,8 +132,7 @@ object StatefulOps {
                     flush(joined, "success").foreach(out += _)
                     val tail = f.content.substring(splitPos)
                     buf = if (tail.isEmpty) empty
-                          else Buffer(tail, 1, endOffset, nowMs,
-                            withParent(Nil, f.uuid))
+                          else Buffer(tail, 1, endOffset, nowMs, f.uuid)
                   case None =>
                     // keep the first fragment's offset basis: a buffer
                     // opened without one never regains it (the merged

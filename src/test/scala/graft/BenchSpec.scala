@@ -83,11 +83,23 @@ class BenchSpec extends SparkSpec {
     assert(json.get("spread").get("staged").get("reps").asInt === 2)
     val trace = json.get("trace").get("staged")
     assert(trace.get("jobs").asInt === m.best.jobs)
+    assert(trace.get("compiles").asLong === m.best.compiles)
     val segs = trace.get("segments").elements.asScala.toSeq
     assert(segs.map(_.get("jobs").asInt).sum === m.best.jobs)
     assert(segs.map(_.get("label").asText).last === "(final)")
     assert(segs.map(_.get("wall_ms").asLong) === m.best.segments.map(_.wallMs))
     assert(json.get("failed_rows").size === 0)
+  }
+
+  test("the tracer counts a rep's Janino compiles: a new literal in the " +
+       "generated source compiles, the same source again compiles nothing") {
+    def frame(k: Long) = spark.range(0, 10, 1, 2).toDF("id")
+      .select((col("id") * k + 987654321L).as("v"))
+    val k = System.nanoTime()
+    val (_, fresh) = Dev.trace(spark)(Dev.noop(frame(k)))
+    val (_, again) = Dev.trace(spark)(Dev.noop(frame(k)))
+    assert(fresh.compiles > 0)
+    assert(again.compiles === 0)
   }
 
   test("a row with a failed rep, corpus or basis publishes no number and " +

@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * segments are counted by one listener, Dev's tracer, which Bench's rows
  * run through too; a second hand-rolled counter would drift from it.
  * TailFile has one reader for batch flows, streaming flows and Bench.
+ * Per-execution values (the run's time, uuid seeds) reach generated code
+ * only through FlowFrame's helpers, so a repeated plan compiles nothing.
  */
 class EntryPointSpec extends AnyFunSuite {
   /** Every main source file, path relative to the source root -> text. */
@@ -57,5 +59,16 @@ class EntryPointSpec extends AnyFunSuite {
     assert(opens === Seq("graft/flow/FlowRunner.scala"))
     assert(sources.filter(_._1.startsWith("graft/flow/"))
       .filter(_._2.contains("textFile(")).map(_._1) === Nil)
+  }
+
+  test("current_timestamp() and uuid() appear in code only in FlowFrame, " +
+       "behind FlowFrame.entryTime and FlowFrame.newUuid") {
+    val call = """(?<![\w.])(current_timestamp|uuid)\(\)""".r
+    val calls = sources.flatMap { case (f, text) =>
+      text.linesIterator.map(_.replaceAll("//.*", "").trim)
+        .filterNot(l => l.startsWith("*") || l.startsWith("/*"))
+        .filter(l => call.findFirstIn(l).isDefined).map(_ => f)
+    }.distinct
+    assert(calls.filterNot(_ == "graft/core/FlowFrame.scala") === Nil)
   }
 }

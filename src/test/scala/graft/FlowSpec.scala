@@ -888,6 +888,75 @@ class FlowSpec extends SparkSpec {
       ("b.log", "b1\nb2", "merged")))
   }
 
+  test("a second sweep of one flow compiles no classes: entry time, EL " +
+       "now() and uuids reach generated code as references, not literals") {
+    val in = tmpDir("graft-codegen-in")
+    val out = tmpDir("graft-codegen-out")
+    Files.write(Paths.get(in, "a.log"), "a1\na2\na3".getBytes("UTF-8"))
+    Files.write(Paths.get(in, "b.log"), "b1\nb2".getBytes("UTF-8"))
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Processors:
+         |- name: get
+         |  id: g
+         |  class: org.apache.nifi.minifi.processors.GetFile
+         |  Properties:
+         |    Input Directory: $in
+         |    Keep Source File: 'true'
+         |- name: tag
+         |  id: t
+         |  class: org.apache.nifi.minifi.processors.UpdateAttribute
+         |  Properties:
+         |    kind: $${filename:substringAfterLast('.')}
+         |    seen.at: $${now():toNumber()}
+         |    tag.id: $${UUID()}
+         |- name: split
+         |  id: s
+         |  class: org.apache.nifi.minifi.processors.SplitText
+         |  Properties:
+         |    Line Split Count: '1'
+         |- name: merge
+         |  id: m
+         |  class: org.apache.nifi.minifi.processors.MergeContent
+         |  Properties:
+         |    Merge Strategy: Defragment
+         |    Demarcator: "\\n"
+         |- name: put
+         |  id: p
+         |  class: org.apache.nifi.minifi.processors.PutFile
+         |  auto-terminated relationships list: [success, failure]
+         |  Properties:
+         |    Directory: $out
+         |    Conflict Resolution Strategy: replace
+         |Connections:
+         |- {id: c1, source id: g, source relationship names: [success], destination id: t}
+         |- {id: c2, source id: t, source relationship names: [success], destination id: s}
+         |- {id: c3, source id: s, source relationship names: [splits], destination id: m}
+         |- {id: c4, source id: m, source relationship names: [merged], destination id: p}
+         |""".stripMargin
+    def sweep(): (Long, Seq[(String, String, String, String, Long)]) = {
+      val c0 = Dev.compiles()
+      val result = FlowRunner.run(spark, FlowConfig.parse(yml))
+      val rows = result.output("put").select(col("relationship"),
+          col("content"), element_at(col("attributes"), "tag.id"),
+          col("uuid"), unix_millis(col("entryDate")))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))).sortBy(_._2).toSeq
+      result.release()
+      (Dev.compiles() - c0, rows)
+    }
+    val (_, first) = sweep()
+    val (compiled, second) = sweep()
+    assert(compiled === 0)
+    assert(second.map(r => (r._1, r._2)) === Seq(
+      ("success", "a1\na2\na3"), ("success", "b1\nb2")))
+    assert(first.map(r => (r._1, r._2)) === second.map(r => (r._1, r._2)))
+    // fresh values per sweep: new uuids and a later entry time
+    assert(first.flatMap(r => Seq(r._3, r._4))
+      .intersect(second.flatMap(r => Seq(r._3, r._4))).isEmpty)
+    assert(second.map(_._5).min >= first.map(_._5).max)
+  }
+
   test("SplitText failure and original rows are the parent FlowFile " +
        "untouched: uuid, attributes, content and entryDate") {
     import scala.jdk.CollectionConverters._

@@ -502,4 +502,66 @@ class FunctionsSpec extends SparkSpec {
     assert(refKn.exceptAll(kerKn).count() === 0 &&
       kerKn.exceptAll(refKn).count() === 0, "kn scorer")
   }
+
+  test("per-execution expressions: FlowUuid matches Spark's uuid() for a " +
+       "seed and PerExecution its child, interpreted and codegen'd alike") {
+    import org.apache.spark.sql.GraftColumnShim.column
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Uuid}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    import graft.functions.{FlowUuid, PerExecution}
+    val ts = java.sql.Timestamp.valueOf("2026-01-02 03:04:05.678")
+    def rows(): Seq[org.apache.spark.sql.Row] = spark.range(0, 6, 1, 2).select(
+        column(FlowUuid(Some(42L))).as("mine"),
+        column(Uuid(Some(42L))).as("spark"),
+        column(PerExecution(Literal(ts))).as("ts"),
+        column(PerExecution(Literal(7))).as("seven"),
+        column(PerExecution(Literal(null, StringType))).as("nothing"),
+        column(PerExecution(Literal(null, IntegerType))).as("noint"))
+      .collect().toSeq
+    def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+      val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val generated = rows()
+    val interpreted = withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(rows())
+    assert(generated === interpreted)
+    generated.foreach { row =>
+      assert(row.getString(0) === row.getString(1))
+      assert(row.getTimestamp(2) === ts)
+      assert(row.getInt(3) === 7)
+      assert(row.isNullAt(4) && row.isNullAt(5))
+    }
+    assert(generated.map(_.getString(0)).distinct.size === 6)
+  }
+
+  test("a fresh frame over FlowFrame.entryTime and newUuid generates the " +
+       "same code as the last one, with new values; current_timestamp() " +
+       "and uuid() compile again") {
+    import graft.core.FlowFrame
+    def run(c: () => Seq[org.apache.spark.sql.Column]): (Long, Array[(String, Long)]) = {
+      val c0 = Dev.compiles()
+      val rows = spark.range(0, 4, 1, 2).select(c(): _*)
+        .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime))
+      (Dev.compiles() - c0, rows)
+    }
+    val flow = () => Seq(FlowFrame.newUuid, FlowFrame.entryTime)
+    run(flow)
+    Thread.sleep(5)
+    val (_, first) = run(flow)
+    Thread.sleep(5)
+    val (compiled, second) = run(flow)
+    assert(compiled === 0)
+    assert(first.map(_._1).intersect(second.map(_._1)).isEmpty)
+    assert(second.map(_._2).distinct.length === 1)
+    assert(second.head._2 > first.head._2)
+    val raw = () => Seq(expr("uuid()"), current_timestamp())
+    run(raw)
+    Thread.sleep(5)
+    assert(run(raw)._1 > 0)
+  }
 }

@@ -962,4 +962,62 @@ class StreamingSpec extends SparkSpec {
       Seq((7L, 0, "a b c"), (7L, 1, "d e f")))
     assert(segs.forall(s => s.shard >= 0 && s.shard < 4))
   }
+
+  test("a TailFile -> DefragmentText stream compiles no classes per batch " +
+       "once two batches have run; uuids still differ between batches and " +
+       "entryDate is the batch timestamp") {
+    val dir = tmp("codegen_in"); val ckpt = tmp("codegen_ckpt")
+    val out = tmp("codegen_out")
+    val log = dir.resolve("app.log")
+    Files.writeString(log, "<1> head\n  body 1\n")
+    val yml =
+      s"""MiNiFi Config Version: 3
+         |Flow Controller: {name: codegen tail}
+         |Processors:
+         |- name: tail
+         |  id: tail
+         |  class: org.apache.nifi.minifi.processors.TailFile
+         |  Properties:
+         |    File to Tail: $log
+         |- name: defrag
+         |  id: defrag
+         |  class: org.apache.nifi.minifi.processors.DefragmentText
+         |  Properties:
+         |    Pattern: "^<"
+         |    Pattern Location: Start of Message
+         |Connections:
+         |- {id: c1, source id: tail, source relationship names: [success], destination id: defrag}
+         |""".stripMargin
+    val routed = graft.flow.FlowStreaming.assemble(spark,
+      graft.flow.FlowConfig.parse(yml))
+    val q = graft.streaming.FlowRuntime.relationshipSink(routed, out.toString)
+      .option("checkpointLocation", ckpt.toString).start()
+    def batch(b: Int): Unit = {
+      if (b > 1) Files.writeString(log, s"<$b> head\n  body $b\n",
+        java.nio.file.StandardOpenOption.APPEND)
+      q.processAllAvailable()
+    }
+    val compiled = try {
+      batch(1); batch(2)
+      val c0 = Dev.compiles()
+      batch(3); batch(4)
+      Dev.compiles() - c0
+    } finally q.stop()
+    assert(compiled === 0)
+
+    // batch b flushes message b-1, so the messages come from the batches
+    // with ids 1 to 3, each stamped with its own batch's timestamp
+    val rows = spark.read.parquet(out.toString)
+      .select(col("uuid"), unix_millis(col("entryDate")), col("content"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+    assert(rows.map(_._3).sorted.toSeq ===
+      (1 to 3).map(b => s"<$b> head\n  body $b\n"))
+    assert(rows.map(_._1).distinct.length === 3)
+    val batchMs = (0 to 3).map { b =>
+      val meta = Files.readAllLines(ckpt.resolve(s"offsets/$b")).get(1)
+      "\"batchTimestampMs\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toLong
+    }
+    assert(rows.map(_._2).toSet === batchMs.drop(1).toSet)
+    assert(!routed.schema("entryDate").nullable)
+  }
 }

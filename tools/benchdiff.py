@@ -7,13 +7,15 @@ Usage:
 Reports, in this order:
 - rows and throughput rows that were added or dropped, and every row
   listed under the new record's `failed_rows`;
-- every row whose `jobs` count went up. Job counts do not depend on
-  machine noise, so any increase is flagged exactly. A record written
-  before rows carried a `trace` has no job counts to compare;
+- every row whose `jobs` or `compiles` count went up. Neither count
+  depends on machine noise, so any increase is flagged exactly. A record
+  written before rows carried a `trace` has no counts to compare, and one
+  written before traces carried `compiles` has no compile counts;
 - for each row in both records, where the new min falls against the old
   row's `spread` min-max band: `in`, `below` or `above`.
 
-Exit status is 1 when a row was dropped, failed or ran more jobs, else 0.
+Exit status is 1 when a row was dropped, failed, ran more jobs or compiled
+more classes, else 0.
 A wall time outside the band is reported, not failed: one run's band
 does not bound the next run's noise.
 """
@@ -29,8 +31,9 @@ def load(path):
     return record
 
 
-def jobs(record):
-    return {name: t["jobs"] for name, t in record.get("trace", {}).items()}
+def trace_counts(record, key):
+    return {name: t[key] for name, t in record.get("trace", {}).items()
+            if key in t}
 
 
 def diff(old, new):
@@ -57,15 +60,18 @@ def diff(old, new):
         lines.append(f"failed   {n}: {err}")
     bad |= bool(dropped or tp_dropped or failed)
 
-    oj, nj = jobs(old), jobs(new)
-    if not oj:
-        lines.append("jobs: the old record has no trace, nothing to compare")
-    else:
-        more = [(n, oj[n], nj[n]) for n in nq if n in oj and n in nj
-                and nj[n] > oj[n]]
+    for key, verb in (("jobs", "ran more jobs"),
+                      ("compiles", "compiled more classes")):
+        oc, nc = trace_counts(old, key), trace_counts(new, key)
+        if not oc:
+            lines.append(f"{key}: the old record has no {key} counts, "
+                         "nothing to compare")
+            continue
+        more = [(n, oc[n], nc[n]) for n in nq if n in oc and n in nc
+                and nc[n] > oc[n]]
         for n, a, b in more:
-            lines.append(f"jobs+    {n}: {a} -> {b}")
-        lines.append(f"jobs: {len(more)} rows ran more jobs")
+            lines.append(f"{key + '+':<8} {n}: {a} -> {b}")
+        lines.append(f"{key}: {len(more)} rows {verb}")
         bad |= bool(more)
 
     counts = {"in": 0, "below": 0, "above": 0}
